@@ -17,15 +17,11 @@ Axes (full-size recorded runs + methodology live in BENCH/BASELINE.md):
                (driver-collected rows must be zero).
 5. rounds    — 24-round crawl with/without tiered compaction: per-round
                time flatness + read-path file counts.
-6. cuckoo    — driver peak-RSS delta building the cuckoo URL-seen gate in
-               the driver vs executor-resident regime at |seen| and
-               10x|seen|.
 
 Knobs: SPARK_SMOKE_PAGES (steady frontier size, default 250000),
-SPARK_SMOKE_SEEN (cuckoo base size, default 400000), SPARK_SMOKE_HOT_URLS
-(hot-host frontier size, default 8000000 — the two-level rank's advantage
-grows with per-host frontier size), SPARK_SMOKE_AXES (comma list to run a
-subset, default all).
+SPARK_SMOKE_HOT_URLS (hot-host frontier size, default 8000000 — the
+two-level rank's advantage grows with per-host frontier size),
+SPARK_SMOKE_AXES (comma list to run a subset, default all).
 
 Run: python BENCH/scale_smoke.py
 """
@@ -130,10 +126,9 @@ print(json.dumps({"n_urls": N, "two_level_sec": round(new_sec, 2),
 
 def main() -> None:
     pages = int(os.environ.get("SPARK_SMOKE_PAGES", "250000"))
-    seen = int(os.environ.get("SPARK_SMOKE_SEEN", "400000"))
     axes = set(
         os.environ.get(
-            "SPARK_SMOKE_AXES", "steady,fetch,hot_host,many_hosts,rounds,cuckoo"
+            "SPARK_SMOKE_AXES", "steady,fetch,hot_host,many_hosts,rounds"
         ).split(",")
     )
     t_start = time.time()
@@ -168,14 +163,6 @@ def main() -> None:
                 raise RuntimeError(f"round_invariance failed: {r.stderr[-2000:]}")
             rounds[f"compact_every={k}"] = _last_json(r.stdout)
         out["rounds"] = rounds
-    if "cuckoo" in axes:
-        r = subprocess.run(
-            [sys.executable, os.path.join(BENCH_DIR, "cuckoo_resident.py"), str(seen)],
-            capture_output=True, text=True, cwd=REPO, timeout=3600,
-        )
-        if r.returncode != 0:
-            raise RuntimeError(f"cuckoo failed: {r.stderr[-2000:]}")
-        out["cuckoo"] = _last_json(r.stdout)
 
     out["total_sec"] = round(time.time() - t_start, 1)
     print(json.dumps(out))

@@ -106,8 +106,8 @@ def recrawl_schedule(
 def due_frontier(schedule: DataFrame, frontier_like: DataFrame) -> DataFrame:
     """Due URLs joined back onto their last-known frontier metadata —
     the refetch candidate set. Callers feed this through the same
-    politeness scheduler as fresh discoveries; the cuckoo gate's
-    delete_urls (operators/cuckoo.py) un-sees exactly this set so the
-    anti-join readmits it."""
+    politeness scheduler as fresh discoveries; the engine commits a
+    seen_tombstones delta for exactly this set, which drops its past seen
+    rows so the exact anti-join readmits it."""
     due = schedule.filter(F.col("due")).select("url")
     return frontier_like.join(due, "url", "left_semi")

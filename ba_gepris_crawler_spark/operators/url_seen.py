@@ -257,13 +257,10 @@ def new_urls(
     url_seen: DataFrame,
     bloom: BloomFilterModel | None = None,
     url_col: str = "url",
-    splitter=None,
 ) -> DataFrame:
     """J1, THE core crawl operator: frontier minus seen. Exact semantics
-    always; an admission gate (when provided) pre-gates the exact join —
-    either `bloom` or an explicit `splitter(frontier)` returning a frame
-    flagged with `_maybe_seen` (cuckoo: operators/cuckoo.flag_by_cuckoo)
-    or, legacy, a (definitely_new, maybe_seen) tuple.
+    always; the bloom gate (when provided) only pre-gates the exact join,
+    so it can never change which URLs are admitted.
 
     `url_col` names the URL column in BOTH frames — the seen side is no
     longer hard-coded to "url" (a non-default url_col either crashed or
@@ -273,19 +270,13 @@ def new_urls(
     # a dropDuplicates here would full-shuffle the largest table in the
     # system (10^9+ rows) every round for identical join results
     seen_keys = url_seen.select(F.col(url_col))
-    if splitter is None and bloom is not None:
-        splitter = lambda f: flag_by_bloom(f, bloom, url_col)  # noqa: E731
-    if splitter is None:
+    if bloom is None:
         return frontier.join(seen_keys, url_col, "left_anti")
-    res = splitter(frontier)
-    if isinstance(res, tuple):  # legacy two-frame splitters
-        definitely_new, maybe_seen = res
-        return definitely_new.unionByName(maybe_seen.join(seen_keys, url_col, "left_anti"))
     # flagged frame, ONE pass: the anti-join's residual condition applies
     # the exact backstop only to _maybe_seen rows — flagged-false rows
     # match nothing and pass straight through, without the two-branch
     # union re-running the frontier lineage + probe per branch
-    f = res.alias("_f")
+    f = flag_by_bloom(frontier, bloom, url_col).alias("_f")
     s = seen_keys.alias("_s")
     cond = (F.col(f"_f.{url_col}") == F.col(f"_s.{url_col}")) & F.col("_f._maybe_seen")
     return f.join(s, cond, "left_anti").drop("_maybe_seen")

@@ -108,7 +108,6 @@ _CANONICAL_ORDER = [
     "mm_interleave_stats",
     "text_inverted_index",
     "crawl_trap_filter",
-    "crawl_cuckoo_gate",
     "crawl_catalog_null_guard",
     "crawl_redirect_resolve",
     "crawl_sitemap_parse",
@@ -124,8 +123,8 @@ _CANONICAL_ORDER = [
 ]
 
 # Round-5 rotation: the 23 names rowed only in round 3 (the round-4 head
-# displaced them past the 50-row cap) plus the brand-new round-5 queries
-# (cuckoo gate, catalog null guard). Every other registry query has a
+# displaced them past the 50-row cap) plus the brand-new round-5 query
+# (catalog null guard). Every other registry query has a
 # green round-4 row, so after this rotation every query has a driver row
 # at most two rounds old.
 _HEAD_FIRST = [
@@ -135,7 +134,6 @@ _HEAD_FIRST = [
     "crawl_circuit_breaker",
     "dq_staleness",
     "crawl_refetch_lifecycle",
-    "crawl_cuckoo_gate",
     "crawl_catalog_null_guard",
     "crawl_redirect_resolve",
     "crawl_sitemap_parse",

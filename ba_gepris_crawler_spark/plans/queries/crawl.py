@@ -1,4 +1,4 @@
-"""Crawl-family driver queries: frontier, extraction quirks, politeness, robots, traps, cuckoo gate.
+"""Crawl-family driver queries: frontier, extraction quirks, politeness, robots, traps.
 
 Split out of plans/driver_queries.py (round 5); query bodies unchanged.
 """
@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from ba_gepris_crawler_spark.operators.canonicalize import canonical_url
 from ba_gepris_crawler_spark.plans.queries._base import (
-    _h60_duck,
     _q,
     _span,
     _t,
@@ -925,55 +924,6 @@ def crawl_trap_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.select(
         "doc_id", "url_len", "path_depth", "n_params", "seg_repeat", "is_trap"
     ).orderBy("doc_id")
-
-
-@_q(
-    "crawl_cuckoo_gate",
-    f"""
-    WITH urls AS (
-      SELECT doc_id,
-             'https://h' || CAST(doc_id % 7 AS VARCHAR) || '.example.org/doc/'
-               || CAST(doc_id AS VARCHAR) AS url
-      FROM documents),
-    sl AS (
-      SELECT doc_id, url,
-             ({_h60_duck('url')} % 65535) + 1 AS fp,
-             ({_h60_duck('url')} // 65536) % 4096 AS i1
-      FROM urls),
-    sl2 AS (
-      SELECT doc_id, url, fp, i1,
-             xor(i1, {_h60_duck('CAST(fp AS VARCHAR)')} % 4096) AS i2
-      FROM sl),
-    seen AS (SELECT * FROM sl2 WHERE doc_id % 3 = 0),
-    mem AS (
-      SELECT DISTINCT f.url FROM sl2 f JOIN seen s
-        ON s.fp = f.fp AND (s.i1 = f.i1 OR s.i1 = f.i2))
-    SELECT f.url, f.fp, f.i1, f.i2,
-           (f.url IN (SELECT url FROM mem)) AS member,
-           CASE WHEN f.url IN (SELECT url FROM mem) THEN 'skip' ELSE 'fetch' END AS action
-    FROM sl2 f ORDER BY f.url
-    """,
-)
-def crawl_cuckoo_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cuckoo URL-seen gate with DuckDB-replayable membership (VERDICT r4
-    missing #5): operators/cuckoo.portable_cuckoo_gate — the CuckooShard
-    partial-key structure (nonzero 16-bit fp, i2 = i1 XOR H(fp), Fan et al.
-    CoNEXT'14) over the portable md5-conv hash family, so the oracle
-    replays every placement AND every fingerprint false positive exactly.
-    Fixture mirrors crawl_frontier_anti_join: doc urls, every third one
-    already seen."""
-    from ba_gepris_crawler_spark.operators.cuckoo import portable_cuckoo_gate
-
-    urls = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.concat(
-            F.lit("https://h"), (F.col("doc_id") % 7).cast("string"),
-            F.lit(".example.org/doc/"), F.col("doc_id").cast("string"),
-        ).alias("url"),
-    )
-    seen = urls.filter(F.col("doc_id") % 3 == 0).select("url")
-    gated = portable_cuckoo_gate(urls.select("url"), seen, m=4096)
-    return gated.select("url", "fp", "i1", "i2", "member", "action").orderBy("url")
 
 
 @_q(

@@ -51,24 +51,6 @@ class CrawlSettings:
     bloom_fpp: float = 0.01
     bloom_expected_items: int = 1 << 17  # sizes m once; incremental OR after
     use_bloom: bool = True
-    # URL-seen admission gate: "bloom" (default; OR-merged bitmap, persisted
-    # across restarts) or "cuckoo" (operators/cuckoo.py: per-shard tables,
-    # supports DELETION for refetch flows; rebuilt on resume — cuckoo
-    # tables don't OR-merge, so persistence would be per shard). Gate
-    # choice never changes results: both are admission-only, the exact
-    # anti-join backstop decides membership.
-    seen_filter: str = "bloom"
-    # cuckoo regime: "auto" (estimated table bytes pick driver-dict vs
-    # executor-resident shard table), "driver", or "distributed". The
-    # regimes build bit-identical shards; "distributed" never collects
-    # the hashed seen set (operators/cuckoo.py:CuckooShardTable).
-    cuckoo_mode: str = "auto"
-    # shard count for the cuckoo gate. None = auto-size (operators/cuckoo.
-    # auto_shards): doubles from 16 until one shard's table is <= 32 MiB,
-    # so a 10^10-URL seen set gets ~2^10 shards of ~20 MB instead of 16
-    # shards whose ~1 GB binary rows would approach Arrow's 2 GB cell cap
-    # in the cogroup probe.
-    cuckoo_shards: int | None = None
     extract: bool = True
     # every K committed rounds, merge url_seen delta dirs into one
     # hash-clustered snapshot (SnapshotStore.compact) so the seen union and
@@ -125,8 +107,6 @@ class CrawlEngine:
         self.s = settings or CrawlSettings()
         self._bloom = None  # incremental bloom state (rebuilt on resume)
         self._bloom_round: int = -10
-        self._cuckoo = None  # incremental cuckoo shards (seen_filter="cuckoo")
-        self._cuckoo_upto: int = -10  # highest round whose delta is inserted
         # Optional per-host budgets RELATION (host, budget int[, rate
         # double]) — the web-scale form of robots Crawl-delay politeness
         # (operators/politeness.crawl_delay_budgets over fetched bodies).
@@ -233,9 +213,9 @@ class CrawlEngine:
             # staged refetch set (enqueue_recrawl): rows join the frontier,
             # and their PAST seen rows drop for this round (the persisted
             # tombstone delta below replays the same exclusion for later
-            # rounds + resume). The bloom/cuckoo gate may still flag them
-            # maybe-seen — harmless, the exact anti-join against this
-            # effective seen set is what admits them.
+            # rounds + resume). The bloom gate may still flag them
+            # maybe-seen (bloom bits are never cleared) — harmless, the
+            # exact anti-join against this effective seen set admits them.
             frontier_prev = FR.merge_frontier(frontier_prev, recrawl)
             seen = seen.join(recrawl.select("url"), "url", "left_anti")
         seen = seen.cache()
@@ -245,74 +225,7 @@ class CrawlEngine:
         n_seen = 0 if prev_counters is None else prev_counters.get("seen_total", 0)
 
         bloom = None
-        splitter = None
-        cuckoo = None
-        if s.seen_filter == "cuckoo" and s.use_bloom and n_seen > 0:
-            from ba_gepris_crawler_spark.operators import cuckoo as CK
-
-            if self._cuckoo is None and s.cuckoo_mode != "driver":
-                # resume path (table regime): load the persisted shard table
-                # instead of rebuilding from the full seen union — the
-                # cuckoo analog of load_bloom (at 10^10 URLs the rebuild is
-                # a full-scan job per resume). Accept a snapshot one round
-                # behind; the incremental branch below inserts the gap delta.
-                # mode="driver" skips the load by contract: on-disk state
-                # must not override an explicit regime choice. A snapshot
-                # that fails to read (torn legacy write) falls through to
-                # the rebuild below — the gate is admission-only.
-                for upto in (rnd - 1, rnd - 2):
-                    if upto < 0:
-                        break
-                    got = self.store.load_cuckoo(upto)
-                    if got is not None:
-                        path, meta = got
-                        try:
-                            rows = self.spark.read.parquet(path)
-                            ct = CK.CuckooShardTable(
-                                df=rows, n_shards=meta["n_shards"],
-                                per_shard=meta["per_shard"], version=meta["version"],
-                            )
-                            ct._swap(rows)  # pin executor-resident, cut lineage
-                        except Exception:
-                            break  # corrupt snapshot -> full rebuild
-                        ct.version = meta["version"]
-                        self._cuckoo, self._cuckoo_upto = ct, upto
-                        break
-            if (
-                self._cuckoo is not None
-                and self._cuckoo_upto in (rnd - 1, rnd - 2)
-                # cuckoo shards cannot grow in place (fingerprints don't
-                # rehash to a larger m) — once the seen set approaches
-                # capacity, rebuild 4x instead of failing the insert.
-                # Gate on BOTH the unique-URL ratio (counts the delta about
-                # to be inserted) and actual slot occupancy (.load — counts
-                # duplicate fingerprints kept for delete safety)
-                and max(n_seen / self._cuckoo.capacity, self._cuckoo.load) <= 0.8
-            ):
-                if self._cuckoo_upto == rnd - 2:
-                    # incremental: insert only last round's delta (at the
-                    # round after bootstrap the delta is ALREADY in —
-                    # re-inserting would store duplicate fingerprints)
-                    self._cuckoo = CK.insert_urls(
-                        self._cuckoo, self.store.read_state("url_seen", rnd - 1)
-                    )
-                cuckoo = self._cuckoo
-            else:
-                # cold start / resume / capacity growth: full rebuild.
-                # Free the outgrown table's executor blocks before the new
-                # version replaces it (driver dicts just get GC'd).
-                if self._cuckoo is not None and hasattr(self._cuckoo, "free"):
-                    self._cuckoo.free()
-                cuckoo = CK.build_cuckoo(
-                    seen, expected_items=max(n_seen * 4, s.bloom_expected_items),
-                    version=rnd, mode=s.cuckoo_mode, n_shards=s.cuckoo_shards,
-                )
-            self._cuckoo, self._cuckoo_upto = cuckoo, rnd - 1
-            # flagged frame, not the tuple split: new_urls folds the gate
-            # into ONE anti-join pass (the tuple's two filters re-ran the
-            # cogroup probe per branch)
-            splitter = lambda f: CK.flag_by_cuckoo(f, cuckoo)  # noqa: E731
-        elif s.use_bloom and n_seen > 0:
+        if s.use_bloom and n_seen > 0:
             if self._bloom is None:
                 # resume path: load the persisted bitmap instead of
                 # rebuilding from the full seen union (at 10^10 URLs the
@@ -367,7 +280,7 @@ class CrawlEngine:
 
         _mark('state_bloom')
         # J1: the core frontier anti-join (bloom pre-gate + exact backstop)
-        candidates = US.new_urls(frontier_prev, seen, bloom, splitter=splitter).cache()
+        candidates = US.new_urls(frontier_prev, seen, bloom).cache()
         # The frontier written at round k-1 was already anti-joined against
         # the full seen set, and new_urls is exact (bloom only pre-gates), so
         # |candidates| == the frontier_next count carried in the manifest —
@@ -689,9 +602,6 @@ class CrawlEngine:
             "frontier_exact": True,  # engine-written: already seen-anti-joined
             "seen_total": n_seen + tables["url_seen"],  # carried forward, no count job
             "bloom": {"m": bloom.m, "k": bloom.k, "version": bloom.version} if bloom else None,
-            "seen_gate": s.seen_filter if s.use_bloom else None,
-            "cuckoo": {"n_shards": cuckoo.n_shards, "n_items": cuckoo.n_items,
-                       "version": cuckoo.version} if cuckoo else None,
             "virtual_cost_sec": max((r["virtual_cost_sec"] for r in lineage_rows), default=0.0),
             "budgets_df": self.budgets_df is not None,
             "rules_df": self.rules_df is not None,
@@ -716,16 +626,6 @@ class CrawlEngine:
             # per-round cost at any round count; BENCH/BASELINE.md).
             self.store.compact("url_seen", rnd, key_col="url", n_buckets=s.n_buckets)
             self.store.compact_tiered("documents", rnd, key_col="doc_id", n_buckets=s.n_buckets)
-        if s.seen_filter == "cuckoo" and s.use_bloom and cuckoo is None and rnd == 0:
-            # bootstrap the incremental shards from round 0's written delta
-            from ba_gepris_crawler_spark.operators import cuckoo as CK
-
-            self._cuckoo = CK.build_cuckoo(
-                self.store.read_state("url_seen", rnd),
-                expected_items=s.bloom_expected_items, version=0,
-                mode=s.cuckoo_mode, n_shards=s.cuckoo_shards,
-            )
-            self._cuckoo_upto = 0
         bloom_advanced = False
         if bloom is not None:
             # release the SUPERSEDED model's bitmap broadcast (this round's
@@ -737,7 +637,7 @@ class CrawlEngine:
             # _bloom_round = rnd: usable at round rnd (covers deltas
             # through rnd-1); next round's incremental arm ORs delta rnd
             self._bloom, self._bloom_round = bloom, rnd
-        elif s.seen_filter == "bloom" and s.use_bloom and rnd == 0:
+        elif s.use_bloom and rnd == 0:
             # bootstrap the incremental filter from round 0's delta — it
             # covers delta 0, so it is usable at round 1 (_bloom_round=0
             # made round 1's incremental arm re-OR delta 0, double-counting
@@ -755,15 +655,6 @@ class CrawlEngine:
             self.store.save_bloom(
                 self._bloom_round, self._bloom.bits.tobytes(), self._bloom.m,
                 self._bloom.k, self._bloom.version, self._bloom.n_items,
-            )
-        if self._cuckoo is not None and hasattr(self._cuckoo, "df"):
-            # table regime: persist the shard rows (executor-written
-            # parquet) so a resumed engine loads instead of rebuilding;
-            # tagged with the round the table covers (_cuckoo_upto)
-            self.store.save_cuckoo(
-                self._cuckoo_upto, self._cuckoo.df,
-                {"n_shards": self._cuckoo.n_shards, "per_shard": self._cuckoo.per_shard,
-                 "n_items": self._cuckoo.n_items, "version": self._cuckoo.version},
             )
         for df in (candidates, seen, stats):
             df.unpersist()

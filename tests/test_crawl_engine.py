@@ -579,6 +579,33 @@ def test_cli_validation_is_json_and_pre_spark(tmp_path, capsys):
         assert not bad_root.exists()
 
 
+def test_rebuild_from_config_ignores_legacy_seen_gate_keys():
+    """Stores created before the bloom gate became the only URL-seen gate
+    persisted three more keys in config.json, one of them naming a second
+    gate. Resuming such a store must replay exactly the settings of the
+    same config without those keys (both gates were admission-only, so
+    the bloom gate yields the same crawl). Pure Python: no Spark."""
+    from dataclasses import asdict
+
+    from ba_gepris_crawler_spark.cli import _rebuild_from_config
+
+    site = SiteConfig(hosts=("h00.gepris.example.org", "h01.gepris.example.org"), n_projects=20)
+    cfg = {
+        "site": {**asdict(site), "hosts": list(site.hosts)},
+        "politeness": asdict(PolitenessConfig(per_host_rate=7, max_in_flight=3)),
+        "n_buckets": 4,
+        "fetch_format": "json",
+        "span_transport": "arrays",
+        "circuit_breaker": {"min_fetches": 2},
+        "bootstrap_robots": False,
+        "robots_file": None,
+    }
+    legacy_keys = {"seen_filter": "cuckoo", "cuckoo_mode": "distributed", "cuckoo_shards": 16}
+    assert _rebuild_from_config({**cfg, **legacy_keys}) == _rebuild_from_config(cfg)
+    assert _rebuild_from_config(cfg)[1].use_bloom
+    assert not set(legacy_keys) & set(CrawlSettings.__dataclass_fields__)
+
+
 def test_cli_resume_rejects_corrupt_persisted_config(spark, tmp_path, capsys):
     """resume-crawl replays the persisted config; a hand-edited
     config.json with an invalid politeness rate must surface as the JSON
@@ -798,7 +825,7 @@ def test_bloom_n_items_exact_across_bootstrap_and_resume(spark, crawl_cfg, tmp_p
 
 def test_bloom_snapshot_never_overwrites_live_slot(spark, tmp_path):
     """save_bloom must write a fresh generation file and swap the manifest
-    LAST (the save_cuckoo discipline): overwriting the live bits slot in
+    LAST, then prune superseded files: overwriting the live bits slot in
     place left a crash window where new bits (possibly a resized m) paired
     with stale meta — same round tag after a --from-round rewind, wrong m,
     and every probe reads garbage positions, turning seen URLs 'provably

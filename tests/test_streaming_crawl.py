@@ -118,20 +118,6 @@ def test_streaming_session_gated_site_matches_batch(spark, tmp_path):
     assert all(st != 401 for _, st in stream_seen)
 
 
-def test_stream_crawl_cli_rejects_cuckoo_before_spark(capsys):
-    """--seen-filter cuckoo has no stream analog: the CLI must fail the
-    pure-argparse check BEFORE paying SparkSession startup (and before
-    touching the root directory)."""
-    from ba_gepris_crawler_spark.cli import main
-
-    assert main(["stream-crawl", "/tmp/never-created-stream-root",
-                 "--seen-filter", "cuckoo"]) == 2
-    assert "batch-engine only" in capsys.readouterr().out
-    import os
-
-    assert not os.path.exists("/tmp/never-created-stream-root")
-
-
 @pytest.mark.parametrize("seen_filter", ["exact", "bloom"])
 def test_streaming_crawl_matches_batch_seen_set(spark, tmp_path, seen_filter):
     """seen_filter='bloom' runs the SAME crawl through the incremental

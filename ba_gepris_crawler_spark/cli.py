@@ -52,7 +52,6 @@ def _settings(args: argparse.Namespace) -> CrawlSettings:
             max_in_flight=args.in_flight,
         ),
         fetch_format=getattr(args, "fetch_format", "html"),
-        span_transport=getattr(args, "span_transport", "json"),
         circuit_breaker={} if getattr(args, "circuit_breaker", False) else None,
     )
 
@@ -76,7 +75,6 @@ def _rebuild_from_config(
         n_buckets=cfg.get("n_buckets", fb.n_buckets),
         politeness=PolitenessConfig(**pol),
         fetch_format=cfg.get("fetch_format", fb.fetch_format),
-        span_transport=cfg.get("span_transport", fb.span_transport),
         circuit_breaker=_cb_from(cfg.get("circuit_breaker", fb.circuit_breaker)),
     )
     return site, settings
@@ -136,14 +134,6 @@ def main(argv: list[str] | None = None) -> int:
         c.add_argument(
             "--fetch-format", dest="fetch_format", choices=["html", "json"], default="html",
             help="html = pre-parsed spans; json = S7 JSON-API bodies parsed in-plan",
-        )
-        c.add_argument(
-            "--span-transport", dest="span_transport", choices=["json", "arrow", "arrays"],
-            default="json",
-            help="how html-mode spans cross the Arrow boundary: json string + "
-                 "JVM from_json (default, ~2x faster), pandas list-of-dicts "
-                 "(arrow), or four parallel primitive arrays zipped in-plan "
-                 "(arrays)",
         )
         c.add_argument(
             "--robots-file", dest="robots_file", default=None,
@@ -396,7 +386,6 @@ def main(argv: list[str] | None = None) -> int:
                     "politeness": asdict(settings.politeness),
                     "n_buckets": settings.n_buckets,
                     "fetch_format": settings.fetch_format,
-                    "span_transport": settings.span_transport,
                     "circuit_breaker": settings.circuit_breaker,
                     "bootstrap_robots": bool(getattr(args, "bootstrap_robots", False)),
                     "robots_file": args.robots_file,

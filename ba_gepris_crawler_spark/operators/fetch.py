@@ -33,29 +33,12 @@ from pyspark.sql import types as T
 from ba_gepris_crawler_spark.schema import SPANS_TYPE
 from ba_gepris_crawler_spark.sources.synthetic_site import SiteConfig
 
-FETCH_RESULT_FIELDS = [
-    T.StructField("status", T.IntegerType(), False),
-    T.StructField("spans", SPANS_TYPE, True),
-    T.StructField("virtual_cost_sec", T.DoubleType(), False),
-]
-
-
+# html and json fetch formats share ONE wire format across the Arrow
+# boundary: a body string per page, parsed into list<struct> JVM-side by
+# from_json inside fetch_pages (no per-span Python objects in transit)
 JSON_FETCH_RESULT_FIELDS = [
     T.StructField("status", T.IntegerType(), False),
     T.StructField("body", T.StringType(), True),
-    T.StructField("virtual_cost_sec", T.DoubleType(), False),
-]
-
-
-# span_transport="arrays": spans cross the Arrow boundary as FOUR parallel
-# primitive arrays (no per-span dict objects, no per-page json encode) and
-# are zipped back into list<struct> JVM-side (assemble in parse_json_spans).
-ARRAYS_FETCH_RESULT_FIELDS = [
-    T.StructField("status", T.IntegerType(), False),
-    T.StructField("span_kind", T.ArrayType(T.StringType()), True),
-    T.StructField("span_text", T.ArrayType(T.StringType()), True),
-    T.StructField("span_media", T.ArrayType(T.StringType()), True),
-    T.StructField("span_off", T.ArrayType(T.IntegerType()), True),
     T.StructField("virtual_cost_sec", T.DoubleType(), False),
 ]
 
@@ -69,12 +52,11 @@ def fetch_pages(
     epoch: int = 0,
     fmt: str = "html",
     host_rates: tuple[tuple[str, float], ...] = (),
-    span_transport: str = "json",
     transport=None,
     validators: DataFrame | None = None,
 ) -> DataFrame:
     """scheduled: output of politeness.schedule_round(...).fetch_now.
-    Returns the same rows + (status, spans-or-body, virtual_cost_sec).
+    Returns the same rows + (status, spans, virtual_cost_sec).
 
     Cookie flow: the (possibly stale) session token is broadcast; a 401
     response triggers an ON-WORKER re-fetch of the session endpoint +
@@ -83,21 +65,12 @@ def fetch_pages(
 
     fmt="json" hits the JSON-API endpoint instead (the reference's dormant
     S7 source, CrawledResourceDetailDataFromJsonAPIGraph.scala:15-46): the
-    worker returns the RAW body string and the span parse happens in the
-    PLAN via from_json (parse_json_spans) — JVM-side, no Python.
-
-    span_transport (fmt="html" only) picks how parsed spans cross the
-    Arrow boundary: "json" (default) serializes them to ONE string per
-    page on the worker and reassembles list<struct> JVM-side via
-    from_json — measured 1.75-2.2x faster end-to-end than "arrow",
-    which hands pandas a list-of-dicts column whose object-by-object
-    list<struct> conversion dominates the whole fetch stage
-    (BENCH/BASELINE.md round-4 A/B). "arrays" ships FOUR parallel
-    primitive arrays per page (no per-span dicts, no json encode) zipped
-    back to list<struct> in the plan (arrays_zip + transform) — the
-    round-5 A/B candidate against "json". Outputs are byte-equal; callers
-    check needs_span_parse(fetched) to know whether to apply
-    parse_json_spans before treating the result as documents.
+    worker returns the RAW body string. For fmt="html" the worker parses
+    the page and serializes its spans to ONE json string per page
+    (spans_to_json_body). Either way the span parse happens in the PLAN
+    via from_json — JVM-side, no Python — which measured 1.75-2.2x faster
+    end to end than shipping a pandas list-of-dicts column
+    (BENCH/BASELINE.md round-4 A/B); both formats' crawls are byte-equal.
 
     validators: optional (url, etag) relation (operators/revalidate.py —
     staged by enqueue_recrawl for the due set). Joined co-keyed onto the
@@ -116,21 +89,12 @@ def fetch_pages(
     session -> retry-once flow."""
     from ba_gepris_crawler_spark.operators.transport import SyntheticTransport
 
-    if span_transport not in ("json", "arrow", "arrays"):
-        # an unknown value must NOT silently fall back to the slowest
-        # in-band path ("arrow") — a typo'd 'array' would be a silent
-        # ~2x regression that an A/B run then misattributes
-        raise ValueError(
-            f"span_transport must be 'json', 'arrow' or 'arrays', got {span_transport!r}"
-        )
     spark = scheduled.sparkSession
     cfg_bc = spark.sparkContext.broadcast(site_cfg)
     token_bc = spark.sparkContext.broadcast(session_token)  # session/cookie analog
     rate = float(per_host_rate)
     rate_overrides = dict(host_rates)  # robots Crawl-delay per-host rates
     as_json = fmt == "json"
-    ship_json = as_json or span_transport == "json"
-    ship_arrays = not as_json and span_transport == "arrays"
     if transport is None:
         transport = SyntheticTransport()
     if validators is not None:
@@ -140,21 +104,16 @@ def fetch_pages(
         scheduled = scheduled.join(validators.select("url", "etag"), "url", "left")
 
     in_schema = scheduled.schema
-    result_fields = (
-        JSON_FETCH_RESULT_FIELDS if ship_json
-        else ARRAYS_FETCH_RESULT_FIELDS if ship_arrays
-        else FETCH_RESULT_FIELDS
-    )
     # host_max_slot is a scheduler-planted pricing input and etag a
     # validator input, not fetch outputs: consume them below, keep the
     # output schema transport-stable
     passthrough = [fld for fld in in_schema.fields if fld.name not in ("host_max_slot", "etag")]
-    out_schema = T.StructType(passthrough + result_fields)
+    out_schema = T.StructType(passthrough + JSON_FETCH_RESULT_FIELDS)
 
     def do_fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # ONE span-json writer repo-wide (synthetic_site.spans_to_json_body):
-        # the revalidation etags and the byte-equality pins between
-        # transports depend on this serialization never forking
+        # the revalidation etags and the byte-equality pin between the
+        # html and json fetch formats depend on it never forking
         from ba_gepris_crawler_spark.sources.synthetic_site import spans_to_json_body
 
         cfg = cfg_bc.value
@@ -174,26 +133,9 @@ def fetch_pages(
                 statuses, raw = transport.fetch_batch(
                     cfg, list(pdf["url"]), token, epoch, as_json
                 )
-            if as_json:
-                out = {"body": raw}  # raw body strings, parsed in the plan
-            elif ship_json:
-                # html parse happened on the worker; JSON transport to the JVM
-                out = {"body": [spans_to_json_body(pl) for pl in raw]}
-            elif ship_arrays:
-                # four parallel primitive arrays: Arrow converts flat
-                # list<string>/list<int> columns without building a dict
-                # per span or a json string per page
-                out = {
-                    "span_kind": [[s[0] for s in pl] for pl in raw],
-                    "span_text": [[s[1] for s in pl] for pl in raw],
-                    "span_media": [[s[2] for s in pl] for pl in raw],
-                    "span_off": [[s[3] for s in pl] for pl in raw],
-                }
-            else:
-                out = {"spans": [
-                    [{"kind": k, "text": t, "media_ref": m, "offset": o} for k, t, m, o in pl]
-                    for pl in raw
-                ]}
+            # json: raw body strings; html: the worker-parsed spans,
+            # serialized — both parsed by from_json in the plan below
+            body = raw if as_json else [spans_to_json_body(pl) for pl in raw]
             # virtual politeness cost: each slot-wave of a host costs
             # 1/rate, where rate honors the robots Crawl-delay per-host
             # overrides — the same rates the budget cut used upstream.
@@ -214,11 +156,15 @@ def fetch_pages(
                 # local max — only correct when the host fits one batch
                 max_slot = pdf.groupby("host")["slot"].transform("max").astype("float64")
             cost = (max_slot / host_rate).astype("float64")
-            res = pdf.assign(status=pd.Series(statuses, index=pdf.index, dtype="int32"), virtual_cost_sec=cost, **out)
+            res = pdf.assign(status=pd.Series(statuses, index=pdf.index, dtype="int32"), virtual_cost_sec=cost, body=body)
             yield res[[f.name for f in out_schema.fields]]  # schema column order
 
     # Salted-bucket repartition: spreads any single host over the cluster.
-    return scheduled.repartition(n_buckets, "host_bucket").mapInPandas(do_fetch, schema=out_schema)
+    wire = scheduled.repartition(n_buckets, "host_bucket").mapInPandas(do_fetch, schema=out_schema)
+    body_schema = T.StructType([T.StructField("spans", SPANS_TYPE, True)])
+    return wire.withColumn(
+        "spans", F.from_json(F.col("body"), body_schema).getField("spans")
+    ).drop("body")
 
 
 def fetch_raw_bodies(
@@ -267,36 +213,6 @@ def fetch_raw_bodies(
     return urls.select("url", "host").repartition(n_buckets, "host").mapInPandas(
         kernel, schema=out_schema
     )
-
-
-def needs_span_parse(fetched: DataFrame) -> bool:
-    """True iff a fetch_pages result still carries a wire-format span
-    column (`body` for fmt="json" / span_transport="json", the four
-    `span_*` arrays for span_transport="arrays") and must go through
-    parse_json_spans before to_documents — the documented caller protocol
-    for every fetch format and span transport."""
-    return "body" in fetched.columns or "span_kind" in fetched.columns
-
-
-def parse_json_spans(fetched: DataFrame) -> DataFrame:
-    """Wire-format span columns -> spans, entirely in the plan (Catalyst,
-    no Python): from_json for the json transports, arrays_zip + transform
-    for the "arrays" transport. Yields the exact schema an in-band
-    fetch_pages returns, so to_documents and everything downstream is
-    format-agnostic and every transport's crawl is byte-equal."""
-    if "span_kind" in fetched.columns:
-        spans = F.expr(
-            "transform(arrays_zip(span_kind, span_text, span_media, span_off),"
-            " s -> struct(s.span_kind as kind, s.span_text as text,"
-            " s.span_media as media_ref, s.span_off as offset))"
-        )
-        return fetched.withColumn("spans", spans).drop(
-            "span_kind", "span_text", "span_media", "span_off"
-        )
-    body_schema = T.StructType([T.StructField("spans", SPANS_TYPE, True)])
-    return fetched.withColumn(
-        "spans", F.from_json(F.col("body"), body_schema).getField("spans")
-    ).drop("body")
 
 
 def to_documents(fetched: DataFrame, round_no: int, keep_errors: bool = False) -> DataFrame:

@@ -235,9 +235,9 @@ def round_redirect_frontier(docs: DataFrame, next_round: int) -> DataFrame:
     historical fetch logs), a LIVE crawl learns each Location only by
     fetching, so this advances every chain exactly one hop per round.
 
-    3xx rows carry their Location as a 'location' span — the one shape all
-    three span transports, the JSON-API body format, and HttpTransport's
-    real Location header all normalize to. The target absolutizes against
+    3xx rows carry their Location as a 'location' span — the one shape the
+    html and JSON-API fetch formats and HttpTransport's real Location
+    header all normalize to. The target absolutizes against
     the source URL (RFC 3986), then must parse as a frontier-representable
     form: a detail URL (type + id from the path) or a catalog URL (type
     from resourceTypeQuery). Anything else is a redirect out of the site

@@ -47,8 +47,8 @@ from pyspark.sql import functions as F
 # impossible in the span fields (URL/text/kind grammar excludes C0
 # controls), so the serialization is injective; NULL text/media_ref
 # serialize as '' — indistinguishable from empty string BY DESIGN (the
-# wire formats already conflate them: json transport round-trips '' and
-# the arrays transport ships '' for absent media).
+# validator must not depend on whether a server ships '' or null for an
+# absent field).
 _SER_SPARK = (
     "array_join(transform({col}, s -> concat_ws(chr(31), s.kind,"
     " coalesce(s.text, ''), coalesce(s.media_ref, ''),"

@@ -49,6 +49,15 @@ from ba_gepris_crawler_spark.sources.synthetic_site import (
 SPAN_TUPLE_KEYS = ("kind", "text", "media_ref", "offset")
 
 
+def _decode_spans(body: str | None) -> list | None:
+    """The site's span serialization -> render_page's span tuples, or None
+    when the body is not one (does not parse, or has no `spans` list)."""
+    try:
+        return [tuple(s[k] for k in SPAN_TUPLE_KEYS) for s in json.loads(body)["spans"]]
+    except (ValueError, KeyError, TypeError):
+        return None
+
+
 class SyntheticTransport:
     """In-process deterministic 'network': page bytes are a pure function
     of (cfg, url, token, epoch), so every executor regenerates its
@@ -230,25 +239,30 @@ class HttpTransport:
                         results[i] = r
 
         statuses = [st for st, _, _ in results]
+        # A 200 whose body is not the site's span serialization (truncated
+        # response, hostile server) quarantines as 598 in both formats,
+        # instead of raising through the task (html) or committing a 200
+        # document with NULL spans that is never retried (json).
         if as_json:
             # a 3xx body is empty on the wire; re-encode the Location header
             # as the location-span body the in-process server emits, so the
             # plan-side from_json parse is transport-agnostic
             bodies = []
-            for st, body, loc in results:
+            for i, (st, body, loc) in enumerate(results):
                 if 300 <= st < 400 and loc:
                     bodies.append(json.dumps(
                         {"spans": [{"kind": "location", "text": "",
                                     "media_ref": loc, "offset": 0}]},
                         separators=(",", ":"),
                     ))
+                elif st == 200 and _decode_spans(body) is None:
+                    statuses[i] = 598
+                    bodies.append("")
                 else:
                     bodies.append(body)
             return statuses, bodies
         # html-mode parse on the worker: the wire body is the site's span
         # serialization; decode it to the same tuple shape render_page emits.
-        # A 200 with an undecodable body (truncated response, hostile
-        # server) quarantines as 598 instead of raising through the task.
         payloads: list = []
         for i, (st, body, loc) in enumerate(results):
             if 300 <= st < 400 and loc:
@@ -260,10 +274,9 @@ class HttpTransport:
             if st != 200 or not body:
                 payloads.append([])
                 continue
-            try:
-                spans = json.loads(body)["spans"]
-                payloads.append([tuple(s[k] for k in SPAN_TUPLE_KEYS) for s in spans])
-            except (ValueError, KeyError, TypeError):
-                statuses[i] = 598  # malformed body: quarantine, don't crash
-                payloads.append([])
+            spans = _decode_spans(body)
+            if spans is None:
+                statuses[i] = 598
+                spans = []
+            payloads.append(spans)
         return statuses, payloads

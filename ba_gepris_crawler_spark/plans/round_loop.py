@@ -28,12 +28,7 @@ from ba_gepris_crawler_spark.functions import extraction as X
 from ba_gepris_crawler_spark.operators import frontier as FR
 from ba_gepris_crawler_spark.operators.cookies import CookieJar
 from ba_gepris_crawler_spark.operators import url_seen as US
-from ba_gepris_crawler_spark.operators.fetch import (
-    fetch_pages,
-    needs_span_parse,
-    parse_json_spans,
-    to_documents,
-)
+from ba_gepris_crawler_spark.operators.fetch import fetch_pages, to_documents
 from ba_gepris_crawler_spark.operators.politeness import (
     MANY_HOSTS_THRESHOLD,
     PolitenessConfig,
@@ -50,7 +45,6 @@ class CrawlSettings:
     politeness: PolitenessConfig = field(default_factory=PolitenessConfig)
     bloom_fpp: float = 0.01
     bloom_expected_items: int = 1 << 17  # sizes m once; incremental OR after
-    use_bloom: bool = True
     extract: bool = True
     # every K committed rounds, merge url_seen delta dirs into one
     # hash-clustered snapshot (SnapshotStore.compact) so the seen union and
@@ -59,13 +53,6 @@ class CrawlSettings:
     # "html" (spans parsed on the fetch worker) or "json" (S7: raw
     # JSON-API bodies parsed in the plan via from_json — byte-equal output)
     fetch_format: str = "html"
-    # how html-mode spans cross the Arrow boundary: "json" (one string per
-    # page, list<struct> assembled JVM-side via from_json; 1.75-2.2x
-    # faster end-to-end — BENCH/BASELINE.md round-4 A/B), "arrays" (four
-    # parallel primitive arrays zipped back in the plan; round-5 A/B: parity
-    # with json) or "arrow" (list-of-dicts through pandas — the slow
-    # baseline). Byte-equal outputs; unknown values raise in fetch_pages.
-    span_transport: str = "json"
     # open-web frontier hygiene: drop crawler-trap URLs (over-long, over-
     # deep, parameter-exploded, repeated-segment loops) from discovered
     # candidates before they enter the frontier. None = off (the synthetic
@@ -225,7 +212,7 @@ class CrawlEngine:
         n_seen = 0 if prev_counters is None else prev_counters.get("seen_total", 0)
 
         bloom = None
-        if s.use_bloom and n_seen > 0:
+        if n_seen > 0:
             if self._bloom is None:
                 # resume path: load the persisted bitmap instead of
                 # rebuilding from the full seen union (at 10^10 URLs the
@@ -363,11 +350,9 @@ class CrawlEngine:
         fetched = fetch_pages(
             fetch_now, self.site, s.politeness.per_host_rate, s.n_buckets,
             session_token=token, epoch=epoch, fmt=s.fetch_format,
-            host_rates=s.politeness.host_rates, span_transport=s.span_transport,
-            transport=self.transport, validators=staged_validators,
+            host_rates=s.politeness.host_rates, transport=self.transport,
+            validators=staged_validators,
         )
-        if needs_span_parse(fetched):  # json API mode or json span transport
-            fetched = parse_json_spans(fetched)
 
         # WRITE-ONCE layout: the fetch stage streams straight into the round's
         # documents table (all rows incl. quarantined errors + politeness
@@ -637,7 +622,7 @@ class CrawlEngine:
             # _bloom_round = rnd: usable at round rnd (covers deltas
             # through rnd-1); next round's incremental arm ORs delta rnd
             self._bloom, self._bloom_round = bloom, rnd
-        elif s.use_bloom and rnd == 0:
+        elif rnd == 0:
             # bootstrap the incremental filter from round 0's delta — it
             # covers delta 0, so it is usable at round 1 (_bloom_round=0
             # made round 1's incremental arm re-OR delta 0, double-counting

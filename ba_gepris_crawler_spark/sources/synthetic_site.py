@@ -508,8 +508,8 @@ def render_page(
         # non-canonical form moved permanently: RELATIVE Location (path +
         # query), resolved by the engine via RFC 3986 merge
         # (operators/redirects.absolutize_location). The wire carries the
-        # target as a 'location' span so every span transport and the
-        # JSON-API body format ship it unchanged; real HTTP maps it to/from
+        # target as a 'location' span so the html and JSON-API fetch
+        # formats ship it unchanged; real HTTP maps it to/from
         # the Location header (sources/http_site.py, HttpTransport).
         if parse_qs(urlparse(url).query).get("canonical") != ["1"]:
             return 301, [
@@ -524,7 +524,7 @@ def render_page(
 def spans_to_json_body(spans: list[tuple[str, str, str, int]]) -> str:
     """Span tuples -> the canonical JSON wire body (shared by the JSON-API
     renderer below, the localhost HTTP twin in sources/http_site.py, and
-    the fetch stage's json span transport — one writer, zero drift)."""
+    the fetch stage's html-mode wire body — one writer, zero drift)."""
     import json as _json
 
     return _json.dumps(

@@ -42,12 +42,7 @@ from pyspark.sql import functions as F
 from ba_gepris_crawler_spark.operators import frontier as FR
 from ba_gepris_crawler_spark.operators import url_seen as US
 from ba_gepris_crawler_spark.operators.cookies import CookieJar
-from ba_gepris_crawler_spark.operators.fetch import (
-    fetch_pages,
-    needs_span_parse,
-    parse_json_spans,
-    to_documents,
-)
+from ba_gepris_crawler_spark.operators.fetch import fetch_pages, to_documents
 from ba_gepris_crawler_spark.operators.politeness import PolitenessConfig, schedule_round
 from ba_gepris_crawler_spark.schema import FRONTIER_SCHEMA
 from ba_gepris_crawler_spark.sources.synthetic_site import SiteConfig
@@ -229,8 +224,6 @@ class StreamingCrawl:
             session_token=token, epoch=epoch, fmt=self.fetch_format,
             host_rates=self.politeness.host_rates, transport=self.transport,
         )
-        if needs_span_parse(fetched):  # json API mode or json span transport
-            fetched = parse_json_spans(fetched)
         docs = to_documents(fetched, batch_id, keep_errors=True)
         docs.write.mode("overwrite").parquet(self._out("documents", batch_id))
         stored = self.spark.read.parquet(self._out("documents", batch_id))

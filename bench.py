@@ -160,11 +160,7 @@ def main() -> None:
             # sharpest scaling signal this one-machine sandbox can produce
             # (see BENCH/BASELINE.md).
             if os.environ.get("SPARK_GRAFT_FETCH_ONLY") == "1":
-                from ba_gepris_crawler_spark.operators.fetch import (
-                    fetch_pages,
-                    needs_span_parse,
-                    parse_json_spans,
-                )
+                from ba_gepris_crawler_spark.operators.fetch import fetch_pages
                 from ba_gepris_crawler_spark.operators.politeness import schedule_round
 
                 cfgp = PolitenessConfig(
@@ -175,15 +171,9 @@ def main() -> None:
                 fetch_now = fetch_now.localCheckpoint(eager=True)  # pre-materialize the schedule
                 n_sched = fetch_now.count()
                 t0 = time.time()
-                fetched = fetch_pages(
-                    fetch_now, site, cfgp.per_host_rate, 32,
-                    span_transport=os.environ.get("SPARK_GRAFT_SPAN_TRANSPORT", "json"),
-                )
-                if needs_span_parse(fetched):
-                    # measure through SPAN MATERIALIZATION (same boundary as
-                    # the arrow transport measured in earlier rounds), not
-                    # just the raw string ship
-                    fetched = parse_json_spans(fetched)
+                # measured through SPAN MATERIALIZATION: fetch_pages returns
+                # parsed spans, not just the raw string ship
+                fetched = fetch_pages(fetch_now, site, cfgp.per_host_rate, 32)
                 fetched.write.format("noop").mode("overwrite").save()
                 fetch_sec = time.time() - t0
                 queries["fetch_only"] = round(fetch_sec, 3)
@@ -200,13 +190,12 @@ def main() -> None:
             settings = CrawlSettings(
                 n_buckets=32,
                 politeness=PolitenessConfig(per_host_rate=float(n_pages), round_seconds=1.0, max_in_flight=10),
-                bloom_fpp=0.01, use_bloom=True, extract=False,
-                # html = spans assembled at the Arrow boundary (nested
-                # list<struct> out of the fetch UDF); json = flat body
-                # string out of the UDF, spans assembled JVM-side via
-                # from_json (byte-equal output; BENCH/BASELINE.md A/B)
+                bloom_fpp=0.01, extract=False,
+                # html = pages parsed on the fetch worker; json = raw
+                # JSON-API bodies. Both ship one body string per page out of
+                # the UDF, spans assembled JVM-side via from_json (byte-equal
+                # output)
                 fetch_format=os.environ.get("SPARK_GRAFT_FETCH_FORMAT", "html"),
-                span_transport=os.environ.get("SPARK_GRAFT_SPAN_TRANSPORT", "json"),
             )
             engine = CrawlEngine(spark, site, store, settings)
             t0 = time.time()
@@ -241,7 +230,6 @@ def main() -> None:
         n_buckets=32,
         politeness=PolitenessConfig(per_host_rate=8000, round_seconds=1.0, max_in_flight=10),
         bloom_fpp=0.01,
-        use_bloom=True,
         extract=False,
     )
     # Warm the session BEFORE the timer: first-job costs (executor task

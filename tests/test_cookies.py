@@ -72,14 +72,8 @@ def test_session_gate_and_worker_side_refresh(spark):
 
     frontier = seed_frontier(spark, cfg)
     fetch_now, _ = schedule_round(frontier, PolitenessConfig(per_host_rate=100), n_buckets=4)
-    from ba_gepris_crawler_spark.operators.fetch import parse_json_spans
-
-    stale = parse_json_spans(
-        fetch_pages(fetch_now, cfg, 100, 4, session_token="STALE", epoch=0)
-    )
-    fresh = parse_json_spans(
-        fetch_pages(fetch_now, cfg, 100, 4, session_token=session_token(cfg, 0), epoch=0)
-    )
+    stale = fetch_pages(fetch_now, cfg, 100, 4, session_token="STALE", epoch=0)
+    fresh = fetch_pages(fetch_now, cfg, 100, 4, session_token=session_token(cfg, 0), epoch=0)
     a = {(r.url, r.status, str(r.spans)) for r in stale.collect()}
     b = {(r.url, r.status, str(r.spans)) for r in fresh.collect()}
     assert a == b

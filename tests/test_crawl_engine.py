@@ -34,7 +34,6 @@ def _settings() -> CrawlSettings:
         n_buckets=8,
         politeness=PolitenessConfig(per_host_rate=BUDGET, round_seconds=1.0, max_in_flight=5),
         bloom_fpp=0.01,
-        use_bloom=True,
         extract=False,  # extraction correctness is covered in test_extraction
     )
 
@@ -330,48 +329,6 @@ def test_json_api_crawl_equals_html_crawl(spark, crawl_cfg, tmp_path_factory, ru
     assert da == dj  # span sequences byte-equal across fetch formats
 
 
-@pytest.mark.parametrize("transport_name", ["arrow", "arrays"])
-def test_span_transports_equal_json_transport(spark, crawl_cfg, tmp_path_factory, run, transport_name):
-    """span_transport is a wire-format detail of the html fetch path: the
-    'arrow' transport (list-of-dicts through pandas) and the 'arrays'
-    transport (four parallel primitive arrays zipped in-plan) must produce
-    the IDENTICAL crawl log and documents table as the default 'json'
-    transport (one string per page + JVM from_json) the `run` fixture used."""
-    store_a, _, _ = run
-    store_t = SnapshotStore(spark, tmp_path_factory.mktemp(f"crawl_{transport_name}"))
-    settings = _settings()
-    settings.span_transport = transport_name
-    manifests = CrawlEngine(spark, crawl_cfg, store_t, settings).run(max_rounds=30)
-    assert manifests[-1]["counters"]["done"]
-
-    a = {tuple(r) for r in store_a.read_union("url_seen", store_a.latest_round()).collect()}
-    t = {tuple(r) for r in store_t.read_union("url_seen", store_t.latest_round()).collect()}
-    assert a == t
-
-    cols = ["doc_id", "url", "round", "status", "spans"]
-    da = {(r.doc_id, r.url, r.round, r.status, str(r.spans))
-          for r in store_a.read_union("documents", store_a.latest_round()).select(*cols).collect()}
-    dt = {(r.doc_id, r.url, r.round, r.status, str(r.spans))
-          for r in store_t.read_union("documents", store_t.latest_round()).select(*cols).collect()}
-    assert da == dt  # span sequences byte-equal across transports
-
-
-def test_fetch_rejects_unknown_span_transport(spark, crawl_cfg):
-    """An unrecognized span_transport must raise, not silently fall back to
-    the slowest in-band 'arrow' path — a typo'd 'array' would be a silent
-    ~2x regression that an A/B run then misattributes (review r5 #8)."""
-    from ba_gepris_crawler_spark.operators.fetch import fetch_pages
-    from ba_gepris_crawler_spark.operators.frontier import seed_frontier
-    from ba_gepris_crawler_spark.operators.politeness import (
-        PolitenessConfig,
-        schedule_round,
-    )
-
-    fetch_now, _ = schedule_round(seed_frontier(spark, crawl_cfg), PolitenessConfig(), 2)
-    with pytest.raises(ValueError, match="span_transport"):
-        fetch_pages(fetch_now, crawl_cfg, 10.0, 2, span_transport="array")
-
-
 def test_tiered_compaction_logarithmic_merge(spark, tmp_path):
     """Equal-size deltas compacted every round behave like a binary counter
     (Bentley–Saxe logarithmic method): the tier count equals popcount(k)
@@ -579,12 +536,14 @@ def test_cli_validation_is_json_and_pre_spark(tmp_path, capsys):
         assert not bad_root.exists()
 
 
-def test_rebuild_from_config_ignores_legacy_seen_gate_keys():
+def test_rebuild_from_config_ignores_legacy_seen_gate_and_span_transport_keys():
     """Stores created before the bloom gate became the only URL-seen gate
     persisted three more keys in config.json, one of them naming a second
-    gate. Resuming such a store must replay exactly the settings of the
-    same config without those keys (both gates were admission-only, so
-    the bloom gate yields the same crawl). Pure Python: no Spark."""
+    gate; stores created before json became the only span wire format
+    persisted a `span_transport` key. Resuming such a store must replay
+    exactly the settings of the same config without those keys (both
+    gates were admission-only and all span transports were byte-equal, so
+    the crawl is the same). Pure Python: no Spark."""
     from dataclasses import asdict
 
     from ba_gepris_crawler_spark.cli import _rebuild_from_config
@@ -595,14 +554,15 @@ def test_rebuild_from_config_ignores_legacy_seen_gate_keys():
         "politeness": asdict(PolitenessConfig(per_host_rate=7, max_in_flight=3)),
         "n_buckets": 4,
         "fetch_format": "json",
-        "span_transport": "arrays",
         "circuit_breaker": {"min_fetches": 2},
         "bootstrap_robots": False,
         "robots_file": None,
     }
-    legacy_keys = {"seen_filter": "cuckoo", "cuckoo_mode": "distributed", "cuckoo_shards": 16}
+    legacy_keys = {
+        "seen_filter": "cuckoo", "cuckoo_mode": "distributed", "cuckoo_shards": 16,
+        "span_transport": "arrays",
+    }
     assert _rebuild_from_config({**cfg, **legacy_keys}) == _rebuild_from_config(cfg)
-    assert _rebuild_from_config(cfg)[1].use_bloom
     assert not set(legacy_keys) & set(CrawlSettings.__dataclass_fields__)
 
 

@@ -178,7 +178,9 @@ def test_network_errors_quarantine_not_crash(site):
 def test_malformed_200_body_quarantines_as_598(site, server, monkeypatch):
     """A 200 whose body is not the site's span serialization (truncated /
     hostile response) must quarantine as 598, not raise through the Arrow
-    batch (review r5 engine hardening)."""
+    batch (review r5 engine hardening) — in json mode too, where a body
+    passed through as a 200 would become, after the plan's from_json, a
+    committed 200 document with NULL spans that is never retried."""
     t = HttpTransport(server.base_url)
     real = HttpTransport._request
 
@@ -187,8 +189,11 @@ def test_malformed_200_body_quarantines_as_598(site, server, monkeypatch):
         return st, "<html>not json</html>" if st == 200 else body, sc, loc
 
     monkeypatch.setattr(HttpTransport, "_request", corrupt)
-    sts, payloads = t.fetch_batch(site, _urls(site)[:1], session_token(site, 0), 0, as_json=False)
-    assert sts == [598] and payloads == [[]]
+    for as_json in (False, True):
+        sts, payloads = t.fetch_batch(
+            site, _urls(site)[:1], session_token(site, 0), 0, as_json=as_json
+        )
+        assert sts == [598] and payloads == ([""] if as_json else [[]]), as_json
 
 
 def test_failed_session_refresh_leaves_401_quarantined(site, server, monkeypatch):

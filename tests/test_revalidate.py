@@ -6,7 +6,7 @@ Pins:
   servers all hash the same content to the same validator (including
   NULL/'' coalescing and non-ASCII text);
 - SyntheticTransport and HttpTransport answer 304 exactly when the sent
-  validator matches current content — over both span transports;
+  validator matches current content — in both fetch formats;
 - recrawl_schedule treats NULL-hash (304) observations as no-change
   evidence and still detects a later real change;
 - engine e2e: an unchanged site revalidates every due refetch (304 rows,

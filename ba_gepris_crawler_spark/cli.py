@@ -359,7 +359,7 @@ def main(argv: list[str] | None = None) -> int:
         sc = StreamingCrawl(
             spark, site, args.root, politeness=settings.politeness,
             n_buckets=settings.n_buckets, fetch_format=settings.fetch_format,
-            seen_filter="bloom", budgets_df=stream_budgets,
+            budgets_df=stream_budgets,
         )
         if sc.needs_seed():
             sc.seed()

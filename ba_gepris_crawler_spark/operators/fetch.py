@@ -51,7 +51,6 @@ def fetch_pages(
     session_token: str | None = None,
     epoch: int = 0,
     fmt: str = "html",
-    host_rates: tuple[tuple[str, float], ...] = (),
     transport=None,
     validators: DataFrame | None = None,
 ) -> DataFrame:
@@ -93,7 +92,6 @@ def fetch_pages(
     cfg_bc = spark.sparkContext.broadcast(site_cfg)
     token_bc = spark.sparkContext.broadcast(session_token)  # session/cookie analog
     rate = float(per_host_rate)
-    rate_overrides = dict(host_rates)  # robots Crawl-delay per-host rates
     as_json = fmt == "json"
     if transport is None:
         transport = SyntheticTransport()
@@ -104,10 +102,13 @@ def fetch_pages(
         scheduled = scheduled.join(validators.select("url", "etag"), "url", "left")
 
     in_schema = scheduled.schema
-    # host_max_slot is a scheduler-planted pricing input and etag a
-    # validator input, not fetch outputs: consume them below, keep the
-    # output schema transport-stable
-    passthrough = [fld for fld in in_schema.fields if fld.name not in ("host_max_slot", "etag")]
+    # host_max_slot and host_rate are scheduler-planted pricing inputs and
+    # etag a validator input, not fetch outputs: consume them below, keep
+    # the output schema transport-stable
+    passthrough = [
+        fld for fld in in_schema.fields
+        if fld.name not in ("host_max_slot", "host_rate", "etag")
+    ]
     out_schema = T.StructType(passthrough + JSON_FETCH_RESULT_FIELDS)
 
     def do_fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -137,16 +138,10 @@ def fetch_pages(
             # serialized — both parsed by from_json in the plan below
             body = raw if as_json else [spans_to_json_body(pl) for pl in raw]
             # virtual politeness cost: each slot-wave of a host costs
-            # 1/rate, where rate honors the robots Crawl-delay per-host
-            # overrides — the same rates the budget cut used upstream.
-            # A `host_rate` column (planted by schedule_round when per-host
-            # budgets arrive as a RELATION, budgets_df) wins over the
-            # driver-dict overrides: at 10^6 robots'd hosts the rates are
-            # data, not config literals
-            if "host_rate" in pdf.columns:
-                host_rate = pdf["host_rate"].fillna(rate).astype("float64")
-            else:
-                host_rate = pdf["host"].map(rate_overrides).fillna(rate).astype("float64")
+            # 1/rate, where rate is the scheduler-resolved `host_rate` (the
+            # robots Crawl-delay overrides the budget cut used upstream);
+            # hand-built scheduled frames without it use per_host_rate
+            host_rate = pdf["host_rate"].fillna(rate) if "host_rate" in pdf.columns else rate
             if "host_max_slot" in pdf.columns:
                 # scheduler-planted GLOBAL per-host last wave (exact even
                 # when a host spans salted buckets / Arrow batches)

@@ -30,8 +30,13 @@ count 1 — SURVEY.md §2.8). Generalization mandated by the north rule:
   (hosts x depths x priorities x buckets) and computed from one tiny
   groupBy-count — the same offset trick the crawl-log `seq` uses
   (plans/round_loop.py). No Exchange ever partitions by bare `host`.
-- robots/session state: broadcast to executors once per round
-  (reference: the cookie cache in CookieFlowGraph.scala:30-58).
+- robots rules and per-host rate overrides: config literals and the
+  web-scale relations (parse_robots_rules_distributed,
+  crawl_delay_budgets) share ONE evaluation path each — a tiny relation
+  broadcast-joined onto the frontier (apply_robots_rules) or onto the
+  offsets frame (schedule_round), the analog of the reference's
+  broadcast cookie cache (CookieFlowGraph.scala:30-58). With no rules or
+  overrides no join is added.
 """
 
 from __future__ import annotations
@@ -49,22 +54,6 @@ from pyspark.sql import functions as F
 # round-trips millions of metadata rows through the driver and the
 # co-keyed shuffle join wins (1.4-2.8x at 10^6 hosts, BENCH/many_hosts.py).
 MANY_HOSTS_THRESHOLD = 2000
-
-# Above this many per-host rate overrides, schedule_round stops compiling
-# the budget as a literal when-cascade (O(n_overrides) expression depth
-# blows up Catalyst plan size/codegen at 10^5+ robots Crawl-delay hosts)
-# and instead joins a (host, budget) frame onto the metadata-sized offsets
-# relation — riding the offsets join that happens anyway, so the data side
-# pays no extra shuffle either way.
-BUDGET_CASCADE_MAX = 64
-
-# Same crossover for robots rules: apply_robots compiles one filter per
-# ruled host (a when-cascade inside), so 10^5 robots'd hosts would mean
-# 10^5 chained Filter nodes — Catalyst plan size, not data, becomes the
-# bottleneck. Above this many ruled hosts (or under many_hosts) the rules
-# become a (host, sorted rule array) relation joined onto the frontier and
-# longest-match is evaluated by a single array-HOF expression.
-ROBOTS_CASCADE_MAX = 64
 
 # Budgets are carried in int32 columns (offsets join, budgets_df); a
 # hostile robots.txt ("Crawl-delay: 1e-9") must clamp, not overflow.
@@ -113,14 +102,20 @@ class PolitenessConfig:
         # finite explicitly
         if not math.isfinite(self.per_host_rate) or self.per_host_rate <= 0:
             raise ValueError(f"per_host_rate must be a finite number > 0, got {self.per_host_rate}")
+        # round_seconds scales every budget and max_in_flight divides the
+        # slot waves: reject here, before a crawl writes its config, not as
+        # a NaN int() or a divide-by-zero inside the first round's plan
+        if not math.isfinite(self.round_seconds) or self.round_seconds <= 0:
+            raise ValueError(f"round_seconds must be a finite number > 0, got {self.round_seconds}")
+        if self.max_in_flight < 1:
+            raise ValueError(f"max_in_flight must be >= 1, got {self.max_in_flight}")
         for h, r in self.host_rates:
             if not math.isfinite(r) or r <= 0:
                 raise ValueError(f"host_rates[{h!r}] must be a finite number > 0, got {r}")
         # normalize host_rates to one entry per host, FIRST occurrence wins
         # (defined precedence: explicit overrides precede robots-derived
-        # appends). Without this, rate_for/budget_for (first match) and
-        # fetch_pages' dict(host_rates) (last wins) could give the SAME
-        # host a different scheduler budget and fetch virtual cost.
+        # appends). schedule_round joins these rows onto the frontier by
+        # host, so a duplicate would multiply that host's rows.
         seen: set[str] = set()
         deduped = tuple(
             (h, r) for h, r in self.host_rates
@@ -142,27 +137,6 @@ class PolitenessConfig:
     def budget_for(self, host: str) -> int:
         """Token-bucket page budget for ONE round of `host`."""
         return _budget_from_rate(self.rate_for(host), self.round_seconds)
-
-    def budget_col(self, host_col: str = "host", base: F.Column | None = None) -> F.Column:
-        """The per-host budget as a literal when-cascade over the (tiny)
-        host_rates dimension — the Catalyst equivalent of broadcasting the
-        robots crawl-delay cache; no join, no shuffle. `base` overrides
-        the no-override branch (schedule_round passes a null literal to
-        build an override-ONLY cascade that coalesces ahead of a joined
-        budgets_df column without masking its rows)."""
-        c: F.Column = F.lit(self.per_host_budget) if base is None else base
-        for h, _r in self.host_rates:
-            c = F.when(F.col(host_col) == h, F.lit(self.budget_for(h))).otherwise(c)
-        return c
-
-    def rate_col(self, host_col: str = "host", base: F.Column | None = None) -> F.Column:
-        """Same cascade for the RATE (pages/sec) — fetch_pages' virtual
-        cost uses rates, the scheduler uses budgets; one source of truth
-        for both when schedule_round resolves them as columns."""
-        c: F.Column = F.lit(self.per_host_rate) if base is None else base
-        for h, r in self.host_rates:
-            c = F.when(F.col(host_col) == h, F.lit(float(r))).otherwise(c)
-        return c
 
 
 def priority_for_type() -> F.Column:
@@ -342,11 +316,11 @@ def politeness_from_robots(
     robots_by_host: dict[str, str],
     user_agent: str = "*",
 ) -> PolitenessConfig:
-    """Fold fetched robots.txt bodies into the politeness config: Disallow
-    rules extend cfg.disallow, Crawl-delay becomes a per-host rate override
-    (rate = 1/delay pages/sec). Driver-side, once per host — the
+    """Fold fetched robots.txt bodies into the politeness config:
+    Allow/Disallow rules extend cfg.robots_rules, Crawl-delay becomes a
+    per-host rate override (rate = 1/delay pages/sec). Driver-side, once per host — the
     broadcast-robots-cache shape (the per-host dimension is tiny; the
-    resulting config is compiled into the plan as literals)."""
+    scheduler turns the resulting config into tiny broadcast relations)."""
     from dataclasses import replace
 
     rules = list(cfg.robots_rules)
@@ -378,48 +352,28 @@ def apply_robots(
     many_hosts: bool = False,
     n_buckets: int = 32,
 ) -> DataFrame:
-    """Drop disallowed URLs.
+    """Drop the URLs the config's robots rules disallow.
 
-    - cfg.disallow: legacy any-match drops (explicit config regexes; tiny
-      by construction — compiled into the plan as literal filters).
-    - cfg.robots_rules: RFC-9309 longest-match — per host the rules are
-      sorted by (pattern length desc, Allow-first on ties) and the FIRST
-      hit decides; no hit = allowed. This is what lets an Allow carve a
-      hole inside a Disallow prefix.
+    - cfg.robots_rules: RFC-9309 longest-match — the matching rule with
+      the longest pattern decides, Allow wins ties, no match = allowed.
+      This is what lets an Allow carve a hole inside a Disallow prefix.
+    - cfg.disallow: explicit any-match drops. Each entry becomes a
+      Disallow rule whose specificity outranks every robots rule (rule
+      specificity is a pattern length, capped far below int32), so a
+      match drops the URL whatever robots_rules say.
 
-    SIZE-AWARE strategy for robots_rules (mirrors the offsets/budget
-    joins): at or below ROBOTS_CASCADE_MAX ruled hosts the rules compile
-    to per-host when-cascade filters (no join, no shuffle — the broadcast-
-    robots-cache shape). Above it — a 10^5-10^7-host open-web frontier
-    where every host has a robots.txt — that would be 10^5 chained Filter
-    nodes, so the rules become a (host, sorted-rule-array) relation and
-    longest-match is ONE array-HOF expression after a join: broadcast for
-    a small ruled-host universe under the cap with many_hosts=True, else
-    salted co-keyed shuffle on (host, crc32(url) % n_buckets) so a hot
-    host's frontier spreads over n_buckets tasks (the rules side is
-    metadata-sized: ruled_hosts x n_buckets rows; never a bare-host
-    Exchange on the data side). Decisions are identical across the three
-    paths (pinned by test_politeness)."""
-    out = frontier
-    for host, path_regex in cfg.disallow:
-        out = out.filter(~((F.col("host") == host) & F.col("url").rlike(path_regex)))
-    if not cfg.robots_rules:
-        return out
-    by_host: dict[str, list[tuple[str, int, bool]]] = {}
-    for h, rx, spec, allow in cfg.robots_rules:
-        by_host.setdefault(h, []).append((rx, spec, allow))
-    if len(by_host) <= ROBOTS_CASCADE_MAX and not many_hosts:
-        for h, rules in sorted(by_host.items()):
-            ordered = sorted(rules, key=lambda r: (-r[1], not r[2]))
-            decision: F.Column = F.lit(True)  # no matching rule -> allowed
-            for rx, _spec, allow in reversed(ordered):
-                decision = F.when(F.col("url").rlike(rx), F.lit(allow)).otherwise(decision)
-            out = out.filter((F.col("host") != h) | decision)
-        return out
-    rules = frontier.sparkSession.createDataFrame(
-        list(cfg.robots_rules), ROBOTS_RULES_SCHEMA
-    )
-    return apply_robots_rules(out, rules, many_hosts=many_hosts, n_buckets=n_buckets)
+    Both are folded into ONE ROBOTS_RULES_SCHEMA relation and evaluated by
+    apply_robots_rules, the same join + array-HOF the web-scale rules
+    relation takes. With no rules the frontier is returned as is: an empty
+    createDataFrame relation is a Scan ExistingRDD that Catalyst does not
+    prune, so joining it would still cost a shuffle and a broadcast."""
+    rules = list(cfg.robots_rules) + [
+        (h, rx, _INT32_MAX, False) for h, rx in cfg.disallow
+    ]
+    if not rules:
+        return frontier
+    rel = frontier.sparkSession.createDataFrame(rules, ROBOTS_RULES_SCHEMA)
+    return apply_robots_rules(frontier, rel, many_hosts=many_hosts, n_buckets=n_buckets)
 
 
 # rule rows as a RELATION — the web-scale robots shape: at 10^6+ hosts
@@ -512,12 +466,14 @@ def apply_robots_rules(
     """Joined robots evaluation over a rules RELATION (ROBOTS_RULES_SCHEMA
     rows — from parse_robots_rules_distributed, or cfg literals via
     apply_robots). Per host the rules are packed into ONE array sorted by
-    (-specificity, Disallow-after-Allow) — the same precedence the cascade
-    compiles — and the decision is `get(filter(rules, r -> url rlike
+    (-specificity, Disallow-after-Allow) — longest match first, Allow
+    first on ties — and the decision is `get(filter(rules, r -> url rlike
     r.rx), 0).allow` with null (no match / unruled host) meaning allowed.
-    The per-URL work is identical to the cascade's (each regex tried once,
-    first hit wins); only the plan shape changes from O(hosts) Filter
-    nodes to one join + one HOF."""
+    One join + one HOF whatever the number of ruled hosts: broadcast by
+    default, or, with many_hosts, a salted co-keyed shuffle on (host,
+    crc32(url) % n_buckets) so a hot host's frontier spreads over
+    n_buckets tasks (the rules side is metadata-sized: ruled_hosts x
+    n_buckets rows; never a bare-host Exchange on the data side)."""
     per_host = rules.groupBy("host").agg(
         F.sort_array(
             F.collect_list(
@@ -564,29 +520,38 @@ def schedule_round(
     n_buckets: int = 32,
     many_hosts: bool = False,
     budgets_df: DataFrame | None = None,
+    rules_df: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Split the deduplicated frontier into (fetch_now, deferred).
 
-    budgets_df: optional (host, budget int[, rate double]) relation of
-    per-host budgets — the web-scale form of robots Crawl-delay overrides
-    (crawl_delay_budgets), for host universes where driver-side
-    cfg.host_rates tuples cannot hold. Precedence matches
-    politeness_from_robots: an explicit cfg.host_rates entry outranks a
-    budgets_df row; hosts in neither use cfg.per_host_budget. Duplicate
-    host rows are deduplicated (most-conservative wins) before joining.
-    The relation rides the offsets join (size-aware: broadcast, or
+    Robots: cfg's rules drop URLs first (apply_robots), then rules_df, an
+    optional ROBOTS_RULES_SCHEMA relation (parse_robots_rules_distributed)
+    through apply_robots_rules. They stay two successive filters: longest
+    match over their union could let a rules_df Allow outrank a cfg rule.
+
+    Per-host overrides: cfg.host_rates and budgets_df, an optional (host,
+    budget int[, rate double]) relation — the web-scale form of robots
+    Crawl-delay overrides (crawl_delay_budgets), for host universes where
+    driver-side tuples cannot hold. Both become ONE (host, budget, rate)
+    relation joined onto the metadata-sized offsets frame (broadcast, or
     co-keyed shuffle under many_hosts), so the data side pays no extra
-    shuffle. When present, fetch_now additionally carries the resolved
-    pages/sec as `host_rate` — fetch_pages prices virtual cost from that
-    column, so the relation replaces BOTH consumers of host_rates.
+    shuffle. Precedence matches politeness_from_robots: a cfg.host_rates
+    entry outranks budgets_df rows for the same host; duplicate budgets_df
+    rows of one host are deduplicated (most-conservative wins); hosts in
+    neither use cfg.per_host_budget. With neither source the budget is a
+    literal and no join is added.
 
     fetch_now rows carry:
-      host_rank   - deterministic per-host fetch order (1-based) under the
-                    engine-defined total order (crawl_depth, priority,
-                    host_bucket, url)
-      host_bucket - salted partition key (rank AND fetch stage)
-      slot        - simulated politeness wave: ceil(host_rank / max_in_flight);
-                    wave w may start only after wave w-1 (token bucket)
+      host_rank     - deterministic per-host fetch order (1-based) under
+                      the engine-defined total order (crawl_depth, priority,
+                      host_bucket, url)
+      host_bucket   - salted partition key (rank AND fetch stage)
+      slot          - simulated politeness wave: ceil(host_rank /
+                      max_in_flight); wave w may start only after wave w-1
+                      (token bucket)
+      host_max_slot - the host's last wave this round
+      host_rate     - the host's resolved pages/sec; fetch_pages prices
+                      virtual cost from it and host_max_slot
 
     NOTE: the order is fully deterministic and reproducible by the
     straight-line golden crawl simulator (the reference's own fetch order
@@ -601,6 +566,8 @@ def schedule_round(
     design, catalogs widen the frontier fastest.
     """
     f = apply_robots(frontier, cfg, many_hosts=many_hosts, n_buckets=n_buckets)
+    if rules_df is not None:
+        f = apply_robots_rules(f, rules_df, many_hosts=many_hosts, n_buckets=n_buckets)
     added_bucket = "host_bucket" not in f.columns
     if added_bucket:
         f = f.withColumn("host_bucket", salt_bucket("url", n_buckets))
@@ -640,76 +607,15 @@ def schedule_round(
         # understates cost whenever a host spans buckets/batches)
         F.sum("n").over(Window.partitionBy("host")).alias("host_total"),
     )
-    # Size-aware per-host budget: few overrides compile to a literal
-    # when-cascade (no join at all); many overrides (10^5+ robots
-    # Crawl-delay hosts) ride the offsets relation as a joined column —
-    # the cascade's Catalyst expression depth would dominate planning
-    # long before the many-hosts join strategy helps.
-    budget_joined = len(cfg.host_rates) > BUDGET_CASCADE_MAX
-    if budget_joined:
-        budgets = f.sparkSession.createDataFrame(
-            # host_rates is deduped per host (first wins, enforced in
-            # __post_init__), so the comprehension's own rate IS the
-            # resolved rate — calling budget_for/rate_for here would make
-            # each a linear scan, O(n^2) driver work in exactly the
-            # 10^5+-override regime this joined path exists for.
-            [
-                (h, _budget_from_rate(r, cfg.round_seconds), float(r))
-                for h, r in cfg.host_rates
-            ],
-            "host string, _budget int, _rate double",
-        )
+    budget: F.Column = F.lit(cfg.per_host_budget)
+    rate: F.Column = F.lit(float(cfg.per_host_rate))
+    overrides = _host_overrides(f.sparkSession, cfg, budgets_df)
+    if overrides is not None:
         off = off.join(
-            budgets if many_hosts else F.broadcast(budgets), "host", "left"
+            overrides if many_hosts else F.broadcast(overrides), "host", "left"
         )
-    has_ext_rate = budgets_df is not None and "rate" in budgets_df.columns
-    if budgets_df is not None:
-        # dedup by host BEFORE the join: crawl_delay_budgets emits one row
-        # per input robots row, so a bodies relation accumulated across
-        # re-fetch rounds/redirects can carry a host twice — joined
-        # un-deduped, each duplicate would MULTIPLY that host's frontier
-        # rows through the offsets join. Most-conservative wins (smallest
-        # budget / slowest rate), the relation analog of cfg's
-        # first-occurrence-wins host_rates dedup.
-        # clamp at the boundary: schedule_round accepts ARBITRARY relations,
-        # so restore the cfg-path invariant budget in [1, INT32_MAX] here —
-        # a zero/negative row (or a long value a non-ANSI cast('int') would
-        # wrap negative) must not starve its host forever, and a
-        # non-positive/NaN rate falls back to the default rate (null)
-        # least/greatest SKIP nulls (they return the least/greatest of the
-        # non-null args), so an unguarded clamp would turn a null or
-        # uncastable budget into greatest(1, INT32_MAX) = INT32_MAX — an
-        # unlimited grant, the opposite of the invariant. Guard explicitly:
-        # null budgets stay null, min() skips them, and an all-null host
-        # falls through the coalesce to cfg defaults.
-        # try_cast, NOT cast: the budget/rate columns of an arbitrary
-        # relation can be string-typed with unparsable values, and under
-        # ANSI mode (Spark 4 default) a plain cast THROWS on 'abc' instead
-        # of yielding the NULL this guard is built around — one malformed
-        # row killing the schedule is exactly what the clamp exists to
-        # prevent (review r5 final, same class as the link-id cast).
-        budget_long = F.col("budget").try_cast("long")
-        budget_clamped = F.when(
-            budget_long.isNotNull(),
-            F.greatest(
-                F.lit(1).cast("long"),
-                F.least(budget_long, F.lit(_INT32_MAX).cast("long")),
-            ),
-        )
-        agg = [F.min(budget_clamped).cast("int").alias("_budget_df")]
-        if has_ext_rate:
-            rate_double = F.col("rate").try_cast("double")
-            rate_valid = F.when(
-                # NaN must be excluded EXPLICITLY: Spark orders NaN greater
-                # than any number, so NaN > 0 is true and least(NaN, MAX)
-                # returns MAX — a NaN rate silently granted the fastest
-                # possible rate instead of falling back to the default
-                (rate_double > 0) & ~F.isnan(rate_double),
-                F.least(rate_double, F.lit(float(_INT32_MAX))),
-            )
-            agg.append(F.min(rate_valid).alias("_rate_df"))
-        ext = budgets_df.groupBy("host").agg(*agg)
-        off = off.join(ext if many_hosts else F.broadcast(ext), "host", "left")
+        budget = F.coalesce(F.col("_budget"), budget)
+        rate = F.coalesce(F.col("_rate"), rate)
     # Level 1: rank within the salted partition — the only data-sized
     # shuffle, keyed (host, host_bucket) so a hot host spreads over B tasks.
     w = Window.partitionBy("host", "host_bucket").orderBy("crawl_depth", "priority", "url")
@@ -732,51 +638,7 @@ def schedule_round(
         .withColumn("host_rank", (F.col("grp_off") + F.col("_lrank") - F.col("lrank_before")).cast("int"))
         .drop("_lrank", "grp_off", "lrank_before")
     )
-    # Per-host token-bucket cut: budget is the literal when-cascade (few
-    # overrides; no join, no shuffle), the _budget column the offsets join
-    # carried in, and/or the external budgets_df column — resolved with
-    # cfg-outranks-external precedence; partition-count independent.
-    helper_cols: list[str] = []
-    parts: list[F.Column] = []
-    rate_parts: list[F.Column] = []
-    if budget_joined:
-        parts.append(F.col("_budget"))
-        rate_parts.append(F.col("_rate"))
-        helper_cols += ["_budget", "_rate"]
-    elif cfg.host_rates and budgets_df is not None:
-        # override-only cascades (null for unlisted hosts) so explicit
-        # cfg rates outrank budgets_df without masking its rows — the
-        # SAME cascade builders the cfg-only path compiles (budget_col /
-        # rate_col with a null base), so the two paths cannot drift
-        parts.append(cfg.budget_col("host", base=F.lit(None).cast("int")))
-        rate_parts.append(cfg.rate_col("host", base=F.lit(None).cast("double")))
-    if budgets_df is not None:
-        parts.append(F.col("_budget_df"))
-        helper_cols.append("_budget_df")
-        if has_ext_rate:
-            rate_parts.append(F.col("_rate_df"))
-            helper_cols.append("_rate_df")
-        else:
-            # budget-only relation: recover pages/sec from the budget
-            rate_parts.append(
-                F.col("_budget_df").cast("double") / F.lit(float(cfg.round_seconds))
-            )
-    if parts:
-        budget = F.coalesce(*parts, F.lit(cfg.per_host_budget))
-        f = f.withColumn("_budget_resolved", budget)
-        if budgets_df is not None:
-            # resolved pages/sec rides fetch_now as `host_rate`, which
-            # fetch_pages prefers over its driver-dict overrides — so a
-            # budgets relation replaces BOTH host_rates consumers (the
-            # scheduler's budget cut AND the fetch virtual-cost model)
-            f = f.withColumn(
-                "host_rate", F.coalesce(*rate_parts, F.lit(float(cfg.per_host_rate)))
-            )
-        f = f.drop(*helper_cols)
-        helper_cols = ["_budget_resolved"]
-        budget = F.col("_budget_resolved")
-    else:
-        budget = cfg.budget_col("host")
+    # Per-host token-bucket cut; partition-count independent.
     fetch_now = (
         f.filter(F.col("host_rank") <= budget)
         .withColumn("slot", F.ceil(F.col("host_rank") / cfg.max_in_flight).cast("int"))
@@ -788,16 +650,84 @@ def schedule_round(
             "host_max_slot",
             F.ceil(F.least(F.col("host_total"), budget.cast("long")) / cfg.max_in_flight).cast("int"),
         )
-        .drop("host_total")
+        .withColumn("host_rate", rate)
+        .drop("host_total", "_budget", "_rate")
     )
-    deferred = f.filter(F.col("host_rank") > budget).drop("host_rank", "host_total")
-    if parts:
-        fetch_now = fetch_now.drop(*helper_cols)
-        deferred = deferred.drop(*helper_cols)
-        if budgets_df is not None:
-            # deferred rows rejoin the frontier; the resolved rate is a
-            # fetch-stage concern only
-            deferred = deferred.drop("host_rate")
+    # deferred rows rejoin the frontier: no scheduler columns
+    deferred = f.filter(F.col("host_rank") > budget).drop(
+        "host_rank", "host_total", "_budget", "_rate"
+    )
     if added_bucket:
         deferred = deferred.drop("host_bucket")
     return fetch_now, deferred
+
+
+def _host_overrides(
+    spark, cfg: PolitenessConfig, budgets_df: DataFrame | None
+) -> DataFrame | None:
+    """cfg.host_rates + budgets_df -> one (host, _budget int, _rate double)
+    relation with one row per host, or None when neither has rows. A null
+    _budget/_rate means the cfg default for that column."""
+    src = None
+    if cfg.host_rates:
+        # already deduped per host, first wins (__post_init__)
+        src = spark.createDataFrame(
+            [(h, _budget_from_rate(r, cfg.round_seconds), float(r), True)
+             for h, r in cfg.host_rates],
+            "host string, _budget int, _rate double, _cfg boolean",
+        )
+    if budgets_df is None:
+        return None if src is None else src.drop("_cfg")
+    # clamp at the boundary: schedule_round accepts ARBITRARY relations,
+    # so restore the cfg-path invariant budget in [1, INT32_MAX] here —
+    # a zero/negative row (or a long value a non-ANSI cast('int') would
+    # wrap negative) must not starve its host forever, and a
+    # non-positive/NaN rate falls back to the default rate (null).
+    # least/greatest SKIP nulls (they return the least/greatest of the
+    # non-null args), so an unguarded clamp would turn a null or
+    # uncastable budget into greatest(1, INT32_MAX) = INT32_MAX — an
+    # unlimited grant, the opposite of the invariant. Guard explicitly:
+    # null budgets stay null, min() skips them, and an all-null host
+    # falls through to cfg defaults.
+    # try_cast, NOT cast: the budget/rate columns of an arbitrary
+    # relation can be string-typed with unparsable values, and under
+    # ANSI mode (Spark 4 default) a plain cast THROWS on 'abc' instead
+    # of yielding the NULL this guard is built around — one malformed
+    # row killing the schedule is exactly what the clamp exists to
+    # prevent.
+    budget_long = F.col("budget").try_cast("long")
+    budget = F.when(
+        budget_long.isNotNull(),
+        F.greatest(
+            F.lit(1).cast("long"),
+            F.least(budget_long, F.lit(_INT32_MAX).cast("long")),
+        ),
+    ).cast("int")
+    if "rate" in budgets_df.columns:
+        rate_double = F.col("rate").try_cast("double")
+        rate = F.when(
+            # NaN must be excluded EXPLICITLY: Spark orders NaN greater
+            # than any number, so NaN > 0 is true and least(NaN, MAX)
+            # returns MAX — a NaN rate silently granted the fastest
+            # possible rate instead of falling back to the default
+            (rate_double > 0) & ~F.isnan(rate_double),
+            F.least(rate_double, F.lit(float(_INT32_MAX))),
+        )
+    else:
+        # budget-only relation: recover pages/sec from the budget
+        rate = budget.cast("double") / F.lit(float(cfg.round_seconds))
+    ext = budgets_df.select(
+        "host", budget.alias("_budget"), rate.alias("_rate"), F.lit(False).alias("_cfg")
+    )
+    if src is not None:
+        ext = src.unionByName(ext)
+    # one row per host: a cfg row outranks the relation's rows (its
+    # values are never null); among relation rows — crawl_delay_budgets
+    # emits one per robots body, and bodies accumulated across re-fetches
+    # can repeat a host — the most conservative (smallest budget, slowest
+    # rate) wins. Un-deduped, each duplicate would MULTIPLY that host's
+    # frontier rows through the offsets join.
+    return ext.groupBy("host").agg(*[
+        F.coalesce(F.min(F.when(F.col("_cfg"), F.col(c))), F.min(c)).alias(c)
+        for c in ("_budget", "_rate")
+    ])

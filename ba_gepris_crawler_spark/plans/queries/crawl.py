@@ -504,7 +504,7 @@ def crawl_json_api_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def crawl_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Politeness robots.txt disallow filter (operators/politeness.py
-    apply_robots): per-host path-regex disallows compiled into the plan —
+    apply_robots): per-host path-regex disallows as a rules relation —
     h1 blocks /private/*, h2 blocks everything."""
     from ba_gepris_crawler_spark.operators.politeness import PolitenessConfig, apply_robots
 
@@ -744,9 +744,9 @@ def crawl_crawl_delay_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     politeness_from_robots -> schedule_round): h0 serves Crawl-delay 0.5
     (rate 2/s -> budget 2; an inapplicable googlebot group says 9), h1
     serves 0.25 (budget 4), h2 serves no robots and keeps the default rate
-    20 (budget 20). The budget is applied as a literal when-cascade — the
-    broadcast robots-cache analog, no join. The oracle replays the per-host
-    rank + CASE budget cut."""
+    20 (budget 20). The config's rate overrides reach the cut as a tiny
+    broadcast (host, budget, rate) relation — the broadcast robots-cache
+    analog. The oracle replays the per-host rank + CASE budget cut."""
     from ba_gepris_crawler_spark.operators.politeness import (
         PolitenessConfig,
         politeness_from_robots,
@@ -770,11 +770,12 @@ def crawl_crawl_delay_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     fetch_now, deferred = schedule_round(d, cfg, n_buckets=4)
     fn = fetch_now.groupBy("host").agg(F.count(F.lit(1)).alias("n_fetch_now"))
     dn = deferred.groupBy("host").agg(F.count(F.lit(1)).alias("n_deferred"))
+    budget_of = F.create_map(*[F.lit(x) for h, _r in cfg.host_rates for x in (h, cfg.budget_for(h))])
     return (
         fn.join(dn, "host", "full")
         .select(
             "host",
-            cfg.budget_col("host").cast("bigint").alias("budget"),
+            F.coalesce(budget_of[F.col("host")], F.lit(cfg.per_host_budget)).cast("bigint").alias("budget"),
             F.coalesce("n_fetch_now", F.lit(0)).alias("n_fetch_now"),
             F.coalesce("n_deferred", F.lit(0)).alias("n_deferred"),
         )

@@ -85,6 +85,12 @@ class CrawlSettings:
     # {"min_fetches": 8, "error_rate": 0.5, "suspend_rounds": 4}.
     circuit_breaker: dict | None = None
 
+    def __post_init__(self) -> None:
+        # every round repartitions by host_bucket = crc32(url) % n_buckets:
+        # reject a zero bucket count before a crawl writes its config
+        if self.n_buckets < 1:
+            raise ValueError(f"n_buckets must be >= 1, got {self.n_buckets}")
+
 
 class CrawlEngine:
     def __init__(self, spark: SparkSession, site: SiteConfig, store: SnapshotStore, settings: CrawlSettings | None = None):
@@ -319,17 +325,11 @@ class CrawlEngine:
         # x B would make the broadcast a driver-scale round-trip
         # (crossover rationale lives with the constant in politeness.py)
         many_hosts = len(self.site.hosts) > MANY_HOSTS_THRESHOLD
-        if self.rules_df is not None:
-            from ba_gepris_crawler_spark.operators.politeness import apply_robots_rules
-
-            if not self._rules_ckpt:
-                # materialize ONCE — an unpersisted rules plan would re-parse
-                # every robots body through mapInPandas every round
-                self.rules_df = self.rules_df.localCheckpoint(eager=True)
-                self._rules_ckpt = True
-            sched_cand = apply_robots_rules(
-                sched_cand, self.rules_df, many_hosts=many_hosts, n_buckets=s.n_buckets
-            )
+        if self.rules_df is not None and not self._rules_ckpt:
+            # materialize ONCE — an unpersisted rules plan would re-parse
+            # every robots body through mapInPandas every round
+            self.rules_df = self.rules_df.localCheckpoint(eager=True)
+            self._rules_ckpt = True
         if self.budgets_df is not None and not self._budgets_ckpt:
             # materialize the budgets relation ONCE — an unpersisted
             # crawl_delay_budgets plan would re-parse every robots body
@@ -338,7 +338,7 @@ class CrawlEngine:
             self._budgets_ckpt = True
         fetch_now, deferred = schedule_round(
             sched_cand, s.politeness, s.n_buckets, many_hosts=many_hosts,
-            budgets_df=self.budgets_df,
+            budgets_df=self.budgets_df, rules_df=self.rules_df,
         )
         # session cookie: refreshed once per epoch, broadcast into the fetch
         epoch = rnd // self.site.session_rounds if self.site.session_rounds else 0
@@ -350,8 +350,7 @@ class CrawlEngine:
         fetched = fetch_pages(
             fetch_now, self.site, s.politeness.per_host_rate, s.n_buckets,
             session_token=token, epoch=epoch, fmt=s.fetch_format,
-            host_rates=s.politeness.host_rates, transport=self.transport,
-            validators=staged_validators,
+            transport=self.transport, validators=staged_validators,
         )
 
         # WRITE-ONCE layout: the fetch stage streams straight into the round's

@@ -4,9 +4,9 @@ source, with discovery feeding back into it.
 The batch engine (plans/round_loop.py) models the reference's stage loop as
 discrete rounds; this module is the forward path the north rule's streaming
 mandate points at: the frontier directory is a file-source STREAM, each
-micro-batch runs the same operators (seen anti-join — optionally pre-gated
-by the incremental bloom, seen_filter='bloom' -> politeness schedule ->
-Arrow fetch -> documents/url_seen append), and discovered URLs
+micro-batch runs the same operators (seen anti-join pre-gated by the
+incremental bloom -> politeness schedule -> Arrow fetch ->
+documents/url_seen append), and discovered URLs
 are written BACK into the frontier directory, so the stream feeds itself
 until the reachable site is exhausted.
 
@@ -59,15 +59,6 @@ class StreamingCrawl:
     # CrawlSettings.fetch_format; json bodies parse in-plan to the same
     # spans, so both modes write byte-equal documents
     fetch_format: str = "html"
-    # "exact" or "bloom": with "bloom" the per-batch seen anti-join is
-    # pre-gated by the SAME incremental bloom the batch engine maintains
-    # (bloom-negative URLs are provably unseen and bypass the join; the
-    # exact anti-join remains the backstop, so results are identical).
-    # The bitmap is DERIVED state rebuilt from committed url_seen batch
-    # dirs — a crash or process restart just re-ORs them, and a dir is
-    # only inserted once its commit marker exists, so the no-false-
-    # negatives guarantee holds for every URL the gate can be asked about
-    seen_filter: str = "exact"
     # initial bloom sizing (m/k are fixed at first build; outgrowing it
     # only degrades the pre-gate's selectivity, never correctness)
     bloom_expected_items: int = 1_000_000
@@ -144,12 +135,14 @@ class StreamingCrawl:
 
     def _bloom_gate(self) -> US.BloomFilterModel | None:
         """Incrementally OR committed url_seen batch dirs into the bloom
-        (the stream analog of round_loop's update_bloom-per-round). Only
-        dirs whose commit marker exists are inserted, and the instance
-        tracks which, so each delta is scanned exactly once per process
-        lifetime; a restart rebuilds from all committed dirs."""
-        if self.seen_filter != "bloom":
-            return None
+        (the stream analog of round_loop's update_bloom-per-round).
+        Bloom-negative URLs are provably unseen and bypass the seen
+        anti-join; the exact anti-join stays the backstop for the rest, so
+        results equal an ungated join. The bitmap is DERIVED state: only
+        dirs whose commit marker exists are inserted (so no URL the gate
+        is asked about can be a false negative), and the instance tracks
+        which, so each delta is scanned exactly once per process lifetime;
+        a restart rebuilds from all committed dirs."""
         committed = [p for p in sorted((self.root / "url_seen").glob("b*"))
                      if self._committed(p.name)]
         fresh = [p for p in committed if p.name not in self._bloom_dirs]
@@ -202,17 +195,12 @@ class StreamingCrawl:
         if self.budgets_df is not None and not self._budgets_ckpt:
             self.budgets_df = self.budgets_df.localCheckpoint(eager=True)
             self._budgets_ckpt = True
-        if self.rules_df is not None:
-            from ba_gepris_crawler_spark.operators.politeness import apply_robots_rules
-
-            if not self._rules_ckpt:
-                self.rules_df = self.rules_df.localCheckpoint(eager=True)
-                self._rules_ckpt = True
-            candidates = apply_robots_rules(
-                candidates, self.rules_df, n_buckets=self.n_buckets
-            )
+        if self.rules_df is not None and not self._rules_ckpt:
+            self.rules_df = self.rules_df.localCheckpoint(eager=True)
+            self._rules_ckpt = True
         fetch_now, deferred = schedule_round(
-            candidates, self.politeness, self.n_buckets, budgets_df=self.budgets_df
+            candidates, self.politeness, self.n_buckets,
+            budgets_df=self.budgets_df, rules_df=self.rules_df,
         )
         epoch = batch_id // self.site.session_rounds if self.site.session_rounds else 0
         token = (
@@ -222,7 +210,7 @@ class StreamingCrawl:
         fetched = fetch_pages(
             fetch_now, self.site, self.politeness.per_host_rate, self.n_buckets,
             session_token=token, epoch=epoch, fmt=self.fetch_format,
-            host_rates=self.politeness.host_rates, transport=self.transport,
+            transport=self.transport,
         )
         docs = to_documents(fetched, batch_id, keep_errors=True)
         docs.write.mode("overwrite").parquet(self._out("documents", batch_id))

@@ -515,17 +515,24 @@ def test_read_union_legacy_compaction_manifest(spark, tmp_path):
 def test_cli_validation_is_json_and_pre_spark(tmp_path, capsys):
     """CLI misconfiguration must follow the JSON-error/exit-2 contract,
     not raw tracebacks, and fail before creating anything on disk:
-    --rate 0 is caught by pure-argparse-level validation (no JVM, no
-    root dir), and `gc` on a path that is not a snapshot store refuses
+    --rate 0, --in-flight 0, --buckets 0 and --round-seconds nan are
+    caught by the config dataclasses before Spark starts (no JVM, no
+    root dir, no config.json), and `gc` on a path that is not a snapshot store refuses
     instead of mkdir-ing a skeleton and reporting a clean empty gc."""
     import json as _json
 
     from ba_gepris_crawler_spark.cli import main as cli_main
 
     bad_root = tmp_path / "never-created"
-    assert cli_main(["new-crawl", str(bad_root), "--rate", "0"]) == 2
-    assert "per_host_rate" in _json.loads(capsys.readouterr().out.strip().splitlines()[-1])["error"]
-    assert not bad_root.exists()
+    for flag, value, field_name in (
+        ("--rate", "0", "per_host_rate"),
+        ("--in-flight", "0", "max_in_flight"),
+        ("--buckets", "0", "n_buckets"),
+        ("--round-seconds", "nan", "round_seconds"),
+    ):
+        assert cli_main(["new-crawl", str(bad_root), flag, value]) == 2
+        assert field_name in _json.loads(capsys.readouterr().out.strip().splitlines()[-1])["error"]
+        assert not bad_root.exists()
 
     # EVERY existing-store command refuses a non-store root pre-JVM
     for cmd in (["gc"], ["compact"], ["dq"], ["export"], ["resume-crawl"]):

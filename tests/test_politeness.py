@@ -7,6 +7,7 @@ partition by bare `host` (the single-task hot-host scale-killer)."""
 from __future__ import annotations
 
 import re
+from dataclasses import replace
 
 import pytest
 import zlib
@@ -204,21 +205,26 @@ def test_robots_allow_longest_match_and_dollar_anchor(spark):
     for u, want in urls:
         assert (u in kept) == want, u
 
+    # a cfg.disallow entry outranks every robots rule: covering the Allow
+    # hole drops the URL the longer Allow would otherwise keep
+    hole = "https://h.example.org/private/press/r1"
+    with_disallow = replace(cfg, disallow=(("h.example.org", "/private/"),))
+    kept = {r.url for r in apply_robots(df, with_disallow).collect()}
+    assert hole not in kept
+    assert kept == {u for u, want in urls if want and u != hole}
 
-def test_robots_joined_variant_equals_cascade(spark):
-    """The size-aware robots strategies must decide identically: the
-    per-host when-cascade (small ruled universe), the broadcast-joined
-    array-HOF variant (many_hosts under the cap), and the salted co-keyed
-    join (many_hosts) — same frontier, same kept set. Exercises hole-
-    carving Allows, $-anchors, ties, and unruled hosts across >cap hosts
-    so the joined path is the one actually under test."""
+
+def test_robots_broadcast_and_salted_joins_agree(spark):
+    """The two join strategies of the robots evaluation must decide
+    identically: the broadcast join (default) and the salted co-keyed join
+    (many_hosts) — same frontier, same kept set. Exercises hole-carving
+    Allows, $-anchors and unruled hosts across many ruled hosts."""
     from ba_gepris_crawler_spark.operators.politeness import (
-        ROBOTS_CASCADE_MAX,
         apply_robots,
         parse_robots_rules,
     )
 
-    n_hosts = ROBOTS_CASCADE_MAX + 8
+    n_hosts = 72
     rules: list[tuple[str, str, int, bool]] = []
     rows: list[tuple[str, str, bool]] = []  # (url, host, want_kept)
     for i in range(n_hosts):
@@ -244,20 +250,11 @@ def test_robots_joined_variant_equals_cascade(spark):
     df = spark.createDataFrame([(u, h) for u, h, _ in rows], "url string, host string")
 
     want = {u for u, _h, keep in rows if keep}
-    # >cap ruled hosts -> joined variant picked automatically (broadcast)
     assert {r.url for r in apply_robots(df, cfg).collect()} == want
     # many_hosts -> salted co-keyed join; same decisions
     got_salted = apply_robots(df, cfg, many_hosts=True, n_buckets=8)
     assert {r.url for r in got_salted.collect()} == want
     assert got_salted.columns == df.columns  # helper columns dropped
-    # force the cascade on a small slice and compare against the join
-    small = [t for t in rows if t[1] in ("h0.example.org", "unruled.org")]
-    small_rules = tuple(r for r in rules if r[0] == "h0.example.org")
-    small_cfg = PolitenessConfig(robots_rules=small_rules)
-    sdf = spark.createDataFrame([(u, h) for u, h, _ in small], "url string, host string")
-    cascade = {r.url for r in apply_robots(sdf, small_cfg).collect()}
-    joined = {r.url for r in apply_robots(sdf, small_cfg, many_hosts=True).collect()}
-    assert cascade == joined == {u for u, _h, keep in small if keep}
 
 
 def test_parse_crawl_delay_group_semantics():
@@ -306,11 +303,12 @@ def test_crawl_delay_feeds_per_host_budget(spark):
     assert deferred.count() == f.count() - sum(got.values())
 
 
-def test_fetch_virtual_cost_honors_host_rate_overrides(spark):
+def test_fetch_virtual_cost_prices_from_scheduled_host_rate(spark):
     """fetch_pages' virtual_cost_sec must use the SAME per-host rates the
     budget cut used upstream: for an overridden host cost = max_slot /
     override_rate, for the rest max_slot / default_rate (VERDICT r2 #5 /
-    review r3 coverage gap)."""
+    review r3 coverage gap). The scheduler's `host_rate` column is the
+    only way the cfg overrides reach the cost model."""
     from ba_gepris_crawler_spark.operators.fetch import fetch_pages
     from ba_gepris_crawler_spark.operators.frontier import seed_frontier
     from ba_gepris_crawler_spark.sources.synthetic_site import SiteConfig
@@ -324,9 +322,8 @@ def test_fetch_virtual_cost_honors_host_rate_overrides(spark):
         host_rates=(("h00.gepris.example.org", 4.0),),
     )
     fetch_now, _ = schedule_round(seed_frontier(spark, cfg), pol, n_buckets=4)
-    fetched = fetch_pages(
-        fetch_now, cfg, pol.per_host_rate, 4, host_rates=pol.host_rates
-    )
+    fetched = fetch_pages(fetch_now, cfg, pol.per_host_rate, 4)
+    assert "host_rate" not in fetched.columns  # pricing input, not output
     rows = fetched.select("host", "slot", "virtual_cost_sec").collect()
     assert rows, "seed frontier produced no fetches"
     max_slot = {}
@@ -382,8 +379,8 @@ def test_fetch_virtual_cost_global_across_buckets(spark):
 
 def test_host_rates_dedup_first_wins():
     """Duplicate host entries normalize to ONE entry per host (first wins),
-    so rate_for / budget_for / fetch_pages' dict lookup can never disagree
-    about a host's rate; politeness_from_robots never overrides an explicit
+    so rate_for / budget_for and the scheduler's overrides relation can
+    never disagree about a host's rate; politeness_from_robots never overrides an explicit
     entry and is idempotent across repeated calls (ADVICE r3)."""
     from ba_gepris_crawler_spark.operators.politeness import politeness_from_robots
 
@@ -392,7 +389,7 @@ def test_host_rates_dedup_first_wins():
     )
     assert cfg.host_rates == (("a.org", 5.0), ("b.org", 2.0))
     assert cfg.rate_for("a.org") == 5.0
-    assert dict(cfg.host_rates)["a.org"] == 5.0  # fetch_pages' lookup agrees
+    assert dict(cfg.host_rates)["a.org"] == 5.0
 
     robots = {"a.org": "User-agent: *\nCrawl-delay: 10\n",
               "c.org": "User-agent: *\nCrawl-delay: 4\n"}
@@ -403,32 +400,28 @@ def test_host_rates_dedup_first_wins():
     assert twice.host_rates == once.host_rates  # idempotent, no duplicates
 
 
-def test_many_overrides_budget_join_equals_cascade(spark):
-    """Above BUDGET_CASCADE_MAX rate overrides the budget comes from a
-    joined (host, budget) frame instead of a literal when-cascade — the
-    schedule must be IDENTICAL either way (ADVICE r3: the cascade's
-    expression depth blows up Catalyst at 10^5+ robots Crawl-delay hosts)."""
-    from ba_gepris_crawler_spark.operators import politeness as P
-
+def test_many_overrides_schedule_equals_few_overrides(spark):
+    """The overrides relation is joined by host, so overrides for hosts
+    absent from the frontier must not change the schedule: 72 overrides
+    give exactly the schedule of the 2 that match live hosts."""
     f = _frontier(spark)
-    # >64 overrides: the three live hosts get real budgets, the rest pad
-    # the override list past the cascade threshold
+    # the three live hosts get real budgets (h2 the default), the rest pad
+    # the override list with hosts the frontier does not have
     rates = tuple(
         [("h0.example.org", 2.0), ("h1.example.org", 8.0)]
         + [(f"pad{i}.example.org", 1.0) for i in range(70)]
     )
     cfg = PolitenessConfig(per_host_rate=40, round_seconds=1.0,
                            max_in_flight=7, host_rates=rates)
-    assert len(cfg.host_rates) > P.BUDGET_CASCADE_MAX
     fetch_now, deferred = schedule_round(f, cfg, n_buckets=N_BUCKETS)
     got = {r["host"]: r["n"] for r in
            fetch_now.groupBy("host").agg(F.count("*").alias("n")).collect()}
     assert got == {"h0.example.org": 2, "h1.example.org": 8, "h2.example.org": 40}
     assert deferred.count() == f.count() - sum(got.values())
-    assert "_budget_resolved" not in fetch_now.columns
+    assert "_budget" not in fetch_now.columns
     assert "_budget" not in deferred.columns
 
-    # identical schedule to the cascade path with the same effective rates
+    # identical schedule to the same effective rates without the padding
     small = PolitenessConfig(per_host_rate=40, round_seconds=1.0, max_in_flight=7,
                              host_rates=rates[:2])
     fetch_small, _ = schedule_round(f, small, n_buckets=N_BUCKETS)
@@ -509,7 +502,7 @@ def test_distributed_robots_pipeline_equals_driver_path(spark):
 def test_schedule_round_budgets_df_and_precedence(spark):
     """crawl_delay_budgets -> schedule_round(budgets_df=...): the relation
     form of robots Crawl-delay must cut per-host budgets exactly like the
-    cfg cascade, and an explicit cfg.host_rates entry must outrank the
+    cfg host_rates, and an explicit cfg.host_rates entry must outrank the
     budgets_df row for the same host (politeness_from_robots precedence)."""
     from ba_gepris_crawler_spark.operators.politeness import (
         crawl_delay_budgets,
@@ -621,7 +614,7 @@ def test_budgets_df_feeds_fetch_virtual_cost(spark):
     """Review r4: the budgets relation must replace BOTH host_rates
     consumers — the scheduler's budget cut AND fetch_pages' virtual-cost
     pricing. fetch_now carries the resolved `host_rate`, and fetch_pages
-    prices identically to the driver-dict cfg path on the same delays."""
+    prices identically to the cfg host_rates path on the same delays."""
     from ba_gepris_crawler_spark.operators.fetch import fetch_pages
     from ba_gepris_crawler_spark.operators.politeness import (
         crawl_delay_budgets,
@@ -652,8 +645,7 @@ def test_budgets_df_feeds_fetch_virtual_cost(spark):
     now_cfg, _ = schedule_round(fr, cfg_folded, n_buckets=4)
     cost_cfg = {
         (r.host, r.slot): r.virtual_cost_sec
-        for r in fetch_pages(now_cfg, site, cfg.per_host_rate, n_buckets=4,
-                             host_rates=cfg_folded.host_rates)
+        for r in fetch_pages(now_cfg, site, cfg.per_host_rate, n_buckets=4)
         .select("host", "slot", "virtual_cost_sec").distinct().collect()
     }
     assert cost_rel == cost_cfg

@@ -5,7 +5,6 @@ nondeterministic, so trace equality is out of scope by design)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from ba_gepris_crawler_spark.operators.politeness import PolitenessConfig
@@ -118,13 +117,12 @@ def test_streaming_session_gated_site_matches_batch(spark, tmp_path):
     assert all(st != 401 for _, st in stream_seen)
 
 
-@pytest.mark.parametrize("seen_filter", ["exact", "bloom"])
-def test_streaming_crawl_matches_batch_seen_set(spark, tmp_path, seen_filter):
-    """seen_filter='bloom' runs the SAME crawl through the incremental
-    bloom pre-gate + exact backstop (derived from committed batch dirs):
-    identical final state, every url fetched exactly once — a bloom false
-    NEGATIVE (impossible for inserted committed dirs) would show up here
-    as a duplicate fetch."""
+def test_streaming_crawl_matches_batch_seen_set(spark, tmp_path):
+    """The stream runs the SAME crawl as the batch engine through the
+    incremental bloom pre-gate + exact backstop (derived from committed
+    batch dirs): identical final state, every url fetched exactly once — a
+    bloom false NEGATIVE (impossible for inserted committed dirs) would
+    show up here as a duplicate fetch."""
     cfg = SiteConfig(
         hosts=("gepris.example.org", "alt1.example.org"),
         n_projects=15, n_persons=8, n_institutions=3,
@@ -134,18 +132,17 @@ def test_streaming_crawl_matches_batch_seen_set(spark, tmp_path, seen_filter):
     pol = PolitenessConfig(per_host_rate=40, round_seconds=1.0, max_in_flight=5)
 
     sc = StreamingCrawl(spark, cfg, tmp_path / "stream", politeness=pol, n_buckets=8,
-                        seen_filter=seen_filter, bloom_expected_items=10_000)
+                        bloom_expected_items=10_000)
     sc.seed()
     waves = sc.drain(max_waves=20)
     assert 1 < waves <= 20  # discovery actually fed the stream back
-    if seen_filter == "bloom":
-        # the gate really ran: bitmap built and every committed url_seen
-        # batch dir inserted exactly once
-        assert sc._bloom is not None
-        assert sc._bloom_dirs == {
-            p.name for p in (sc.root / "url_seen").glob("b*")
-            if (sc.root / "_commits" / p.name).exists()
-        }
+    # the gate really ran: bitmap built and every committed url_seen
+    # batch dir inserted exactly once
+    assert sc._bloom is not None
+    assert sc._bloom_dirs == {
+        p.name for p in (sc.root / "url_seen").glob("b*")
+        if (sc.root / "_commits" / p.name).exists()
+    }
 
     store = SnapshotStore(spark, tmp_path / "batch")
     CrawlEngine(
@@ -187,7 +184,7 @@ def test_streaming_bloom_gate_rebuilds_across_restart(spark, tmp_path):
     root = tmp_path / "stream"
 
     sc1 = StreamingCrawl(spark, cfg, root, politeness=pol, n_buckets=4,
-                         seen_filter="bloom", bloom_expected_items=5_000)
+                         bloom_expected_items=5_000)
     sc1.seed()
     assert sc1.drain(max_waves=2) == 2  # stop mid-crawl: frontier not drained
     done_dirs = {p.name for p in (root / "url_seen").glob("b*")
@@ -196,7 +193,7 @@ def test_streaming_bloom_gate_rebuilds_across_restart(spark, tmp_path):
 
     # restart: fresh instance, no in-memory bloom; finish the crawl
     sc2 = StreamingCrawl(spark, cfg, root, politeness=pol, n_buckets=4,
-                         seen_filter="bloom", bloom_expected_items=5_000)
+                         bloom_expected_items=5_000)
     assert not sc2.needs_seed()
     sc2.drain(max_waves=20)
     assert done_dirs <= sc2._bloom_dirs  # pre-crash dirs re-ORed on restart

@@ -272,7 +272,15 @@ def main(argv: list[str] | None = None) -> int:
         # the user asked the site for — refuse pre-JVM instead
         print(json.dumps({"error": "--bootstrap-robots is new-crawl only; "
                                    "stream-crawl takes --robots-file (the relation "
-                                   "forms are CrawlStream.budgets_df/rules_df)"}))
+                                   "forms are CrawlEngine.budgets_df/rules_df)"}))
+        return 2
+
+    if args.cmd == "stream-crawl" and os.path.isdir(os.path.join(args.root, "_commits")):
+        # the old stream layout (per-batch dirs + _commits markers): its
+        # _checkpoint offsets would map old batch ids onto new rounds
+        print(json.dumps({"error": f"{args.root} is an old-layout stream root (_commits/ "
+                                   "markers, per-batch dirs); stream-crawl now writes a "
+                                   "snapshot store: start a new root"}))
         return 2
 
     site = settings = None
@@ -322,50 +330,38 @@ def main(argv: list[str] | None = None) -> int:
         args.robots_file = os.path.abspath(args.robots_file)
 
     if args.cmd == "stream-crawl":
-        # crawl-as-stream: the self-feeding Structured Streaming frontier
-        # (resumable: re-running drains whatever is left; committed
-        # micro-batches replay as no-ops)
-        from pathlib import Path
-
+        # crawl-as-stream: each micro-batch of the self-feeding frontier
+        # stream runs one engine round (resumable: re-running drains
+        # whatever is left; committed rounds replay as no-ops)
         from ba_gepris_crawler_spark.streaming.crawl_stream import StreamingCrawl
 
-        # the stream root carries a config.json for the robots-file path
-        # (like the batch store): a flag-less RE-RUN — the stream's resume
-        # path — must keep the same politeness relation, not silently drop
-        # it; a resume-time override is persisted so later re-runs keep it
-        stream_cfg_path = Path(args.root) / "config.json"
-        if not args.robots_file and stream_cfg_path.exists():
-            try:
-                args.robots_file = json.loads(stream_cfg_path.read_text()).get("robots_file")
-            except ValueError as e:
-                print(json.dumps({"error": f"invalid persisted config: {e}"}))
-                return 2
+        # the stream root carries a config.json for the robots-file path:
+        # a flag-less RE-RUN — the stream's resume path — must keep the
+        # same politeness relation, not silently drop it; a resume-time
+        # override is persisted so later re-runs keep it
+        store = SnapshotStore(spark, args.root)
+        try:
+            persisted = store.load_config() or {}
+        except (ValueError, OSError) as e:
+            print(json.dumps({"error": f"invalid persisted config: {e}"}))
+            return 2
+        if not args.robots_file:
+            args.robots_file = persisted.get("robots_file")
         try:
             stream_budgets = _budgets_from(args.robots_file)
         except ValueError as e:
             print(json.dumps({"error": str(e)}))
             return 2
-        Path(args.root).mkdir(parents=True, exist_ok=True)
-        persisted = {}
-        if stream_cfg_path.exists():
-            try:
-                persisted = json.loads(stream_cfg_path.read_text())
-            except ValueError:
-                persisted = {}
         if persisted.get("robots_file") != args.robots_file:
-            stream_cfg_path.write_text(
-                json.dumps({**persisted, "robots_file": args.robots_file})
-            )
-        sc = StreamingCrawl(
-            spark, site, args.root, politeness=settings.politeness,
-            n_buckets=settings.n_buckets, fetch_format=settings.fetch_format,
-            budgets_df=stream_budgets,
-        )
+            store.save_config({**persisted, "robots_file": args.robots_file})
+        engine = CrawlEngine(spark, site, store, settings)
+        engine.budgets_df = stream_budgets
+        sc = StreamingCrawl(engine)
         if sc.needs_seed():
             sc.seed()
         waves = sc.drain(max_waves=args.max_rounds)
-        seen = sc.seen()
-        print(json.dumps({"waves": waves, "seen_total": 0 if seen is None else seen.count()}))
+        latest = sc.store.manifest(sc.store.latest_round())["counters"]
+        print(json.dumps({"waves": waves, "seen_total": latest["seen_total"]}))
         return 0
 
     store = SnapshotStore(spark, args.root)

@@ -17,8 +17,6 @@ so a failed page never blocks the crawl.
 
 from __future__ import annotations
 
-import os
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
@@ -153,7 +151,7 @@ class CrawlEngine:
         self._jar = CookieJar()
 
     # ---------------- state loading ----------------
-    def _prev_state(self, rnd: int) -> tuple[DataFrame, DataFrame]:
+    def _prev_state(self, rnd: int, frontier: DataFrame | None = None) -> tuple[DataFrame, DataFrame]:
         if rnd == 0:
             frontier = FR.seed_frontier(self.spark, self.site)
             if self.seed_urls_df is not None:
@@ -165,7 +163,8 @@ class CrawlEngine:
                 )
             seen = self.spark.createDataFrame([], URL_SEEN_SCHEMA)
         else:
-            frontier = self.store.read_state("frontier", rnd - 1)
+            if frontier is None:
+                frontier = self.store.read_state("frontier", rnd - 1)
             seen = self.store.read_union("url_seen", rnd - 1)
             if seen is None:
                 seen = self.spark.createDataFrame([], URL_SEEN_SCHEMA)
@@ -187,20 +186,12 @@ class CrawlEngine:
         return frontier, seen
 
     # ---------------- one round ----------------
-    def run_round(self, rnd: int) -> dict:
+    def run_round(self, rnd: int, frontier: DataFrame | None = None) -> dict:
+        """Run and commit round `rnd`. `frontier`, when given, stands in for
+        the committed round rnd-1 frontier table (a stream micro-batch
+        passes that table as the file source delivered it)."""
         s = self.s
-        timing = os.environ.get("SPARK_GRAFT_TIMING") == "1"
-        phases: dict[str, float] = {}
-        _t = time.time()
-
-        def _mark(name: str) -> None:
-            nonlocal _t
-            if timing:
-                now = time.time()
-                phases[name] = round(now - _t, 3)
-                _t = now
-
-        frontier_prev, seen = self._prev_state(rnd)
+        frontier_prev, seen = self._prev_state(rnd, frontier)
         recrawl = self._recrawl_df
         if recrawl is not None:
             # staged refetch set (enqueue_recrawl): rows join the frontier,
@@ -271,7 +262,6 @@ class CrawlEngine:
                     seen, expected_items=max(n_seen * 4, s.bloom_expected_items), fpp=s.bloom_fpp, version=rnd
                 )
 
-        _mark('state_bloom')
         # J1: the core frontier anti-join (bloom pre-gate + exact backstop)
         candidates = US.new_urls(frontier_prev, seen, bloom).cache()
         # The frontier written at round k-1 was already anti-joined against
@@ -285,9 +275,11 @@ class CrawlEngine:
         n_candidates = (
             prev_counters.get("frontier_next")
             if prev_counters is not None and prev_counters.get("frontier_exact")
-            # a staged recrawl set changes the candidate count, so the
-            # carried-forward shortcut is stale — take the honest count
+            # a staged recrawl set changes the candidate count, and a
+            # caller-passed frontier is not the table the count describes —
+            # take the honest count
             and recrawl is None
+            and frontier is None
             else None
         )
         if n_candidates is None:
@@ -304,7 +296,6 @@ class CrawlEngine:
                 bloom.unpersist_broadcast()  # never became engine state
             return manifest
 
-        _mark('candidates_count')
         # circuit breaker: candidates of currently-suspended hosts defer
         # (they rejoin the next frontier below, the same non-lossy path as
         # budget-cut overflow); the suspensions relation is committed
@@ -365,7 +356,6 @@ class CrawlEngine:
         docs_stored = self.store.read_state("documents", rnd)
         docs = docs_stored.filter(F.col("status") == 200)
 
-        _mark('fetch_write')
         # ONE stats aggregate (pruned parquet read — never touches spans)
         # feeds the per-partition lineage AND the trace offsets. Stays a
         # DataFrame: only the B-row per-bucket lineage (manifest-bound by
@@ -401,7 +391,6 @@ class CrawlEngine:
             .orderBy("host_bucket")
             .collect()
         )
-        _mark('fetch_stats_collect')
         lineage_rows = [
             {"host_bucket": r["host_bucket"], "fetched": int(r["fetched"]),
              "virtual_cost_sec": float(r["virtual_cost_sec"])}
@@ -464,7 +453,6 @@ class CrawlEngine:
         )
         seen_delta = crawl_log  # url column is what downstream joins use
 
-        _mark('crawl_log_build')
         # link discovery -> next frontier (pruned re-read of the written
         # documents: only spans of 200-rows); the raw discovery count is
         # observed during the frontier write, not a separate job.
@@ -494,14 +482,12 @@ class CrawlEngine:
             pending = FR.merge_frontier(pending, suspended_cand)
         next_frontier = pending.join(seen_after, "url", "left_anti")
 
-        _mark('discover_counts')
         # NB: these two writes are independent, but running them as
         # concurrent jobs measured NEUTRAL-to-WORSE on the steady bench
         # (8-core 4-executor harness: stage interleaving under the shared
         # memory bus) — kept sequential; a real cluster with idle slots
         # could parallelize them via a thread pool like the extract writes.
         tables["url_seen"] = self.store.write_table("url_seen", rnd, seen_delta)
-        _mark('write_seen')
         tables["frontier"] = self.store.write_table("frontier", rnd, next_frontier)
         if s.circuit_breaker is not None:
             # trip evaluation on THIS round's fetches only (fresh evidence;
@@ -529,7 +515,6 @@ class CrawlEngine:
         # observed metric is available now without its own job
         n_discovered_raw = int(disc_obs.get["n"])
 
-        _mark('writes')
         if s.extract:
             from concurrent.futures import ThreadPoolExecutor
 
@@ -570,7 +555,6 @@ class CrawlEngine:
             projects.unpersist()
             details.unpersist()
 
-        _mark('extract')
         n_fetched = tables["url_seen"]  # write-time metadata count
         counters = {
             "round": rnd,
@@ -594,8 +578,6 @@ class CrawlEngine:
         if self.site.session_rounds:
             counters["session_epoch"] = epoch
             counters["cookie_fetches"] = self._jar.fetches
-        if timing:
-            counters["phase_secs"] = phases
         manifest = self.store.commit(rnd, tables, counters, lineage_rows)
         self._recrawl_df = None  # consumed; the tombstone delta is committed
         self._recrawl_validators = None
@@ -733,36 +715,16 @@ class CrawlEngine:
             max_interval=max_interval,
             bootstrap_interval=bootstrap_interval,
         )
-        # last-known frontier metadata per url (deterministic: newest round)
-        meta = ok.groupBy("url").agg(
-            F.max_by(
-                F.struct("host", "resource_type", "resource_id", "crawl_depth", "priority"),
-                F.col("round"),
-            ).alias("m")
-        ).select(
-            "url", "m.host", "m.resource_type", "m.resource_id",
-            F.col("m.crawl_depth").cast("int").alias("crawl_depth"),
-            F.col("m.priority").cast("int").alias("priority"),
-            F.lit(latest + 1).cast("int").alias("discovered_round"),
-        )
-        rows = due_frontier(sched, meta).localCheckpoint(eager=True)
+        rows = due_frontier(sched, _last_known_meta(ok, latest + 1)).localCheckpoint(eager=True)
         n = rows.count()
         if n:
-            # UNION with (never clobber) an already-staged refetch set —
-            # enqueue_error_retries and enqueue_recrawl compose in either
-            # call order; the consuming round refetches both sets
-            self._recrawl_df = (
-                rows
-                if self._recrawl_df is None
-                else self._recrawl_df.unionByName(rows).dropDuplicates(["url"])
-            )
+            self._recrawl_df = _union_staged(self._recrawl_df, rows)
         if n and self.s.revalidate:
             # stage each due URL's content-addressed validator (operators/
             # revalidate.py): one md5 per observation fused into a scan of
             # the same documents union, cut to the |due| set — the refetch
             # sends it as If-None-Match and unchanged pages answer 304.
-            # Unions like _recrawl_df (multi-staging composes); consumed
-            # and cleared by the same run_round.
+            # Consumed and cleared by the same run_round.
             from ba_gepris_crawler_spark.operators.revalidate import validators_df
 
             vals = (
@@ -770,11 +732,7 @@ class CrawlEngine:
                 .join(rows.select("url"), "url")
                 .localCheckpoint(eager=True)
             )
-            self._recrawl_validators = (
-                vals
-                if self._recrawl_validators is None
-                else self._recrawl_validators.unionByName(vals).dropDuplicates(["url"])
-            )
+            self._recrawl_validators = _union_staged(self._recrawl_validators, vals)
         return n
 
     def bootstrap_from_robots(self) -> dict:
@@ -880,26 +838,35 @@ class CrawlEngine:
         )
         # last-known frontier metadata: error rows carry it too (the
         # write-once layout keeps quarantined rows' type/id/depth/priority)
-        meta = docs.groupBy("url").agg(
-            F.max_by(
-                F.struct("host", "resource_type", "resource_id", "crawl_depth", "priority"),
-                F.col("round"),
-            ).alias("m")
-        ).select(
-            "url", "m.host", "m.resource_type", "m.resource_id",
-            F.col("m.crawl_depth").cast("int").alias("crawl_depth"),
-            F.col("m.priority").cast("int").alias("priority"),
-            F.lit(latest + 1).cast("int").alias("discovered_round"),
-        )
-        rows = due_frontier(sched, meta).localCheckpoint(eager=True)
+        rows = due_frontier(sched, _last_known_meta(docs, latest + 1)).localCheckpoint(eager=True)
         n = rows.count()
         if n:
-            self._recrawl_df = (
-                rows
-                if self._recrawl_df is None
-                else self._recrawl_df.unionByName(rows).dropDuplicates(["url"])
-            )
+            self._recrawl_df = _union_staged(self._recrawl_df, rows)
         return n
+
+
+def _last_known_meta(obs: DataFrame, next_round: int) -> DataFrame:
+    """Each url's last-known frontier metadata (deterministic: its newest
+    observed round), as frontier rows discovered at `next_round` — the
+    refetch rows the two stagers hand to due_frontier."""
+    return obs.groupBy("url").agg(
+        F.max_by(
+            F.struct("host", "resource_type", "resource_id", "crawl_depth", "priority"),
+            F.col("round"),
+        ).alias("m")
+    ).select(
+        "url", "m.host", "m.resource_type", "m.resource_id",
+        F.col("m.crawl_depth").cast("int").alias("crawl_depth"),
+        F.col("m.priority").cast("int").alias("priority"),
+        F.lit(next_round).cast("int").alias("discovered_round"),
+    )
+
+
+def _union_staged(staged: DataFrame | None, rows: DataFrame) -> DataFrame:
+    """UNION with (never clobber) an already-staged per-url set —
+    enqueue_error_retries and enqueue_recrawl compose in either call
+    order, and the consuming round refetches both sets."""
+    return rows if staged is None else staged.unionByName(rows).dropDuplicates(["url"])
 
 
 def official_subject_areas(spark: SparkSession) -> DataFrame:

@@ -2,13 +2,20 @@
 drop_traps): open-web frontier hygiene — new design beyond the single-site
 reference, which never faces traps. Pinned here: each heuristic fires on
 its own trap family and never on healthy URLs, the filter is UDF-free, and
-enabling it on the (trap-free) synthetic site changes nothing."""
+enabling it on the (trap-free) synthetic site changes nothing. Also
+pinned: merge_frontier keeps the min-by row per URL."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ba_gepris_crawler_spark.operators.frontier import drop_traps, trap_heuristics
+from ba_gepris_crawler_spark.operators.frontier import (
+    drop_traps,
+    merge_frontier,
+    seed_frontier,
+    trap_heuristics,
+)
+from ba_gepris_crawler_spark.sources.synthetic_site import SiteConfig
 
 HEALTHY = [
     "https://h00.gepris.example.org/gepris/projekt/123?language=en",
@@ -199,3 +206,23 @@ def test_overlong_link_id_dropped_not_ansi_crash(spark):
         rows = fn(docs, cfg, 2).collect()
         assert [r["resource_id"] for r in rows] == ["123"], fn.__name__
         assert rows[0]["resource_type"] == "person"
+
+
+def test_merge_frontier_is_min_by_not_arbitrary(spark):
+    """One frontier union can carry the SAME URL twice (deferred by round
+    k, rediscovered at round k+1) with different depth/priority.
+    merge_frontier must keep the deterministic min-by (crawl_depth,
+    priority, discovered_round) row, whichever part it arrives in — not
+    dropDuplicates' arbitrary row, which makes the budget cut and the
+    persisted crawl_depth run-dependent."""
+    cfg = SiteConfig(hosts=("gepris.example.org",), n_projects=4, n_persons=2,
+                     n_institutions=1, hits_per_page=5, seed=5)
+    one = seed_frontier(spark, cfg).limit(1)
+    stale = (
+        one.withColumn("crawl_depth", F.lit(9))
+        .withColumn("priority", F.lit(7))
+        .withColumn("discovered_round", F.lit(9))
+    )
+    want = one.first()
+    for parts in ((one, stale), (stale, one)):
+        assert merge_frontier(*parts).collect() == [want]

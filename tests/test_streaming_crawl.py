@@ -1,7 +1,8 @@
-"""Streaming crawl (streaming/crawl_stream.py): the self-feeding frontier
-stream must crawl the reachable site to exhaustion and land on the SAME
-seen set / documents as the batch engine (micro-batch boundaries are
-nondeterministic, so trace equality is out of scope by design)."""
+"""Streaming crawl (streaming/crawl_stream.py): every micro-batch of the
+self-feeding frontier stream runs one CrawlEngine.run_round over the same
+snapshot store layout, so the stream must crawl the reachable site to
+exhaustion and land on exactly the batch engine's crawl log — the same
+(url, round, seq, status) rows, not only the same seen set."""
 
 from __future__ import annotations
 
@@ -14,77 +15,106 @@ from ba_gepris_crawler_spark.sources.synthetic_site import SiteConfig
 from ba_gepris_crawler_spark.streaming.crawl_stream import StreamingCrawl
 
 
-def test_streaming_batch_replay_is_crash_safe(spark, tmp_path):
-    """A crash inside a micro-batch (outputs written, commit marker not yet)
-    must not lose the batch's discoveries on replay: uncommitted url_seen
-    dirs are invisible to the anti-join, so the replay fully recomputes and
-    commits. A committed batch short-circuits on replay."""
-    import shutil
+def _settings(pol: PolitenessConfig, n_buckets: int) -> CrawlSettings:
+    return CrawlSettings(n_buckets=n_buckets, politeness=pol, extract=False,
+                         bloom_expected_items=10_000)
 
+
+def _stream(spark, cfg, root, pol, n_buckets) -> StreamingCrawl:
+    return StreamingCrawl(CrawlEngine(spark, cfg, SnapshotStore(spark, root),
+                                      _settings(pol, n_buckets)))
+
+
+def _batch(spark, cfg, root, pol, n_buckets) -> CrawlEngine:
+    return CrawlEngine(spark, cfg, SnapshotStore(spark, root), _settings(pol, n_buckets))
+
+
+def _log(seen) -> list[tuple]:
+    return sorted((r.url, r.round, r.seq, r.status) for r in seen.collect())
+
+
+def _batch_log(eng: CrawlEngine) -> list[tuple]:
+    return _log(eng.store.read_union("url_seen", eng.store.latest_round()))
+
+
+def _round_counts(store: SnapshotStore) -> list[tuple]:
+    return [
+        (c["candidates"], c["fetched"], c.get("frontier_next"))
+        for c in (store.manifest(r)["counters"] for r in store.committed_rounds())
+    ]
+
+
+def test_streaming_batch_replay_is_crash_safe(spark, tmp_path):
+    """Crash safety is the round manifest. A replayed micro-batch whose
+    round lost its manifest re-runs the round and restores the same
+    frontier and url_seen rows; a committed replay is a no-op; a round
+    that crashed after writing its frontier (no manifest, files never in
+    a micro-batch) must not leak those files into the next micro-batch.
+    The stream still drains to the batch engine's crawl log."""
     cfg = SiteConfig(hosts=("gepris.example.org",), n_projects=8, n_persons=4,
                      n_institutions=2, hits_per_page=5, seed=9)
-    pol = PolitenessConfig(per_host_rate=50, round_seconds=1.0)
-    sc = StreamingCrawl(spark, cfg, tmp_path / "s", politeness=pol, n_buckets=4)
+    pol = PolitenessConfig(per_host_rate=6, round_seconds=1.0)
+    sc = _stream(spark, cfg, tmp_path / "s", pol, 4)
+    store = sc.store
     sc.seed()
-    seed_df = spark.read.parquet(str(sc.root / "frontier" / "seed"))
+    assert sc.drain(max_waves=1) == 1
+    assert store.latest_round() == 1
 
-    # manual batch id 100: far from the streaming engine's own 0..n ids,
-    # so the later drain() is not shadowed by this batch's commit marker
-    sc._process_batch(seed_df, 100)
-    assert sc._marker(100).exists()
-    feed_files = sorted(p.name for p in (sc.root / "frontier" / "b00100").glob("*.parquet"))
-    assert feed_files  # the seeds discovered something
+    def rows(table, rnd):
+        return sorted(tuple(r) for r in store.read_state(table, rnd).collect())
 
-    # simulate the crash window: url_seen written, feed + marker lost
-    sc._marker(100).unlink()
-    shutil.rmtree(sc.root / "frontier" / "b00100")
-    assert sc.seen() is None  # uncommitted batch is invisible
+    frontier1, seen1 = rows("frontier", 1), rows("url_seen", 1)
+    assert frontier1  # mid-crawl: round 1 left work behind
 
-    sc._process_batch(seed_df, 100)  # the replay
-    assert sc._marker(100).exists()
-    assert (sc.root / "frontier" / "b00100").exists()  # discoveries restored
-    assert sc.seen().count() == seed_df.count()
+    # the crash window: round 1's data on disk, its manifest lost
+    store.manifest_path(1).unlink()
+    sc._process_batch(store.read_state("frontier", 0), 0)  # replay batch 0
+    assert store.latest_round() == 1
+    assert rows("frontier", 1) == frontier1
+    assert rows("url_seen", 1) == seen1
 
-    # committed replay short-circuits: outputs untouched
-    before = sorted(p.name for p in (sc.root / "url_seen" / "b00100").glob("*.parquet"))
-    sc._process_batch(seed_df, 100)
-    after = sorted(p.name for p in (sc.root / "url_seen" / "b00100").glob("*.parquet"))
-    assert before == after
+    # committed replay: nothing rewritten
+    before = sorted(p.name for p in store.table_path("url_seen", 1).glob("*.parquet"))
+    sc._process_batch(store.read_state("frontier", 0), 0)
+    assert sorted(p.name for p in store.table_path("url_seen", 1).glob("*.parquet")) == before
 
-    # and the stream still drains to the full site afterwards
-    waves = sc.drain(max_waves=20)
-    assert waves >= 1
-    n_urls = sc.seen().count()
-    assert n_urls > seed_df.count()
-    assert n_urls == sc.seen().select("url").distinct().count()
+    # round 2 crashed after its writes: frontier files with no manifest
+    sc.engine.run_round(2)
+    assert store.read_state("frontier", 2).count() > 0
+    store.manifest_path(2).unlink()
+
+    sc.drain(max_waves=20)
+    batch = _batch(spark, cfg, tmp_path / "b", pol, 4)
+    batch.run(max_rounds=30)
+    assert _log(sc.seen()) == _batch_log(batch)
+    # same candidates every round: the stream stops one round before the
+    # batch engine's empty done round
+    assert _round_counts(store) == _round_counts(batch.store)[:-1]
 
 
 def test_seed_gate_ignores_uncommitted_seed_debris(spark, tmp_path):
-    """A crashed seed write (parquet debris, no _SUCCESS marker) must NOT
-    satisfy the seed gate — ADVICE r2: the old any-*.parquet glob matched
-    leftover part files and drained an empty stream reporting seen_total 0."""
+    """Round-0 data without a round-0 manifest is debris of a crashed
+    seed: needs_seed() stays True until the seed round commits, and the
+    re-run overwrites the debris."""
     cfg = SiteConfig(hosts=("gepris.example.org",), n_projects=4, n_persons=2,
                      n_institutions=1, hits_per_page=5, seed=1)
-    sc = StreamingCrawl(spark, cfg, tmp_path / "s", n_buckets=2)
+    sc = _stream(spark, cfg, tmp_path / "s", PolitenessConfig(), 2)
     assert sc.needs_seed()
 
-    # simulate the crash window: a part file landed, the commit marker didn't
-    debris = sc.root / "frontier" / "seed"
-    debris.mkdir(parents=True, exist_ok=True)
+    debris = sc.store.table_path("frontier", 0)
+    debris.mkdir(parents=True)
     (debris / "part-00000-crashed.snappy.parquet").write_bytes(b"\x00")
-    assert sc.needs_seed()  # glob would say False here — the bug
+    assert sc.needs_seed()
 
-    sc.seed()  # overwrite replaces the debris and commits
+    sc.seed()
     assert not sc.needs_seed()
-    assert spark.read.parquet(str(debris)).count() > 0
+    assert sc.store.read_state("frontier", 0).count() > 0
 
 
 def test_streaming_session_gated_site_matches_batch(spark, tmp_path):
-    """Session-gated site (session_rounds > 0): the stream threads a driver
-    CookieJar token + a batch-id-derived epoch into fetch_pages (ADVICE r2 —
-    previously every partition of every micro-batch paid the worker-side 401
-    refresh and the epoch was pinned to 0). The jar must be hit once per
-    epoch, and the final seen set / documents must equal the batch engine's."""
+    """Session-gated site (session_rounds > 0): the engine's CookieJar is
+    hit once per epoch, and the stream's crawl log equals the batch
+    engine's, with no stale-session 401 on either side."""
     cfg = SiteConfig(
         hosts=("gepris.example.org",),
         n_projects=10, n_persons=5, n_institutions=2,
@@ -92,37 +122,26 @@ def test_streaming_session_gated_site_matches_batch(spark, tmp_path):
     )
     pol = PolitenessConfig(per_host_rate=40, round_seconds=1.0)
 
-    sc = StreamingCrawl(spark, cfg, tmp_path / "stream", politeness=pol, n_buckets=4)
+    sc = _stream(spark, cfg, tmp_path / "stream", pol, 4)
     sc.seed()
-    waves = sc.drain(max_waves=20)
-    assert waves > 1
+    assert sc.drain(max_waves=20) > 1
 
-    # the driver jar was actually consulted, exactly once per distinct epoch
-    assert sc._jar.fetches >= 1
-    assert sc._jar.fetches == len(sc._jar._cache)
+    jar = sc.engine._jar
+    assert jar.fetches >= 1
+    assert jar.fetches == len(jar._cache)
 
-    store = SnapshotStore(spark, tmp_path / "batch")
-    CrawlEngine(
-        spark, cfg, store,
-        CrawlSettings(n_buckets=4, politeness=pol, extract=False),
-    ).run(max_rounds=30)
-
-    batch_seen = {
-        (r.url, r.status)
-        for r in store.read_union("url_seen", store.latest_round()).collect()
-    }
-    stream_seen = {(r.url, r.status) for r in sc.seen().collect()}
-    assert stream_seen == batch_seen
-    # no stale-session 401s leaked into the final state on either side
-    assert all(st != 401 for _, st in stream_seen)
+    batch = _batch(spark, cfg, tmp_path / "batch", pol, 4)
+    batch.run(max_rounds=30)
+    stream_log = _log(sc.seen())
+    assert stream_log == _batch_log(batch)
+    assert all(st != 401 for *_, st in stream_log)
 
 
 def test_streaming_crawl_matches_batch_seen_set(spark, tmp_path):
-    """The stream runs the SAME crawl as the batch engine through the
-    incremental bloom pre-gate + exact backstop (derived from committed
-    batch dirs): identical final state, every url fetched exactly once — a
-    bloom false NEGATIVE (impossible for inserted committed dirs) would
-    show up here as a duplicate fetch."""
+    """The stream and the batch engine run the same rounds over the same
+    frontier tables, so their crawl logs are equal row for row on
+    (url, round, seq, status), including quarantined errors, every url is
+    fetched exactly once, and the documents are the same."""
     cfg = SiteConfig(
         hosts=("gepris.example.org", "alt1.example.org"),
         n_projects=15, n_persons=8, n_institutions=3,
@@ -131,50 +150,32 @@ def test_streaming_crawl_matches_batch_seen_set(spark, tmp_path):
     )
     pol = PolitenessConfig(per_host_rate=40, round_seconds=1.0, max_in_flight=5)
 
-    sc = StreamingCrawl(spark, cfg, tmp_path / "stream", politeness=pol, n_buckets=8,
-                        bloom_expected_items=10_000)
+    sc = _stream(spark, cfg, tmp_path / "stream", pol, 8)
     sc.seed()
     waves = sc.drain(max_waves=20)
     assert 1 < waves <= 20  # discovery actually fed the stream back
-    # the gate really ran: bitmap built and every committed url_seen
-    # batch dir inserted exactly once
-    assert sc._bloom is not None
-    assert sc._bloom_dirs == {
-        p.name for p in (sc.root / "url_seen").glob("b*")
-        if (sc.root / "_commits" / p.name).exists()
-    }
+    assert sc.engine._bloom is not None  # the bloom gate ran
 
-    store = SnapshotStore(spark, tmp_path / "batch")
-    CrawlEngine(
-        spark, cfg, store,
-        CrawlSettings(n_buckets=8, politeness=pol, extract=False),
-    ).run(max_rounds=30)
-
-    batch_seen = {
-        (r.url, r.status)
-        for r in store.read_union("url_seen", store.latest_round()).collect()
-    }
-    stream_seen = {(r.url, r.status) for r in sc.seen().collect()}
-    assert stream_seen == batch_seen
-    # each url fetched exactly once in the stream too
-    n = sc.seen().count()
-    assert n == sc.seen().select("url").distinct().count()
+    batch = _batch(spark, cfg, tmp_path / "batch", pol, 8)
+    batch.run(max_rounds=30)
+    stream_log = _log(sc.seen())
+    assert stream_log == _batch_log(batch)
+    assert len(stream_log) == len({u for u, *_ in stream_log})
 
     batch_docs = {
         r.doc_id
-        for r in store.read_union("documents", store.latest_round())
+        for r in batch.store.read_union("documents", batch.store.latest_round())
         .filter(F.col("status") == 200).collect()
     }
     stream_docs = {r.doc_id for r in sc.documents().filter(F.col("status") == 200).collect()}
     assert stream_docs == batch_docs
 
 
-def test_streaming_bloom_gate_rebuilds_across_restart(spark, tmp_path):
-    """The stream's bloom pre-gate is DERIVED state: a process restart
-    mid-crawl (new StreamingCrawl instance, empty in-memory bitmap) must
-    rebuild it from the committed url_seen batch dirs and finish the crawl
-    with the same final state — a rebuild false negative would refetch a
-    seen URL and show up as a duplicate."""
+def test_streaming_restart_resumes_from_committed_rounds(spark, tmp_path):
+    """A process restart mid-crawl (a new engine with no in-memory bloom)
+    continues from the committed rounds: the engine reloads the persisted
+    bitmap, no URL is fetched twice, and the final crawl log equals an
+    uninterrupted batch crawl's."""
     cfg = SiteConfig(
         hosts=("gepris.example.org",),
         n_projects=12, n_persons=6, n_institutions=2,
@@ -183,40 +184,29 @@ def test_streaming_bloom_gate_rebuilds_across_restart(spark, tmp_path):
     pol = PolitenessConfig(per_host_rate=30, round_seconds=1.0, max_in_flight=5)
     root = tmp_path / "stream"
 
-    sc1 = StreamingCrawl(spark, cfg, root, politeness=pol, n_buckets=4,
-                         bloom_expected_items=5_000)
+    sc1 = _stream(spark, cfg, root, pol, 4)
     sc1.seed()
-    assert sc1.drain(max_waves=2) == 2  # stop mid-crawl: frontier not drained
-    done_dirs = {p.name for p in (root / "url_seen").glob("b*")
-                 if (root / "_commits" / p.name).exists()}
-    assert done_dirs  # some batches committed before the "crash"
+    assert sc1.drain(max_waves=1) == 1  # stop mid-crawl: frontier not drained
+    assert not sc1._finished()
 
-    # restart: fresh instance, no in-memory bloom; finish the crawl
-    sc2 = StreamingCrawl(spark, cfg, root, politeness=pol, n_buckets=4,
-                         bloom_expected_items=5_000)
+    sc2 = _stream(spark, cfg, root, pol, 4)
     assert not sc2.needs_seed()
+    assert sc2.engine._bloom is None
     sc2.drain(max_waves=20)
-    assert done_dirs <= sc2._bloom_dirs  # pre-crash dirs re-ORed on restart
+    assert sc2.engine._bloom is not None
+    assert sc2._finished()
 
-    seen = sc2.seen()
-    assert seen.count() == seen.select("url").distinct().count()  # no refetch
-
-    # same final seen set as an uninterrupted batch crawl
-    store = SnapshotStore(spark, tmp_path / "batch")
-    CrawlEngine(
-        spark, cfg, store,
-        CrawlSettings(n_buckets=4, politeness=pol, extract=False),
-    ).run(max_rounds=30)
-    batch_seen = {r.url for r in store.read_union("url_seen", store.latest_round()).collect()}
-    assert {r.url for r in seen.collect()} == batch_seen
+    stream_log = _log(sc2.seen())
+    assert len(stream_log) == len({u for u, *_ in stream_log})  # no refetch
+    batch = _batch(spark, cfg, tmp_path / "batch", pol, 4)
+    batch.run(max_rounds=30)
+    assert stream_log == _batch_log(batch)
 
 
 def test_streaming_budgets_relation_matches_batch(spark, tmp_path):
-    """The budgets RELATION (web-scale Crawl-delay) in the STREAM: a
-    streamed crawl throttled by crawl_delay_budgets rows must land on the
-    same final seen set / documents as the batch engine running the same
-    relation, every url fetched exactly once, and the throttle must have
-    actually bound in some micro-batch."""
+    """The budgets RELATION (web-scale Crawl-delay) set on the streamed
+    engine: same crawl log as the batch engine running the same relation,
+    and the throttle actually bound in some round."""
     from ba_gepris_crawler_spark.operators.politeness import crawl_delay_budgets
 
     cfg = SiteConfig(
@@ -229,96 +219,53 @@ def test_streaming_budgets_relation_matches_batch(spark, tmp_path):
         [("slow.example.org", "User-agent: *\nCrawl-delay: 0.2\n")],  # budget 5
         "host string, robots_txt string")
 
-    sc = StreamingCrawl(spark, cfg, tmp_path / "stream", politeness=pol, n_buckets=8,
-                        budgets_df=crawl_delay_budgets(robots, pol))
+    sc = _stream(spark, cfg, tmp_path / "stream", pol, 8)
+    sc.engine.budgets_df = crawl_delay_budgets(robots, pol)
     sc.seed()
-    waves = sc.drain(max_waves=40)
-    assert 1 < waves <= 40
+    assert 1 < sc.drain(max_waves=40) <= 40
 
-    store = SnapshotStore(spark, tmp_path / "batch")
-    eng = CrawlEngine(spark, cfg, store,
-                      CrawlSettings(n_buckets=8, politeness=pol, extract=False))
-    eng.budgets_df = crawl_delay_budgets(robots, pol)
-    eng.run(max_rounds=40)
+    batch = _batch(spark, cfg, tmp_path / "batch", pol, 8)
+    batch.budgets_df = crawl_delay_budgets(robots, pol)
+    batch.run(max_rounds=40)
+    assert _log(sc.seen()) == _batch_log(batch)
 
-    batch_seen = {(r.url, r.status)
-                  for r in store.read_union("url_seen", store.latest_round()).collect()}
-    stream_seen = {(r.url, r.status) for r in sc.seen().collect()}
-    assert stream_seen == batch_seen
-    assert sc.seen().count() == sc.seen().select("url").distinct().count()
-
-    # the relation budget actually bound: no stream batch fetched more
-    # than 5 slow-host pages, and at least one batch hit exactly 5
+    # no round fetched more than 5 slow-host pages, and one hit exactly 5
     per = sc.seen().filter(F.col("host") == "slow.example.org") \
         .groupBy("round").count().collect()
     assert per and all(r["count"] <= 5 for r in per)
     assert any(r["count"] == 5 for r in per)
 
 
-def test_stream_merge_is_min_by_not_arbitrary(spark, tmp_path):
-    """One micro-batch can read the SAME URL from several feed files
-    (deferred by batch k, discovered by batch k+1) with different
-    depth/priority. The stream must keep the deterministic min-by
-    (crawl_depth, priority, discovered_round) row — the batch engine's
-    merge_frontier invariant — not dropDuplicates' arbitrary row, which
-    makes the budget cut and the persisted crawl_depth run-dependent
-    (review r5 #4)."""
-    cfg = SiteConfig(hosts=("gepris.example.org",), n_projects=4, n_persons=2,
-                     n_institutions=1, hits_per_page=5, seed=5)
-    sc = StreamingCrawl(spark, cfg, tmp_path / "s", n_buckets=2)
-    sc.seed()
-    seed_df = spark.read.parquet(str(sc.root / "frontier" / "seed"))
-    one = seed_df.limit(1)
-    # the same URL arriving twice: a stale high-depth copy and the fresh one
-    batch = one.unionByName(
-        one.withColumn("crawl_depth", F.lit(9))
-        .withColumn("priority", F.lit(7))
-        .withColumn("discovered_round", F.lit(9))
-    )
-    sc._process_batch(batch, 100)
-    rows = spark.read.parquet(str(sc.root / "documents" / "b00100")).select(
-        "url", "crawl_depth", "priority"
-    ).collect()
-    assert len(rows) == 1  # merged, not fetched twice
-    want = one.select("crawl_depth", "priority").first()
-    assert (rows[0].crawl_depth, rows[0].priority) == (want.crawl_depth, want.priority)
-
-
 def test_stream_stale_feed_removed_on_empty_replay(spark, tmp_path):
-    """The frontier feed is the stream's only conditionally-written output.
-    A crash after feed.write but before the commit marker, followed by a
-    replay that recomputes an EMPTY feed (a real transport can answer 5xx
-    where the crashed attempt saw 200), must REMOVE the stale feed dir at
-    commit — otherwise the next wave injects URLs whose discovering fetch
-    officially never happened (review r5 #3)."""
-    cfg = SiteConfig(hosts=("gepris.example.org",), n_projects=4, n_persons=2,
-                     n_institutions=1, hits_per_page=5, seed=6)
+    """A round whose manifest was lost re-runs on replay and rewrites its
+    frontier table with overwrite: a replay that discovers nothing (a real
+    transport can answer 404 where the lost attempt saw 200) must leave an
+    EMPTY round frontier, not the lost attempt's discoveries."""
+    cfg = SiteConfig(hosts=("gepris.example.org",), n_projects=8, n_persons=4,
+                     n_institutions=2, hits_per_page=5, seed=6)
     pol = PolitenessConfig(per_host_rate=50, round_seconds=1.0)
-    sc = StreamingCrawl(spark, cfg, tmp_path / "s", politeness=pol, n_buckets=2)
+    sc = _stream(spark, cfg, tmp_path / "s", pol, 2)
+    store = sc.store
     sc.seed()
-    seed_df = spark.read.parquet(str(sc.root / "frontier" / "seed"))
+    assert sc.drain(max_waves=1) == 1
+    assert store.read_state("frontier", 1).count() > 0  # attempt 1 discovered
+    store.manifest_path(1).unlink()
 
-    sc._process_batch(seed_df, 100)  # attempt 1: discoveries -> feed written
-    feed_dir = sc.root / "frontier" / "b00100"
-    assert feed_dir.exists()
-    sc._marker(100).unlink()  # crash window: feed on disk, marker lost
-
-    # the replay's "network" now 404s everything: same batch ids, but the
-    # recomputed feed is empty (no 200s to discover from, budget >> rows)
-    bogus = seed_df.withColumn(
+    # the replay's "network" now 404s everything (budget >> rows)
+    bogus = store.read_state("frontier", 0).withColumn(
         "url", F.concat(F.lit("https://gepris.example.org/nope/"), F.col("url"))
     )
-    sc._process_batch(bogus, 100)
-    assert sc._marker(100).exists()
-    assert not feed_dir.exists()  # stale feed did not survive the commit
-    stored = spark.read.parquet(str(sc.root / "documents" / "b00100"))
-    assert stored.filter(F.col("status") == 200).count() == 0
+    sc._process_batch(bogus, 0)
+    assert store.latest_round() == 1
+    assert store.read_state("frontier", 1).count() == 0
+    assert store.read_state("documents", 1).filter(F.col("status") == 200).count() == 0
+    assert sc._finished()
 
 
 def test_streaming_rules_relation_matches_batch(spark, tmp_path):
-    """The robots RULES relation in the STREAM: a streamed crawl under a
-    Disallow must land on the same final seen set as the batch engine
-    running the same relation — and the disallowed path never appears."""
+    """The robots RULES relation set on the streamed engine: same crawl
+    log as the batch engine running the same relation, and the disallowed
+    path never appears."""
     from ba_gepris_crawler_spark.operators.politeness import (
         parse_robots_rules_distributed,
     )
@@ -334,20 +281,53 @@ def test_streaming_rules_relation_matches_batch(spark, tmp_path):
         "host string, robots_txt string")
     rules = parse_robots_rules_distributed(robots)
 
-    sc = StreamingCrawl(spark, cfg, tmp_path / "stream-r", politeness=pol,
-                        n_buckets=8, rules_df=rules)
+    sc = _stream(spark, cfg, tmp_path / "stream-r", pol, 8)
+    sc.engine.rules_df = rules
     sc.seed()
     assert 1 < sc.drain(max_waves=40) <= 40
 
-    store = SnapshotStore(spark, tmp_path / "batch-r")
-    eng = CrawlEngine(spark, cfg, store,
-                      CrawlSettings(n_buckets=8, politeness=pol, extract=False))
-    eng.rules_df = rules
-    eng.run(max_rounds=40)
+    batch = _batch(spark, cfg, tmp_path / "batch-r", pol, 8)
+    batch.rules_df = rules
+    batch.run(max_rounds=40)
+    stream_log = _log(sc.seen())
+    assert stream_log == _batch_log(batch)
+    assert not any("ruled.example.org/gepris/person/" in u for u, *_ in stream_log)
+    assert any("free.example.org/gepris/person/" in u for u, *_ in stream_log)
 
-    batch_seen = {(r.url, r.status)
-                  for r in store.read_union("url_seen", store.latest_round()).collect()}
-    stream_seen = {(r.url, r.status) for r in sc.seen().collect()}
-    assert stream_seen == batch_seen
-    assert not any("ruled.example.org/gepris/person/" in u for u, _ in stream_seen)
-    assert any("free.example.org/gepris/person/" in u for u, _ in stream_seen)
+
+def test_stream_crawl_cli_honors_circuit_breaker(spark, tmp_path, capsys):
+    """`stream-crawl --circuit-breaker` reaches the engine: half the
+    detail pages answer 503, so the one host trips the breaker and a
+    committed round records the suspension."""
+    import json as _json
+
+    from ba_gepris_crawler_spark.cli import main as cli_main
+
+    root = tmp_path / "stream-cb"
+    assert cli_main([
+        "stream-crawl", str(root), "--hosts", "1", "--projects", "8",
+        "--error-mod", "2", "--circuit-breaker", "--buckets", "4", "--max-rounds", "4",
+    ]) == 0
+    out = [_json.loads(l) for l in capsys.readouterr().out.splitlines() if l.startswith("{")]
+    assert out[-1]["waves"] >= 1
+    store = SnapshotStore(None, root)
+    suspended = [store.manifest(r)["counters"]["hosts_suspended"]
+                 for r in store.committed_rounds()]
+    assert any(n > 0 for n in suspended)
+
+
+def test_stream_crawl_cli_refuses_old_layout_root(tmp_path, capsys):
+    """A stream root of the old layout (`_commits/` markers) holds
+    `_checkpoint` offsets that would map old batch ids onto new rounds:
+    stream-crawl refuses it with a JSON error, exit 2, before Spark starts
+    and without creating a snapshot store there. Pure Python: no Spark."""
+    import json as _json
+
+    from ba_gepris_crawler_spark.cli import main as cli_main
+
+    root = tmp_path / "old-stream"
+    (root / "_commits").mkdir(parents=True)
+    assert cli_main(["stream-crawl", str(root)]) == 2
+    err = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])["error"]
+    assert "_commits" in err
+    assert not (root / "manifests").exists()

@@ -1,13 +1,19 @@
 """spark-submit entry point — the reference's scopt CLI re-expressed
-(App.scala:16-67): new-crawl / resume-crawl / dq / export.
+(App.scala:16-67): new-crawl / resume-crawl / stream-crawl / recrawl /
+retry-errors, plus dq / export / analyze / compact / gc over a store.
 
 Deploy (spark-submit takes a primary FILE, it has no -m module flag):
   spark-submit --py-files ba_gepris_crawler_spark.zip ba_gepris_crawler_spark/cli.py new-crawl /data/crawl1
 or locally:
   python -m ba_gepris_crawler_spark.cli new-crawl /tmp/crawl1 --hosts 4 --projects 1000
 
-Unlike the reference (stage-directory heuristics, GeprisCrawler.scala:31-38)
-resume is manifest-driven and deterministic mid-round.
+A crawl folder describes itself. new-crawl (and the first stream-crawl of
+a root) writes config.json through `_create_crawl`; every command that
+continues a crawl replays it through `_open_crawl`, so site flags never
+change a running crawl. Unlike the reference (stage-directory heuristics,
+GeprisCrawler.scala:31-38) resume is manifest-driven and deterministic
+mid-round. Every refusal raises CliError, which `main` prints as one
+{"error": ...} JSON line with exit code 2.
 """
 
 from __future__ import annotations
@@ -16,7 +22,9 @@ import argparse
 import json
 import os
 import sys
+from contextlib import contextmanager
 from dataclasses import asdict
+from pathlib import Path
 
 from ba_gepris_crawler_spark.operators.politeness import PolitenessConfig
 from ba_gepris_crawler_spark.plans import dq
@@ -30,47 +38,75 @@ from ba_gepris_crawler_spark.plans.round_loop import (
 from ba_gepris_crawler_spark.session import get_spark
 from ba_gepris_crawler_spark.sources.synthetic_site import SiteConfig
 
+# `compact` follows the round loop's policy: url_seen gets the full
+# hash-clustered rewrite (the anti-join layout), documents the tiered one
+# (each span payload rewritten O(log n) times). Typed tables are never
+# compacted: their per-round dirs are the provenance the latest-version
+# views (`--current`, analyze) resolve versions from.
+_COMPACTION = {"url_seen": ("compact", "url"), "documents": ("compact_tiered", "doc_id")}
 
-def _site(args: argparse.Namespace) -> SiteConfig:
-    return SiteConfig(
+
+class CliError(Exception):
+    """A refusal: `main` prints it as one {"error": ...} JSON line, exit 2."""
+
+
+@contextmanager
+def _refusals():
+    """ValueErrors raised inside — config dataclass validation, the
+    engine's refusals (e.g. resume of a crawl whose budgets relation is
+    gone) — leave as CliError."""
+    try:
+        yield
+    except ValueError as e:
+        raise CliError(str(e)) from None
+
+
+def _flag_config(args: argparse.Namespace) -> dict:
+    """The config.json a crawl created from these flags persists. The
+    dataclasses validate the flag values (e.g. --rate 0) before Spark."""
+    site = SiteConfig(
         hosts=tuple(f"h{i:02d}.gepris.example.org" for i in range(args.hosts)),
         n_projects=args.projects,
         n_persons=int(args.projects * 0.4),
         n_institutions=max(int(args.projects * 0.1), 1),
         hits_per_page=50,
         seed=args.seed,
-        error_mod=getattr(args, "error_mod", 0),
+        error_mod=args.error_mod,
     )
-
-
-def _settings(args: argparse.Namespace) -> CrawlSettings:
-    return CrawlSettings(
+    settings = CrawlSettings(
         n_buckets=args.buckets,
         politeness=PolitenessConfig(
             per_host_rate=args.rate,
-            round_seconds=getattr(args, "round_seconds", 1.0),
+            round_seconds=args.round_seconds,
             max_in_flight=args.in_flight,
         ),
-        fetch_format=getattr(args, "fetch_format", "html"),
-        circuit_breaker={} if getattr(args, "circuit_breaker", False) else None,
+        fetch_format=args.fetch_format,
+        circuit_breaker={} if args.circuit_breaker else None,
     )
+    return {
+        "site": {**asdict(site), "hosts": list(site.hosts)},
+        "politeness": asdict(settings.politeness),
+        "n_buckets": settings.n_buckets,
+        "fetch_format": settings.fetch_format,
+        "circuit_breaker": settings.circuit_breaker,
+        "bootstrap_robots": args.bootstrap_robots,
+        "robots_file": args.robots_file,
+    }
 
 
-def _rebuild_from_config(
-    cfg: dict, fallback: CrawlSettings | None = None
-) -> tuple[SiteConfig, CrawlSettings]:
-    """Persisted config.json -> (site, settings). A crawl folder is
-    self-describing: replaying anything else would 404 every frontier URL
-    and poison the seen set. Raises ValueError/TypeError/KeyError on a
-    hand-edited/corrupt config (callers map to the JSON-error contract)."""
-    fb = fallback or CrawlSettings()
+def _rebuild_from_config(cfg: dict) -> tuple[SiteConfig, CrawlSettings]:
+    """config.json -> (site, settings), the one reader of the schema
+    `_flag_config` writes. Keys a newer config no longer carries are
+    ignored, keys an older one lacks take the dataclass defaults. Raises
+    ValueError/TypeError/KeyError on a hand-edited/corrupt config."""
     sc = dict(cfg["site"])
     sc["hosts"] = tuple(sc["hosts"])
     sc["disallow"] = tuple(tuple(x) for x in sc.get("disallow", ()))
     site = SiteConfig(**{k: v for k, v in sc.items() if k in SiteConfig.__dataclass_fields__})
     pol = dict(cfg["politeness"])
-    pol["disallow"] = tuple(tuple(x) for x in pol.get("disallow", ()))
-    pol["host_rates"] = tuple(tuple(x) for x in pol.get("host_rates", ()))
+    for k in ("disallow", "host_rates", "robots_rules"):
+        pol[k] = tuple(tuple(x) for x in pol.get(k, ()))
+    fb = CrawlSettings()
     settings = CrawlSettings(
         n_buckets=cfg.get("n_buckets", fb.n_buckets),
         politeness=PolitenessConfig(**pol),
@@ -95,7 +131,92 @@ def _cb_from(cb) -> dict | None:
     return cb
 
 
-def main(argv: list[str] | None = None) -> int:
+def _load_config(store: SnapshotStore) -> dict | None:
+    try:
+        return store.load_config()  # a truncated file is a JSONDecodeError (ValueError)
+    except (ValueError, OSError) as e:
+        raise CliError(f"invalid persisted config: {e}") from None
+
+
+def _budgets_from(spark, path: str | None, politeness: PolitenessConfig):
+    """(host, robots_txt) file -> budgets relation, or None. Reads parquet
+    first (a parquet DIRECTORY rarely ends in .parquet), falling back to
+    JSON-lines; columns are cast to string so a mis-typed field fails
+    here, not as a Py4J traceback deep inside a fetch round."""
+    if not path:
+        return None
+    from pyspark.sql import functions as F
+
+    from ba_gepris_crawler_spark.operators.politeness import crawl_delay_budgets
+
+    try:
+        bodies = spark.read.parquet(path)
+    except Exception:
+        try:
+            bodies = spark.read.json(path)
+        except Exception as e:  # missing/corrupt file
+            raise CliError(f"cannot read --robots-file {path}: {e}") from None
+    missing = {"host", "robots_txt"} - set(bodies.columns)
+    if missing:
+        raise CliError(f"--robots-file {path} lacks columns {sorted(missing)}")
+    bodies = bodies.select(
+        F.col("host").cast("string").alias("host"),
+        F.col("robots_txt").cast("string").alias("robots_txt"),
+    )
+    return crawl_delay_budgets(bodies, politeness)
+
+
+def _engine(spark, store: SnapshotStore, cfg: dict, robots_file: str | None) -> CrawlEngine:
+    """The engine a config describes, with the robots file's budgets."""
+    try:
+        site, settings = _rebuild_from_config(cfg)
+    except (ValueError, TypeError, KeyError) as e:
+        raise CliError(f"invalid persisted config: {e}") from None
+    engine = CrawlEngine(spark, site, store, settings)
+    engine.budgets_df = _budgets_from(spark, robots_file, settings.politeness)
+    return engine
+
+
+def _create_crawl(spark, store: SnapshotStore, cfg: dict) -> CrawlEngine:
+    """Create path: validate the robots file, THEN write config.json — a
+    typo'd path must not leave a store whose config names an unreadable
+    file."""
+    engine = _engine(spark, store, cfg, cfg["robots_file"])
+    store.save_config(cfg)
+    return engine
+
+
+def _open_crawl(
+    spark, store: SnapshotStore, robots_file: str | None = None, cfg: dict | None = None
+) -> CrawlEngine:
+    """Open path of every command that continues a crawl: replay the
+    store's config.json (`cfg`, when the caller already loaded it). Site
+    and settings never come from flags — another site would 404 every
+    frontier URL and poison the seen set. The budgets and rules relations
+    are data, not config, so they are rebuilt: from the persisted robots
+    file, or by re-fetching the site's robots.txt for a --bootstrap-robots
+    crawl. A `robots_file` override persists only after it validates, so
+    the next flag-less command keeps it and a typo never breaks one."""
+    cfg = cfg or _load_config(store)
+    if cfg is None:
+        raise CliError(f"no persisted config.json in {store.root}: a crawl "
+                       "replays its own site/politeness")
+    engine = _engine(spark, store, cfg, robots_file or cfg.get("robots_file"))
+    if robots_file and robots_file != cfg.get("robots_file"):
+        store.save_config({**cfg, "robots_file": robots_file})
+    if engine.budgets_df is None and cfg.get("bootstrap_robots"):
+        engine.bootstrap_from_robots()
+        engine.seed_urls_df = None  # seeds are a round-0 concern only
+    return engine
+
+
+def _print_counters(manifests: list[dict]) -> int:
+    for m in manifests:
+        print(json.dumps(m["counters"]))
+    return 0
+
+
+def _parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="ba-gepris-crawler-spark")
     sub = p.add_subparsers(dest="cmd", required=True)
     for name in ("new-crawl", "resume-crawl", "stream-crawl"):
@@ -206,9 +327,14 @@ def main(argv: list[str] | None = None) -> int:
              "the store's current corpus; <root> still anchors the default "
              "output dir",
     )
-    k = sub.add_parser("compact", help="merge delta dirs of the given tables into hash-clustered snapshots")
+    k = sub.add_parser(
+        "compact",
+        help="compact url_seen (full hash-clustered rewrite) and documents "
+             "(tiered) through the latest round, as the round loop does",
+    )
     k.add_argument("root")
-    k.add_argument("--tables", nargs="+", default=["url_seen", "documents"])
+    k.add_argument("--tables", nargs="+", choices=list(_COMPACTION),
+                   default=list(_COMPACTION))
     k.add_argument("--buckets", type=int, default=32)
     e = sub.add_parser("export")
     e.add_argument("root")
@@ -229,18 +355,26 @@ def main(argv: list[str] | None = None) -> int:
     g.add_argument("--keep-compactions", dest="keep_compactions", type=int, default=1,
                    help="newest compaction manifests to retain per table (rewind fallback targets)")
     g.add_argument("--dry-run", dest="dry_run", action="store_true")
-    args = p.parse_args(argv)
+    return p
 
+
+def main(argv: list[str] | None = None) -> int:
+    args = _parser().parse_args(argv)
+    try:
+        return _run(args)
+    except CliError as e:
+        print(json.dumps({"error": str(e)}))
+        return 2
+
+
+def _run(args: argparse.Namespace) -> int:
     if args.cmd in ("gc", "compact", "export", "dq", "resume-crawl", "recrawl",
                     "retry-errors", "analyze"):
         # these operate on an EXISTING store; constructing one would mkdir
         # a skeleton at a mistyped path and report clean-looking empty
         # results — refuse pre-JVM instead (new-/stream-crawl create)
-        from pathlib import Path as _P
-
-        if not (_P(args.root) / "manifests").is_dir():
-            print(json.dumps({"error": f"not a snapshot store (no manifests dir): {args.root}"}))
-            return 2
+        if not (Path(args.root) / "manifests").is_dir():
+            raise CliError(f"not a snapshot store (no manifests dir): {args.root}")
 
     if args.cmd == "gc":
         # pure filesystem maintenance — no SparkSession needed
@@ -267,231 +401,84 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps({"expired": expired, "orphans_removed": removed, "dry_run": args.dry_run}))
         return 0
 
-    if args.cmd == "stream-crawl" and getattr(args, "bootstrap_robots", False):
-        # silently ignoring the flag would crawl without the politeness
-        # the user asked the site for — refuse pre-JVM instead
-        print(json.dumps({"error": "--bootstrap-robots is new-crawl only; "
-                                   "stream-crawl takes --robots-file (the relation "
-                                   "forms are CrawlEngine.budgets_df/rules_df)"}))
-        return 2
-
-    if args.cmd == "stream-crawl" and os.path.isdir(os.path.join(args.root, "_commits")):
-        # the old stream layout (per-batch dirs + _commits markers): its
-        # _checkpoint offsets would map old batch ids onto new rounds
-        print(json.dumps({"error": f"{args.root} is an old-layout stream root (_commits/ "
-                                   "markers, per-batch dirs); stream-crawl now writes a "
-                                   "snapshot store: start a new root"}))
-        return 2
-
-    site = settings = None
-    if args.cmd in ("new-crawl", "resume-crawl", "stream-crawl"):
-        try:
-            site, settings = _site(args), _settings(args)
-        except ValueError as e:
-            # bad flag values (e.g. --rate 0): JSON error + exit 2 before
-            # paying JVM startup, matching the CLI's other validations
-            print(json.dumps({"error": str(e)}))
-            return 2
-
-    spark = get_spark(app_name=f"gepris-{args.cmd}")
-
-    def _budgets_from(path: str | None):
-        """(host, robots_txt) file -> budgets relation, or None. Errors
-        follow the CLI's JSON-error contract (raised as ValueError).
-        Reads parquet first (a parquet DIRECTORY rarely ends in
-        .parquet), falling back to JSON-lines; columns are cast to
-        string so a mis-typed field fails here, not as a Py4J traceback
-        deep inside a fetch round."""
-        if not path:
-            return None
-        from pyspark.sql import functions as F
-
-        from ba_gepris_crawler_spark.operators.politeness import crawl_delay_budgets
-
-        try:
-            bodies = spark.read.parquet(path)
-        except Exception:
-            try:
-                bodies = spark.read.json(path)
-            except Exception as e:  # missing/corrupt file -> clean CLI error
-                raise ValueError(f"cannot read --robots-file {path}: {e}") from None
-        missing = {"host", "robots_txt"} - set(bodies.columns)
-        if missing:
-            raise ValueError(f"--robots-file {path} lacks columns {sorted(missing)}")
-        bodies = bodies.select(
-            F.col("host").cast("string").alias("host"),
-            F.col("robots_txt").cast("string").alias("robots_txt"),
-        )
-        return crawl_delay_budgets(bodies, settings.politeness)
-
     if getattr(args, "robots_file", None):
         # persisted + replayed across resumes: store the absolute path, or
         # a cron/other-cwd resume cannot find a relative one
         args.robots_file = os.path.abspath(args.robots_file)
 
+    # refusals that need no JVM
+    flag_cfg = None
+    if args.cmd in ("new-crawl", "stream-crawl"):
+        if args.bootstrap_robots and args.cmd == "stream-crawl":
+            # silently ignoring the flag would crawl without the politeness
+            # the user asked the site for
+            raise CliError("--bootstrap-robots is new-crawl only; stream-crawl "
+                           "takes --robots-file (the relation forms are "
+                           "CrawlEngine.budgets_df/rules_df)")
+        if args.bootstrap_robots and args.robots_file:
+            raise CliError("--bootstrap-robots fetches robots from the site "
+                           "itself; it conflicts with --robots-file")
+        if args.cmd == "stream-crawl" and os.path.isdir(os.path.join(args.root, "_commits")):
+            # the old stream layout (per-batch dirs + _commits markers): its
+            # _checkpoint offsets would map old batch ids onto new rounds
+            raise CliError(f"{args.root} is an old-layout stream root (_commits/ "
+                           "markers, per-batch dirs); stream-crawl now writes a "
+                           "snapshot store: start a new root")
+        with _refusals():  # bad flag values, e.g. --rate 0
+            flag_cfg = _flag_config(args)
+    if args.cmd == "recrawl" and not (1 <= args.min_interval <= args.max_interval):
+        raise CliError("need 1 <= --min-interval <= --max-interval")
+
+    spark = get_spark(app_name=f"gepris-{args.cmd}")
+    store = SnapshotStore(spark, args.root)
+
+    if args.cmd == "new-crawl":
+        engine = _create_crawl(spark, store, flag_cfg)
+        with _refusals():
+            if args.bootstrap_robots:
+                # open-web startup: robots -> budgets + rules relations and
+                # a sitemap-seeded round-0 frontier, all from the site's
+                # own metadata endpoints
+                print(json.dumps({"bootstrap": engine.bootstrap_from_robots()}))
+            return _print_counters(engine.run(max_rounds=args.max_rounds))
+
     if args.cmd == "stream-crawl":
         # crawl-as-stream: each micro-batch of the self-feeding frontier
-        # stream runs one engine round (resumable: re-running drains
-        # whatever is left; committed rounds replay as no-ops)
+        # stream runs one engine round; a re-run is the stream's resume.
+        # The first run persists its flags like new-crawl; so does the
+        # first run over a root written before the stream kept a
+        # config.json (none, or one holding only robots_file) — that run
+        # crawls the site its flags describe, as every run of it did.
         from ba_gepris_crawler_spark.streaming.crawl_stream import StreamingCrawl
 
-        # the stream root carries a config.json for the robots-file path:
-        # a flag-less RE-RUN — the stream's resume path — must keep the
-        # same politeness relation, not silently drop it; a resume-time
-        # override is persisted so later re-runs keep it
-        store = SnapshotStore(spark, args.root)
-        try:
-            persisted = store.load_config() or {}
-        except (ValueError, OSError) as e:
-            print(json.dumps({"error": f"invalid persisted config: {e}"}))
-            return 2
-        if not args.robots_file:
-            args.robots_file = persisted.get("robots_file")
-        try:
-            stream_budgets = _budgets_from(args.robots_file)
-        except ValueError as e:
-            print(json.dumps({"error": str(e)}))
-            return 2
-        if persisted.get("robots_file") != args.robots_file:
-            store.save_config({**persisted, "robots_file": args.robots_file})
-        engine = CrawlEngine(spark, site, store, settings)
-        engine.budgets_df = stream_budgets
+        persisted = _load_config(store) or {}
+        if "site" in persisted:
+            engine = _open_crawl(spark, store, args.robots_file, persisted)
+        else:
+            engine = _create_crawl(spark, store, {
+                **flag_cfg, "robots_file": args.robots_file or persisted.get("robots_file"),
+            })
         sc = StreamingCrawl(engine)
         if sc.needs_seed():
             sc.seed()
         waves = sc.drain(max_waves=args.max_rounds)
-        latest = sc.store.manifest(sc.store.latest_round())["counters"]
+        latest = store.manifest(store.latest_round())["counters"]
         print(json.dumps({"waves": waves, "seen_total": latest["seen_total"]}))
         return 0
 
-    store = SnapshotStore(spark, args.root)
-
-    if args.cmd in ("new-crawl", "resume-crawl"):
-        if args.cmd == "new-crawl":
-            try:
-                # validate the robots file BEFORE persisting config — a
-                # typo'd path must not leave behind a store whose
-                # config.json references an unreadable file
-                budgets = _budgets_from(args.robots_file)
-            except ValueError as e:
-                print(json.dumps({"error": str(e)}))
-                return 2
-            store.save_config(
-                {
-                    "site": {**asdict(site), "hosts": list(site.hosts)},
-                    "politeness": asdict(settings.politeness),
-                    "n_buckets": settings.n_buckets,
-                    "fetch_format": settings.fetch_format,
-                    "circuit_breaker": settings.circuit_breaker,
-                    "bootstrap_robots": bool(getattr(args, "bootstrap_robots", False)),
-                    "robots_file": args.robots_file,
-                }
-            )
-        else:
-            # A crawl folder is self-describing: resume MUST replay the same
-            # site + politeness config or every frontier URL turns 404 and
-            # poisons the seen set. CLI flags are ignored on resume.
-            persist_robots_override: dict | None = None
-            try:
-                cfg = store.load_config()  # json.JSONDecodeError is a ValueError;
-                # OSError covers an unreadable/misrestored config.json
-            except (ValueError, OSError) as e:
-                print(json.dumps({"error": f"invalid persisted config: {e}"}))
-                return 2
-            if cfg is not None:
-                try:
-                    site, settings = _rebuild_from_config(cfg, fallback=settings)
-                    if not args.robots_file:
-                        # the budgets relation is data, not config — but the
-                        # bodies FILE path is replayable; reload it so resume
-                        # keeps the same politeness without re-flagging
-                        args.robots_file = cfg.get("robots_file")
-                    elif args.robots_file != cfg.get("robots_file"):
-                        # an explicit resume-time override (e.g. refreshed
-                        # crawl-delays) persists: otherwise the NEXT
-                        # flag-less resume would silently revert to the
-                        # old bodies. Persisted only AFTER _budgets_from
-                        # validates below — saving a typo'd path first
-                        # would break every later flag-less resume (the
-                        # new-crawl path deliberately validates first too).
-                        persist_robots_override = cfg
-                except (ValueError, TypeError, KeyError) as e:
-                    # a hand-edited/corrupt config.json must surface as the
-                    # CLI's JSON-error contract, not a raw traceback
-                    print(json.dumps({"error": f"invalid persisted config: {e}"}))
-                    return 2
-            try:
-                budgets = _budgets_from(args.robots_file)
-            except ValueError as e:
-                print(json.dumps({"error": str(e)}))
-                return 2
-            if persist_robots_override is not None:
-                store.save_config(
-                    {**persist_robots_override, "robots_file": args.robots_file}
-                )
-        engine = CrawlEngine(spark, site, store, settings)
-        engine.budgets_df = budgets
-        if (
-            args.cmd == "resume-crawl" and budgets is None
-            and cfg is not None and cfg.get("bootstrap_robots")
-        ):
-            # the original run drew its budgets from the site's own
-            # robots.txt (data, not a replayable file path) — re-fetch them
-            # the same way so resume keeps identical politeness
-            engine.bootstrap_from_robots()
-            engine.seed_urls_df = None  # seeds are a round-0 concern only
-        try:
-            if args.cmd == "new-crawl":
-                if getattr(args, "bootstrap_robots", False):
-                    if args.robots_file:
-                        print(json.dumps({"error": "--bootstrap-robots fetches "
-                                                   "robots from the site itself; "
-                                                   "it conflicts with --robots-file"}))
-                        return 2
-                    # open-web startup: robots -> budgets relation +
-                    # sitemap-seeded round-0 frontier, all from the site's
-                    # own metadata endpoints
-                    print(json.dumps({"bootstrap": engine.bootstrap_from_robots()}))
-                manifests = engine.run(max_rounds=args.max_rounds)
-            else:
-                if getattr(args, "from_round", None) is not None:
-                    dropped = store.truncate_after(args.from_round)
-                    print(json.dumps({"rewound_to": args.from_round, "dropped_rounds": dropped}))
-                manifests = engine.resume(max_rounds=args.max_rounds)
-        except ValueError as e:
-            # engine-level refusals (e.g. resume of a budgets crawl whose
-            # relation was set via the Python API and cannot be reloaded
-            # from config.json) follow the JSON-error contract too
-            print(json.dumps({"error": str(e)}))
-            return 2
-        for m in manifests:
-            print(json.dumps(m["counters"]))
-        return 0
+    if args.cmd == "resume-crawl":
+        engine = _open_crawl(spark, store, args.robots_file)
+        if args.from_round is not None:
+            dropped = store.truncate_after(args.from_round)
+            print(json.dumps({"rewound_to": args.from_round, "dropped_rounds": dropped}))
+        with _refusals():
+            return _print_counters(engine.resume(max_rounds=args.max_rounds))
 
     if args.cmd == "recrawl":
-        try:
-            cfg = store.load_config()
-        except (ValueError, OSError) as e:
-            print(json.dumps({"error": f"invalid persisted config: {e}"}))
-            return 2
-        if cfg is None:
-            print(json.dumps({"error": "no persisted config.json: recrawl "
-                                       "replays the crawl's own site/politeness"}))
-            return 2
-        try:
-            site, settings = _rebuild_from_config(cfg)
-            budgets = _budgets_from(cfg.get("robots_file"))
-        except (ValueError, TypeError, KeyError) as e:
-            print(json.dumps({"error": f"invalid persisted config: {e}"}))
-            return 2
+        engine = _open_crawl(spark, store)
         # per-invocation choice, not persisted config: validators are
         # derived state, and a later plain recrawl must not inherit it
-        settings.revalidate = bool(args.revalidate)
-        engine = CrawlEngine(spark, site, store, settings)
-        engine.budgets_df = budgets
-        if not (1 <= args.min_interval <= args.max_interval):
-            print(json.dumps({"error": "need 1 <= --min-interval <= --max-interval"}))
-            return 2
+        engine.s.revalidate = args.revalidate
         n = engine.enqueue_recrawl(
             now_round=args.now_round,
             min_interval=args.min_interval,
@@ -499,56 +486,20 @@ def main(argv: list[str] | None = None) -> int:
             bootstrap_interval=args.bootstrap_interval,
         )
         print(json.dumps({"recrawl_enqueued": n}))
-        if n:
-            try:
-                manifests = engine.resume(max_rounds=args.max_rounds)
-            except ValueError as e:
-                # e.g. a budgets relation set via the Python API that
-                # config.json cannot reload — same contract as resume-crawl
-                print(json.dumps({"error": str(e)}))
-                return 2
-            for m in manifests:
-                print(json.dumps(m["counters"]))
-        return 0
+        with _refusals():
+            return _print_counters(engine.resume(max_rounds=args.max_rounds) if n else [])
 
     if args.cmd == "retry-errors":
-        try:
-            cfg = store.load_config()
-        except (ValueError, OSError) as e:
-            print(json.dumps({"error": f"invalid persisted config: {e}"}))
-            return 2
-        if cfg is None:
-            print(json.dumps({"error": "no persisted config.json: retry-errors "
-                                       "replays the crawl's own site/politeness"}))
-            return 2
-        try:
-            site, settings = _rebuild_from_config(cfg)
-            budgets = _budgets_from(cfg.get("robots_file"))
-        except (ValueError, TypeError, KeyError) as e:
-            print(json.dumps({"error": f"invalid persisted config: {e}"}))
-            return 2
-        engine = CrawlEngine(spark, site, store, settings)
-        engine.budgets_df = budgets
-        try:
+        engine = _open_crawl(spark, store)
+        with _refusals():
             n = engine.enqueue_error_retries(
                 now_round=args.now_round,
                 max_attempts=args.max_attempts,
                 backoff_base=args.backoff_base,
                 max_backoff=args.max_backoff,
             )
-        except ValueError as e:
-            print(json.dumps({"error": str(e)}))
-            return 2
-        print(json.dumps({"retries_enqueued": n}))
-        if n:
-            try:
-                manifests = engine.resume(max_rounds=args.max_rounds)
-            except ValueError as e:
-                print(json.dumps({"error": str(e)}))
-                return 2
-            for m in manifests:
-                print(json.dumps(m["counters"]))
-        return 0
+            print(json.dumps({"retries_enqueued": n}))
+            return _print_counters(engine.resume(max_rounds=args.max_rounds) if n else [])
 
     if args.cmd == "analyze":
         from ba_gepris_crawler_spark.plans.analysis import analysis_tables
@@ -559,15 +510,10 @@ def main(argv: list[str] | None = None) -> int:
 
             docs = read_warc(spark, args.warc).filter("spans is not null")
         else:
-            try:
-                cur = current_tables(store)
-            except ValueError as e:  # compacted typed table: provenance gone
-                print(json.dumps({"error": str(e)}))
-                return 2
-            if "documents" not in cur:
-                print(json.dumps({"error": "no committed documents to analyze"}))
-                return 2
-            docs = cur["documents"]
+            with _refusals():  # compacted typed table: provenance gone
+                docs = current_tables(store).get("documents")
+            if docs is None:
+                raise CliError("no committed documents to analyze")
         out_dir = args.out or f"{args.root}/analysis"
         tables = analysis_tables(docs, near_dup_threshold=args.near_dup_threshold)
         counts = {}
@@ -578,18 +524,16 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "compact":
-        # offline compaction (the round loop auto-compacts url_seen only;
-        # span-heavy documents rewrites are an operator decision)
-        keys = {"url_seen": "url", "documents": "doc_id"}
+        # offline compaction with the round loop's per-table policy
+        # (_COMPACTION) — at any round, not only every compact_every-th
         upto = store.latest_round()
         out = {}
         if upto is not None:
             for t in args.tables:
-                df = store.read_union(t, upto)
-                if df is None:
-                    continue
-                m = store.compact(t, upto, key_col=keys.get(t, df.columns[0]), n_buckets=args.buckets)
-                out[t] = {"upto": m["upto"], "rows": m["rows"]}
+                method, key = _COMPACTION[t]
+                m = getattr(store, method)(t, upto, key_col=key, n_buckets=args.buckets)
+                if not m.get("empty"):
+                    out[t] = {"upto": m["upto"], "rows": m["rows"]}
         print(json.dumps({"compacted": out}))
         return 0
 
@@ -600,21 +544,16 @@ def main(argv: list[str] | None = None) -> int:
         if args.current:
             from ba_gepris_crawler_spark.plans.round_loop import current_tables
 
-            try:
+            # a typed table compacted offline lost its per-dir round
+            # provenance: current_tables refuses it
+            with _refusals():
                 tables = current_tables(store)
-            except ValueError as exc:
-                # e.g. a typed table was compacted offline — per-dir round
-                # provenance is gone; same JSON-error contract as every
-                # other CLI failure path
-                print(json.dumps({"error": str(exc)}))
-                return 2
         else:
             tables = published_tables(store)
         if args.fmt == "warc":
             if store.latest_round() is None or "documents" not in tables:
-                print(json.dumps({"error": "no committed documents to archive "
-                                           "(store has no completed round)"}))
-                return 2
+                raise CliError("no committed documents to archive "
+                               "(store has no completed round)")
             from datetime import datetime, timezone
 
             from ba_gepris_crawler_spark.plans.export import export_warc
@@ -634,17 +573,14 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     tables = published_tables(store)
-    if getattr(args, "current", False):
+    if args.current:
         # overlay: entity tables resolve to their newest version; the
         # crawl-log views (url_seen/trace/fetch_errors) stay full-history
         # — liveness is a statement about fetches, not entities
         from ba_gepris_crawler_spark.plans.round_loop import current_tables
 
-        try:
+        with _refusals():  # compacted typed table: provenance gone
             tables = {**tables, **current_tables(store)}
-        except ValueError as exc:  # compacted typed table: provenance gone
-            print(json.dumps({"error": str(exc)}))
-            return 2
     results = dq.run_all(spark, tables, official_subject_areas(spark))
     for name, df in results.items():
         for row in df.limit(20).collect():

@@ -3,13 +3,16 @@
 Pipeline (north rule): canonicalize -> xxhash64 -> per-partition bloom
 shards, merged via treeReduce (the one deliberate drop below the DataFrame
 API, SURVEY.md §4.2); membership tests run vectorized (numpy over Arrow
-batches). The bloom is an ADMISSION GATE only: rows the bloom rejects are
-*definitely new* and skip the expensive exact join entirely; rows the bloom
-admits ("maybe seen") go through an exact `left_anti` join against the
-url_seen table, so the final seen-set semantics are exact — matching the
-reference's exact CSV set-diff (CrawlResourceDetailsGraph.scala:47-53)
-while scaling: at a 10^10-URL frontier the exact join's left side shrinks
-by (1 - dup_rate - fpp), and the shards themselves stay executor-resident.
+batches). The bloom flags each frontier row `_maybe_seen`: rows the bloom
+rejects are *definitely new*, rows it admits may be seen. The exact
+`left_anti` join against the url_seen table carries the flag as a join
+residual, so only flagged rows can match and the final seen-set semantics
+are exact — matching the reference's exact CSV set-diff
+(CrawlResourceDetailsGraph.scala:47-53). The flag does NOT shrink the
+join: every frontier row, bloom-negative or not, is still shuffled and
+sorted into it (the physical plan is one SortMergeJoin LeftAnti with
+condition `_maybe_seen` over an Exchange of the whole frontier). The
+shards themselves stay executor-resident.
 
 Sizing: m = ceil(-n ln(fpp) / ln(2)^2) bits, k = max(1, round(m/n ln 2)).
 At 10^10 URLs / 1% fpp this is ~12 GB of bits — sharded by url_hash range
@@ -259,8 +262,10 @@ def new_urls(
     url_col: str = "url",
 ) -> DataFrame:
     """J1, THE core crawl operator: frontier minus seen. Exact semantics
-    always; the bloom gate (when provided) only pre-gates the exact join,
-    so it can never change which URLs are admitted.
+    always; the bloom flag (when a model is provided) is a residual of the
+    exact anti-join's condition, so it can never change which URLs are
+    admitted — and it does not keep any frontier row out of the join's
+    shuffle either.
 
     `url_col` names the URL column in BOTH frames — the seen side is no
     longer hard-coded to "url" (a non-default url_col either crashed or
@@ -272,10 +277,10 @@ def new_urls(
     seen_keys = url_seen.select(F.col(url_col))
     if bloom is None:
         return frontier.join(seen_keys, url_col, "left_anti")
-    # flagged frame, ONE pass: the anti-join's residual condition applies
-    # the exact backstop only to _maybe_seen rows — flagged-false rows
-    # match nothing and pass straight through, without the two-branch
-    # union re-running the frontier lineage + probe per branch
+    # flagged frame, ONE pass: the anti-join's residual condition lets
+    # only _maybe_seen rows match — flagged-false rows match nothing and
+    # are kept, without the two-branch union re-running the frontier
+    # lineage + probe per branch (they still cross the join's exchange)
     f = flag_by_bloom(frontier, bloom, url_col).alias("_f")
     s = seen_keys.alias("_s")
     cond = (F.col(f"_f.{url_col}") == F.col(f"_s.{url_col}")) & F.col("_f._maybe_seen")

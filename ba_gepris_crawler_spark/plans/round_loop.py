@@ -262,10 +262,11 @@ class CrawlEngine:
                     seen, expected_items=max(n_seen * 4, s.bloom_expected_items), fpp=s.bloom_fpp, version=rnd
                 )
 
-        # J1: the core frontier anti-join (bloom pre-gate + exact backstop)
+        # J1: the core frontier anti-join (exact; the bloom flag is a join
+        # residual — every frontier row still enters the join)
         candidates = US.new_urls(frontier_prev, seen, bloom).cache()
         # The frontier written at round k-1 was already anti-joined against
-        # the full seen set, and new_urls is exact (bloom only pre-gates), so
+        # the full seen set, and new_urls is exact (the bloom only flags), so
         # |candidates| == the frontier_next count carried in the manifest —
         # no count job needed except at round 0 / hand-seeded stores. The
         # shortcut is gated on the frontier_exact manifest flag: only
@@ -286,10 +287,7 @@ class CrawlEngine:
             n_candidates = candidates.count()
         if n_candidates == 0:
             tables = {"frontier": self.store.write_table("frontier", rnd, candidates)}
-            manifest = self.store.commit(rnd, tables, {"fetched": 0, "errors": 0, "done": True,
-                                                       "seen_total": n_seen, "candidates": 0,
-                                                       "budgets_df": self.budgets_df is not None,
-                                                       "rules_df": self.rules_df is not None})
+            manifest = self.store.commit(rnd, tables, self._counters(rnd, n_seen, bloom, done=True))
             for df in (candidates, seen):  # the early return must not leak caches
                 df.unpersist()
             if bloom is not None and bloom is not self._bloom:
@@ -555,29 +553,20 @@ class CrawlEngine:
             projects.unpersist()
             details.unpersist()
 
-        n_fetched = tables["url_seen"]  # write-time metadata count
-        counters = {
-            "round": rnd,
-            "candidates": n_candidates,
-            "fetched": n_fetched,
-            "errors": n_errors,  # every non-200 incl. redirects (quarantine class; 304 excluded)
-            "redirects": int(sum(r["redirs"] for r in bucket_rows)),
-            "revalidated": int(sum(r["revals"] for r in bucket_rows)),
-            "hosts_suspended": tables.get("host_suspensions", 0),
-            "recrawl_enqueued": tables.get("seen_tombstones", 0),
-            "discovered_raw": n_discovered_raw,
-            "frontier_next": tables["frontier"],
-            "frontier_exact": True,  # engine-written: already seen-anti-joined
-            "seen_total": n_seen + tables["url_seen"],  # carried forward, no count job
-            "bloom": {"m": bloom.m, "k": bloom.k, "version": bloom.version} if bloom else None,
-            "virtual_cost_sec": max((r["virtual_cost_sec"] for r in lineage_rows), default=0.0),
-            "budgets_df": self.budgets_df is not None,
-            "rules_df": self.rules_df is not None,
-            "done": False,
-        }
-        if self.site.session_rounds:
-            counters["session_epoch"] = epoch
-            counters["cookie_fetches"] = self._jar.fetches
+        counters = self._counters(
+            rnd, n_seen, bloom,
+            candidates=n_candidates,
+            fetched=tables["url_seen"],  # write-time metadata count
+            errors=n_errors,  # every non-200 incl. redirects (quarantine class; 304 excluded)
+            redirects=int(sum(r["redirs"] for r in bucket_rows)),
+            revalidated=int(sum(r["revals"] for r in bucket_rows)),
+            hosts_suspended=tables.get("host_suspensions", 0),
+            recrawl_enqueued=tables.get("seen_tombstones", 0),
+            discovered_raw=n_discovered_raw,
+            frontier_next=tables["frontier"],
+            seen_total=n_seen + tables["url_seen"],  # carried forward, no count job
+            virtual_cost_sec=max((r["virtual_cost_sec"] for r in lineage_rows), default=0.0),
+        )
         manifest = self.store.commit(rnd, tables, counters, lineage_rows)
         self._recrawl_df = None  # consumed; the tombstone delta is committed
         self._recrawl_validators = None
@@ -625,6 +614,35 @@ class CrawlEngine:
         for df in (candidates, seen, stats):
             df.unpersist()
         return manifest
+
+    def _counters(self, rnd: int, n_seen: int, bloom, **work) -> dict:
+        """Round `rnd`'s manifest counters. A fetching round and the empty
+        round that ends a crawl commit the same key set: `work` overrides
+        the zeros of the work an empty round does not do."""
+        counters = {
+            "round": rnd,
+            "candidates": 0,
+            "fetched": 0,
+            "errors": 0,
+            "redirects": 0,
+            "revalidated": 0,
+            "hosts_suspended": 0,
+            "recrawl_enqueued": 0,
+            "discovered_raw": 0,
+            "frontier_next": 0,
+            "frontier_exact": True,  # engine-written: already seen-anti-joined
+            "seen_total": n_seen,
+            "bloom": {"m": bloom.m, "k": bloom.k, "version": bloom.version} if bloom else None,
+            "virtual_cost_sec": 0.0,
+            "budgets_df": self.budgets_df is not None,
+            "rules_df": self.rules_df is not None,
+            "done": False,
+            **work,
+        }
+        if self.site.session_rounds:
+            counters["session_epoch"] = rnd // self.site.session_rounds
+            counters["cookie_fetches"] = self._jar.fetches
+        return counters
 
     # ---------------- loops ----------------
     def run(self, max_rounds: int = 50, start_round: int = 0) -> list[dict]:

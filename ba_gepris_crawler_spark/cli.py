@@ -101,11 +101,16 @@ def _rebuild_from_config(cfg: dict) -> tuple[SiteConfig, CrawlSettings]:
     ValueError/TypeError/KeyError on a hand-edited/corrupt config."""
     sc = dict(cfg["site"])
     sc["hosts"] = tuple(sc["hosts"])
-    sc["disallow"] = tuple(tuple(x) for x in sc.get("disallow", ()))
     site = SiteConfig(**{k: v for k, v in sc.items() if k in SiteConfig.__dataclass_fields__})
     pol = dict(cfg["politeness"])
     for k in ("disallow", "host_rates", "robots_rules"):
-        pol[k] = tuple(tuple(x) for x in pol.get(k, ()))
+        # older configs persisted these literal politeness lists, always
+        # empty; robots rules and rate overrides now arrive only as
+        # relations (--robots-file, --bootstrap-robots), and dropping a
+        # non-empty list would silently relax politeness
+        if pol.pop(k, None):
+            raise ValueError(f"politeness.{k} is not supported: robots rules "
+                             "and rate overrides come from --robots-file")
     fb = CrawlSettings()
     settings = CrawlSettings(
         n_buckets=cfg.get("n_buckets", fb.n_buckets),
@@ -138,16 +143,14 @@ def _load_config(store: SnapshotStore) -> dict | None:
         raise CliError(f"invalid persisted config: {e}") from None
 
 
-def _budgets_from(spark, path: str | None, politeness: PolitenessConfig):
-    """(host, robots_txt) file -> budgets relation, or None. Reads parquet
-    first (a parquet DIRECTORY rarely ends in .parquet), falling back to
-    JSON-lines; columns are cast to string so a mis-typed field fails
-    here, not as a Py4J traceback deep inside a fetch round."""
-    if not path:
-        return None
+def _robots_from(spark, path: str, politeness: PolitenessConfig):
+    """(host, robots_txt) file -> (budgets, rules) relations. Reads
+    parquet first (a parquet DIRECTORY rarely ends in .parquet), falling
+    back to JSON-lines; columns are cast to string so a mis-typed field
+    fails here, not as a Py4J traceback deep inside a fetch round."""
     from pyspark.sql import functions as F
 
-    from ba_gepris_crawler_spark.operators.politeness import crawl_delay_budgets
+    from ba_gepris_crawler_spark.operators.politeness import robots_relations
 
     try:
         bodies = spark.read.parquet(path)
@@ -163,17 +166,23 @@ def _budgets_from(spark, path: str | None, politeness: PolitenessConfig):
         F.col("host").cast("string").alias("host"),
         F.col("robots_txt").cast("string").alias("robots_txt"),
     )
-    return crawl_delay_budgets(bodies, politeness)
+    return robots_relations(bodies, politeness)
+
+
+def _replayable(cfg: dict) -> tuple[SiteConfig, CrawlSettings]:
+    try:
+        return _rebuild_from_config(cfg)
+    except (ValueError, TypeError, KeyError) as e:
+        raise CliError(f"invalid persisted config: {e}") from None
 
 
 def _engine(spark, store: SnapshotStore, cfg: dict, robots_file: str | None) -> CrawlEngine:
-    """The engine a config describes, with the robots file's budgets."""
-    try:
-        site, settings = _rebuild_from_config(cfg)
-    except (ValueError, TypeError, KeyError) as e:
-        raise CliError(f"invalid persisted config: {e}") from None
+    """The engine a config describes, with the robots file's budgets and
+    rules relations."""
+    site, settings = _replayable(cfg)
     engine = CrawlEngine(spark, site, store, settings)
-    engine.budgets_df = _budgets_from(spark, robots_file, settings.politeness)
+    if robots_file:
+        engine.budgets_df, engine.rules_df = _robots_from(spark, robots_file, settings.politeness)
     return engine
 
 
@@ -186,27 +195,33 @@ def _create_crawl(spark, store: SnapshotStore, cfg: dict) -> CrawlEngine:
     return engine
 
 
+def _persisted_config(root: str) -> dict:
+    """The config.json of an existing crawl, checked replayable before
+    the JVM starts."""
+    cfg = _load_config(SnapshotStore(None, root))
+    if cfg is None:
+        raise CliError(f"no persisted config.json in {root}: a crawl "
+                       "replays its own site/politeness")
+    _replayable(cfg)
+    return cfg
+
+
 def _open_crawl(
-    spark, store: SnapshotStore, robots_file: str | None = None, cfg: dict | None = None
+    spark, store: SnapshotStore, cfg: dict, robots_file: str | None = None
 ) -> CrawlEngine:
     """Open path of every command that continues a crawl: replay the
-    store's config.json (`cfg`, when the caller already loaded it). Site
-    and settings never come from flags — another site would 404 every
-    frontier URL and poison the seen set. The budgets and rules relations
-    are data, not config, so they are rebuilt: from the persisted robots
-    file, or by re-fetching the site's robots.txt for a --bootstrap-robots
-    crawl. A `robots_file` override persists only after it validates, so
-    the next flag-less command keeps it and a typo never breaks one."""
-    cfg = cfg or _load_config(store)
-    if cfg is None:
-        raise CliError(f"no persisted config.json in {store.root}: a crawl "
-                       "replays its own site/politeness")
+    store's config.json `cfg`. Site and settings never come from flags —
+    another site would 404 every frontier URL and poison the seen set.
+    The budgets and rules relations are data, not config, so they are
+    rebuilt: from the persisted robots file, or by re-fetching the site's
+    robots.txt for a --bootstrap-robots crawl. A `robots_file` override
+    persists only after it validates, so the next flag-less command keeps
+    it and a typo never breaks one."""
     engine = _engine(spark, store, cfg, robots_file or cfg.get("robots_file"))
     if robots_file and robots_file != cfg.get("robots_file"):
         store.save_config({**cfg, "robots_file": robots_file})
     if engine.budgets_df is None and cfg.get("bootstrap_robots"):
         engine.bootstrap_from_robots()
-        engine.seed_urls_df = None  # seeds are a round-0 concern only
     return engine
 
 
@@ -259,10 +274,10 @@ def _parser() -> argparse.ArgumentParser:
         c.add_argument(
             "--robots-file", dest="robots_file", default=None,
             help="parquet (or JSON-lines) of (host, robots_txt) bodies: "
-                 "Crawl-delay budgets join the scheduler as a RELATION "
-                 "(crawl_delay_budgets -> budgets_df) — the web-scale "
-                 "politeness path; the path is persisted so resume "
-                 "reloads it automatically",
+                 "Crawl-delay lines become the per-host budgets relation "
+                 "and Allow/Disallow lines the robots rules relation "
+                 "(politeness.robots_relations); the path is persisted so "
+                 "resume reloads both automatically",
         )
         if name == "resume-crawl":
             c.add_argument(
@@ -428,6 +443,8 @@ def _run(args: argparse.Namespace) -> int:
             flag_cfg = _flag_config(args)
     if args.cmd == "recrawl" and not (1 <= args.min_interval <= args.max_interval):
         raise CliError("need 1 <= --min-interval <= --max-interval")
+    if args.cmd in ("resume-crawl", "recrawl", "retry-errors"):
+        persisted = _persisted_config(args.root)
 
     spark = get_spark(app_name=f"gepris-{args.cmd}")
     store = SnapshotStore(spark, args.root)
@@ -453,7 +470,7 @@ def _run(args: argparse.Namespace) -> int:
 
         persisted = _load_config(store) or {}
         if "site" in persisted:
-            engine = _open_crawl(spark, store, args.robots_file, persisted)
+            engine = _open_crawl(spark, store, persisted, args.robots_file)
         else:
             engine = _create_crawl(spark, store, {
                 **flag_cfg, "robots_file": args.robots_file or persisted.get("robots_file"),
@@ -467,7 +484,7 @@ def _run(args: argparse.Namespace) -> int:
         return 0
 
     if args.cmd == "resume-crawl":
-        engine = _open_crawl(spark, store, args.robots_file)
+        engine = _open_crawl(spark, store, persisted, args.robots_file)
         if args.from_round is not None:
             dropped = store.truncate_after(args.from_round)
             print(json.dumps({"rewound_to": args.from_round, "dropped_rounds": dropped}))
@@ -475,7 +492,7 @@ def _run(args: argparse.Namespace) -> int:
             return _print_counters(engine.resume(max_rounds=args.max_rounds))
 
     if args.cmd == "recrawl":
-        engine = _open_crawl(spark, store)
+        engine = _open_crawl(spark, store, persisted)
         # per-invocation choice, not persisted config: validators are
         # derived state, and a later plain recrawl must not inherit it
         engine.s.revalidate = args.revalidate
@@ -490,7 +507,7 @@ def _run(args: argparse.Namespace) -> int:
             return _print_counters(engine.resume(max_rounds=args.max_rounds) if n else [])
 
     if args.cmd == "retry-errors":
-        engine = _open_crawl(spark, store)
+        engine = _open_crawl(spark, store, persisted)
         with _refusals():
             n = engine.enqueue_error_retries(
                 now_round=args.now_round,

@@ -46,7 +46,6 @@ JSON_FETCH_RESULT_FIELDS = [
 def fetch_pages(
     scheduled: DataFrame,
     site_cfg: SiteConfig,
-    per_host_rate: float,
     n_buckets: int = 32,
     session_token: str | None = None,
     epoch: int = 0,
@@ -54,7 +53,8 @@ def fetch_pages(
     transport=None,
     validators: DataFrame | None = None,
 ) -> DataFrame:
-    """scheduled: output of politeness.schedule_round(...).fetch_now.
+    """scheduled: output of politeness.schedule_round(...).fetch_now —
+    its `host_rate` and `host_max_slot` columns price the virtual cost.
     Returns the same rows + (status, spans, virtual_cost_sec).
 
     Cookie flow: the (possibly stale) session token is broadcast; a 401
@@ -75,10 +75,9 @@ def fetch_pages(
     staged by enqueue_recrawl for the due set). Joined co-keyed onto the
     scheduled rows; each row's etag rides to the worker and out as a
     conditional request (If-None-Match), so an unchanged page answers 304
-    with NO body — re-seen and budget-charged, nothing re-parsed. Passing
-    validators requires a transport whose fetch_batch accepts the `etags`
-    keyword (both shipped transports do); with validators=None the
-    transport call is byte-identical to the pre-revalidation contract.
+    with NO body — re-seen and budget-charged, nothing re-parsed. The
+    transport's fetch_batch takes the `etags` keyword (None when no
+    validators were joined).
 
     transport: the pluggable network seam (operators/transport.py).
     None (default) = SyntheticTransport, the in-process deterministic
@@ -91,7 +90,6 @@ def fetch_pages(
     spark = scheduled.sparkSession
     cfg_bc = spark.sparkContext.broadcast(site_cfg)
     token_bc = spark.sparkContext.broadcast(session_token)  # session/cookie analog
-    rate = float(per_host_rate)
     as_json = fmt == "json"
     if transport is None:
         transport = SyntheticTransport()
@@ -121,36 +119,24 @@ def fetch_pages(
         token = token_bc.value  # sent with every request
         for pdf in batches:
             # one transport round-trip per Arrow batch: the transport owns
-            # in-batch concurrency and the 401 -> refresh -> retry flow
-            if "etag" in pdf.columns:
-                # conditional refetch: NaN/None (no staged validator) fetch
-                # unconditionally; the kwarg is only sent when validators
-                # were joined, so legacy transports stay call-compatible
-                etags = [e if isinstance(e, str) else None for e in pdf["etag"]]
-                statuses, raw = transport.fetch_batch(
-                    cfg, list(pdf["url"]), token, epoch, as_json, etags=etags
-                )
-            else:
-                statuses, raw = transport.fetch_batch(
-                    cfg, list(pdf["url"]), token, epoch, as_json
-                )
+            # in-batch concurrency and the 401 -> refresh -> retry flow.
+            # Conditional refetch: NaN/None (no staged validator) fetch
+            # unconditionally
+            etags = (
+                [e if isinstance(e, str) else None for e in pdf["etag"]]
+                if "etag" in pdf.columns else None
+            )
+            statuses, raw = transport.fetch_batch(
+                cfg, list(pdf["url"]), token, epoch, as_json, etags=etags
+            )
             # json: raw body strings; html: the worker-parsed spans,
             # serialized — both parsed by from_json in the plan below
             body = raw if as_json else [spans_to_json_body(pl) for pl in raw]
             # virtual politeness cost: each slot-wave of a host costs
-            # 1/rate, where rate is the scheduler-resolved `host_rate` (the
-            # robots Crawl-delay overrides the budget cut used upstream);
-            # hand-built scheduled frames without it use per_host_rate
-            host_rate = pdf["host_rate"].fillna(rate) if "host_rate" in pdf.columns else rate
-            if "host_max_slot" in pdf.columns:
-                # scheduler-planted GLOBAL per-host last wave (exact even
-                # when a host spans salted buckets / Arrow batches)
-                max_slot = pdf["host_max_slot"].astype("float64")
-            else:
-                # hand-built scheduled frames (fixtures/tests): per-batch
-                # local max — only correct when the host fits one batch
-                max_slot = pdf.groupby("host")["slot"].transform("max").astype("float64")
-            cost = (max_slot / host_rate).astype("float64")
+            # 1/host_rate (the rate the budget cut used upstream), times
+            # the host's GLOBAL last wave host_max_slot (exact even when a
+            # host spans salted buckets / Arrow batches)
+            cost = (pdf["host_max_slot"].astype("float64") / pdf["host_rate"]).astype("float64")
             res = pdf.assign(status=pd.Series(statuses, index=pdf.index, dtype="int32"), virtual_cost_sec=cost, body=body)
             yield res[[f.name for f in out_schema.fields]]  # schema column order
 

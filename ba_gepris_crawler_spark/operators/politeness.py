@@ -30,19 +30,18 @@ count 1 — SURVEY.md §2.8). Generalization mandated by the north rule:
   (hosts x depths x priorities x buckets) and computed from one tiny
   groupBy-count — the same offset trick the crawl-log `seq` uses
   (plans/round_loop.py). No Exchange ever partitions by bare `host`.
-- robots rules and per-host rate overrides: config literals and the
-  web-scale relations (parse_robots_rules_distributed,
-  crawl_delay_budgets) share ONE evaluation path each — a tiny relation
-  broadcast-joined onto the frontier (apply_robots_rules) or onto the
-  offsets frame (schedule_round), the analog of the reference's
-  broadcast cookie cache (CookieFlowGraph.scala:30-58). With no rules or
-  overrides no join is added.
+- robots rules and per-host rate overrides reach the scheduler only as
+  relations built from (host, robots_txt) bodies (robots_relations):
+  the rules relation is broadcast-joined onto the frontier
+  (apply_robots_rules), the budgets relation onto the offsets frame
+  (schedule_round) — the analog of the reference's broadcast cookie
+  cache (CookieFlowGraph.scala:30-58). With neither, no join is added.
 """
 
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -83,23 +82,12 @@ class PolitenessConfig:
     per_host_rate: float = 10.0  # pages/sec a host will tolerate (default)
     round_seconds: float = 60.0  # wall-clock modeled per crawl round
     max_in_flight: int = 10  # reference detail-page cap (mapAsync(10))
-    # robots.txt analog: paths a host forbids (regex), broadcast to executors
-    disallow: tuple[tuple[str, str], ...] = ()  # (host, path_regex)
-    # per-host rate OVERRIDES (host, pages/sec) — fed by robots.txt
-    # Crawl-delay (rate = 1/delay); hosts not listed use per_host_rate
-    host_rates: tuple[tuple[str, float], ...] = ()
-    # RFC-9309-style robots rules (host, path_regex, specificity, is_allow)
-    # from parse_robots_rules: longest-match decides, Allow wins ties, no
-    # match = allowed. Lets an Allow carve a hole in a Disallow prefix —
-    # `disallow` above cannot express that (any-match, drop-only).
-    robots_rules: tuple[tuple[str, str, int, bool], ...] = ()
 
     def __post_init__(self) -> None:
-        # rates are divisors downstream (budget cut, fetch virtual cost):
-        # a hand-written 0/negative override would clamp to budget 1 here
-        # but produce an inf virtual_cost_sec in fetch_pages — reject once.
-        # NaN passes a bare `<= 0` guard (comparison False), so require
-        # finite explicitly
+        # the rate is a divisor downstream (fetch virtual cost): a 0 or
+        # negative rate would produce an inf virtual_cost_sec in
+        # fetch_pages — reject once. NaN passes a bare `<= 0` guard
+        # (comparison False), so require finite explicitly
         if not math.isfinite(self.per_host_rate) or self.per_host_rate <= 0:
             raise ValueError(f"per_host_rate must be a finite number > 0, got {self.per_host_rate}")
         # round_seconds scales every budget and max_in_flight divides the
@@ -109,34 +97,10 @@ class PolitenessConfig:
             raise ValueError(f"round_seconds must be a finite number > 0, got {self.round_seconds}")
         if self.max_in_flight < 1:
             raise ValueError(f"max_in_flight must be >= 1, got {self.max_in_flight}")
-        for h, r in self.host_rates:
-            if not math.isfinite(r) or r <= 0:
-                raise ValueError(f"host_rates[{h!r}] must be a finite number > 0, got {r}")
-        # normalize host_rates to one entry per host, FIRST occurrence wins
-        # (defined precedence: explicit overrides precede robots-derived
-        # appends). schedule_round joins these rows onto the frontier by
-        # host, so a duplicate would multiply that host's rows.
-        seen: set[str] = set()
-        deduped = tuple(
-            (h, r) for h, r in self.host_rates
-            if not (h in seen or seen.add(h))
-        )
-        if len(deduped) != len(self.host_rates):
-            object.__setattr__(self, "host_rates", deduped)
 
     @property
     def per_host_budget(self) -> int:
         return _budget_from_rate(self.per_host_rate, self.round_seconds)
-
-    def rate_for(self, host: str) -> float:
-        for h, r in self.host_rates:
-            if h == host:
-                return r
-        return self.per_host_rate
-
-    def budget_for(self, host: str) -> int:
-        """Token-bucket page budget for ONE round of `host`."""
-        return _budget_from_rate(self.rate_for(host), self.round_seconds)
 
 
 def priority_for_type() -> F.Column:
@@ -199,12 +163,12 @@ def parse_robots_rules(
     host: str, robots_txt: str, user_agent: str = "*"
 ) -> tuple[tuple[str, str, int, bool], ...]:
     """Full RFC-9309 rule parse -> (host, path_regex, specificity,
-    is_allow) tuples for `apply_robots`'s longest-match evaluation:
-    the matching rule with the LONGEST raw pattern decides; on a tie
-    Allow wins; no matching rule = allowed. '*' and trailing '$' per
-    `_path_pattern_to_regex`. Group semantics identical to parse_robots
-    (consecutive User-agent lines open a group; rules count from groups
-    matching `user_agent` or '*'). Empty Allow/Disallow values are
+    is_allow) tuples (ROBOTS_RULES_SCHEMA rows) for apply_robots_rules'
+    longest-match evaluation: the matching rule with the LONGEST raw
+    pattern decides; on a tie Allow wins; no matching rule = allowed. '*'
+    and trailing '$' per `_path_pattern_to_regex`. Standard group
+    semantics: consecutive User-agent lines open a group; rules count from
+    groups matching `user_agent` or '*'. Empty Allow/Disallow values are
     skipped (an empty Disallow is allow-all already). Hostile-input caps:
     only the first 500 KiB of the body is parsed (RFC 9309 §2.4) and
     rules longer than _MAX_RULE_LEN are ignored (the de-facto crawler
@@ -246,30 +210,9 @@ def parse_robots_rules(
     return tuple(rules)
 
 
-def parse_robots(host: str, robots_txt: str, user_agent: str = "*") -> tuple[tuple[str, str], ...]:
-    """Minimal robots.txt parse -> (host, path_regex) disallow rules for
-    `apply_robots`. Standard group semantics: consecutive User-agent lines
-    open a group, Disallow lines apply to the open group; rules are taken
-    from groups matching `user_agent` or '*'. Empty Disallow = allow-all
-    (skipped). '*' wildcards in paths become '.*'; the prefix is anchored.
-    Like the reference's one-time cookie fetch, the robots fetch+parse is
-    a driver-side, once-per-host operation whose result is compiled into
-    the plan (the broadcast-robots-cache analog).
-
-    Exactly the is_allow=False projection of parse_robots_rules — ONE
-    group-semantics state machine exists; keep it that way (a tweak
-    applied to only one parser would silently diverge the legacy
-    disallow path from the rules path)."""
-    return tuple(
-        (h, rx)
-        for h, rx, _spec, allow in parse_robots_rules(host, robots_txt, user_agent)
-        if not allow
-    )
-
-
 def parse_crawl_delay(robots_txt: str, user_agent: str = "*") -> float | None:
     """Crawl-delay (seconds between requests) from robots.txt, honoring the
-    same group semantics as parse_robots: the directive counts only inside
+    same group semantics as parse_robots_rules: the directive counts only inside
     a group matching `user_agent` or '*'. A specific-agent group's value
     wins over a wildcard group's; malformed / non-positive values are
     ignored. Returns None when no applicable directive exists. Only the
@@ -311,71 +254,6 @@ def parse_crawl_delay(robots_txt: str, user_agent: str = "*") -> float | None:
     return specific if specific is not None else wildcard
 
 
-def politeness_from_robots(
-    cfg: PolitenessConfig,
-    robots_by_host: dict[str, str],
-    user_agent: str = "*",
-) -> PolitenessConfig:
-    """Fold fetched robots.txt bodies into the politeness config:
-    Allow/Disallow rules extend cfg.robots_rules, Crawl-delay becomes a
-    per-host rate override (rate = 1/delay pages/sec). Driver-side, once per host — the
-    broadcast-robots-cache shape (the per-host dimension is tiny; the
-    scheduler turns the resulting config into tiny broadcast relations)."""
-    from dataclasses import replace
-
-    rules = list(cfg.robots_rules)
-    ruled = {h for h, _rx, _s, _a in rules}
-    rates = list(cfg.host_rates)
-    overridden = {h for h, _ in rates}
-    for host, txt in sorted(robots_by_host.items()):
-        # full Allow/Disallow rules with longest-match semantics; a host
-        # whose rules are already folded in is skipped (idempotent calls)
-        if host not in ruled:
-            new_rules = parse_robots_rules(host, txt, user_agent)
-            if new_rules:
-                rules.extend(new_rules)
-                ruled.add(host)
-        delay = parse_crawl_delay(txt, user_agent)
-        # an explicit config override outranks the robots Crawl-delay;
-        # repeated calls are idempotent (no duplicate accumulation)
-        if delay is not None and host not in overridden:
-            # a subnormal-tiny delay makes 1/delay inf — clamp so the
-            # resulting config passes its own finite-rate validation
-            rates.append((host, min(1.0 / delay, float(_INT32_MAX))))
-            overridden.add(host)
-    return replace(cfg, robots_rules=tuple(rules), host_rates=tuple(rates))
-
-
-def apply_robots(
-    frontier: DataFrame,
-    cfg: PolitenessConfig,
-    many_hosts: bool = False,
-    n_buckets: int = 32,
-) -> DataFrame:
-    """Drop the URLs the config's robots rules disallow.
-
-    - cfg.robots_rules: RFC-9309 longest-match — the matching rule with
-      the longest pattern decides, Allow wins ties, no match = allowed.
-      This is what lets an Allow carve a hole inside a Disallow prefix.
-    - cfg.disallow: explicit any-match drops. Each entry becomes a
-      Disallow rule whose specificity outranks every robots rule (rule
-      specificity is a pattern length, capped far below int32), so a
-      match drops the URL whatever robots_rules say.
-
-    Both are folded into ONE ROBOTS_RULES_SCHEMA relation and evaluated by
-    apply_robots_rules, the same join + array-HOF the web-scale rules
-    relation takes. With no rules the frontier is returned as is: an empty
-    createDataFrame relation is a Scan ExistingRDD that Catalyst does not
-    prune, so joining it would still cost a shuffle and a broadcast."""
-    rules = list(cfg.robots_rules) + [
-        (h, rx, _INT32_MAX, False) for h, rx in cfg.disallow
-    ]
-    if not rules:
-        return frontier
-    rel = frontier.sparkSession.createDataFrame(rules, ROBOTS_RULES_SCHEMA)
-    return apply_robots_rules(frontier, rel, many_hosts=many_hosts, n_buckets=n_buckets)
-
-
 # rule rows as a RELATION — the web-scale robots shape: at 10^6+ hosts
 # neither the robots bodies nor their parsed rules fit driver literals,
 # so they live as DataFrames end to end (parse_robots_rules_distributed
@@ -391,9 +269,9 @@ def parse_robots_rules_distributed(
 ) -> DataFrame:
     """Distributed robots parse: (host, robots_txt) rows -> RFC-9309 rule
     rows, Arrow-batched mapInPandas calling THE parse_robots_rules state
-    machine per body — one parser, two transports. The bodies (fetched by
-    the crawl itself at open-web scale) and the resulting rules never
-    transit the driver; feed the output to apply_robots_rules."""
+    machine per body. The bodies (fetched by the crawl itself at open-web
+    scale) and the resulting rules never transit the driver; feed the
+    output to apply_robots_rules."""
     import pandas as pd
 
     ua = user_agent
@@ -422,10 +300,8 @@ def crawl_delay_budgets(
     txt_col: str = "robots_txt",
 ) -> DataFrame:
     """Distributed Crawl-delay parse: (host, robots_txt) rows -> (host,
-    budget int, rate double) rows for schedule_round's budgets_df — the
-    web-scale replacement for politeness_from_robots' driver-side
-    host_rates tuples (10^6 robots'd hosts cannot be config literals),
-    covering BOTH of that path's consumers: `budget` drives the
+    budget int, rate double) rows for schedule_round's budgets_df. It
+    feeds both consumers of a per-host rate: `budget` drives the
     scheduler's token-bucket cut and `rate` (pages/sec = 1/delay) rides
     fetch_now as the `host_rate` column fetch_pages prices virtual cost
     from. Same group semantics (parse_crawl_delay); hosts without an
@@ -457,6 +333,21 @@ def crawl_delay_budgets(
     return robots.mapInPandas(parse, schema="host string, budget int, rate double")
 
 
+def robots_relations(
+    robots: DataFrame, cfg: PolitenessConfig, user_agent: str = "*"
+) -> tuple[DataFrame, DataFrame]:
+    """(host, robots_txt) bodies -> (budgets_df, rules_df), the two
+    relations schedule_round takes: Crawl-delay budgets
+    (crawl_delay_budgets) and Allow/Disallow rules
+    (parse_robots_rules_distributed). Every caller that holds robots
+    bodies — a --robots-file, a bootstrap fetch — builds both here, so
+    neither half of a body can be dropped."""
+    return (
+        crawl_delay_budgets(robots, cfg, user_agent),
+        parse_robots_rules_distributed(robots, user_agent),
+    )
+
+
 def apply_robots_rules(
     frontier: DataFrame,
     rules: DataFrame,
@@ -464,8 +355,8 @@ def apply_robots_rules(
     n_buckets: int = 32,
 ) -> DataFrame:
     """Joined robots evaluation over a rules RELATION (ROBOTS_RULES_SCHEMA
-    rows — from parse_robots_rules_distributed, or cfg literals via
-    apply_robots). Per host the rules are packed into ONE array sorted by
+    rows, e.g. from parse_robots_rules_distributed). Per host the rules
+    are packed into ONE array sorted by
     (-specificity, Disallow-after-Allow) — longest match first, Allow
     first on ties — and the decision is `get(filter(rules, r -> url rlike
     r.rx), 0).allow` with null (no match / unruled host) meaning allowed.
@@ -524,21 +415,16 @@ def schedule_round(
 ) -> tuple[DataFrame, DataFrame]:
     """Split the deduplicated frontier into (fetch_now, deferred).
 
-    Robots: cfg's rules drop URLs first (apply_robots), then rules_df, an
-    optional ROBOTS_RULES_SCHEMA relation (parse_robots_rules_distributed)
-    through apply_robots_rules. They stay two successive filters: longest
-    match over their union could let a rules_df Allow outrank a cfg rule.
+    Robots: rules_df, an optional ROBOTS_RULES_SCHEMA relation
+    (parse_robots_rules_distributed), drops the URLs it disallows through
+    apply_robots_rules.
 
-    Per-host overrides: cfg.host_rates and budgets_df, an optional (host,
-    budget int[, rate double]) relation — the web-scale form of robots
-    Crawl-delay overrides (crawl_delay_budgets), for host universes where
-    driver-side tuples cannot hold. Both become ONE (host, budget, rate)
-    relation joined onto the metadata-sized offsets frame (broadcast, or
-    co-keyed shuffle under many_hosts), so the data side pays no extra
-    shuffle. Precedence matches politeness_from_robots: a cfg.host_rates
-    entry outranks budgets_df rows for the same host; duplicate budgets_df
-    rows of one host are deduplicated (most-conservative wins); hosts in
-    neither use cfg.per_host_budget. With neither source the budget is a
+    Per-host overrides: budgets_df, an optional (host, budget int[, rate
+    double]) relation (crawl_delay_budgets), is clamped, deduplicated to
+    one row per host (most-conservative wins) and joined onto the
+    metadata-sized offsets frame (broadcast, or co-keyed shuffle under
+    many_hosts), so the data side pays no extra shuffle. Hosts without a
+    row use cfg.per_host_budget. Without budgets_df the budget is a
     literal and no join is added.
 
     fetch_now rows carry:
@@ -565,7 +451,7 @@ def schedule_round(
     person/institution catalog page outranks project detail pages — by
     design, catalogs widen the frontier fastest.
     """
-    f = apply_robots(frontier, cfg, many_hosts=many_hosts, n_buckets=n_buckets)
+    f = frontier
     if rules_df is not None:
         f = apply_robots_rules(f, rules_df, many_hosts=many_hosts, n_buckets=n_buckets)
     added_bucket = "host_bucket" not in f.columns
@@ -609,8 +495,8 @@ def schedule_round(
     )
     budget: F.Column = F.lit(cfg.per_host_budget)
     rate: F.Column = F.lit(float(cfg.per_host_rate))
-    overrides = _host_overrides(f.sparkSession, cfg, budgets_df)
-    if overrides is not None:
+    if budgets_df is not None:
+        overrides = _host_overrides(cfg, budgets_df)
         off = off.join(
             overrides if many_hosts else F.broadcast(overrides), "host", "left"
         )
@@ -662,24 +548,12 @@ def schedule_round(
     return fetch_now, deferred
 
 
-def _host_overrides(
-    spark, cfg: PolitenessConfig, budgets_df: DataFrame | None
-) -> DataFrame | None:
-    """cfg.host_rates + budgets_df -> one (host, _budget int, _rate double)
-    relation with one row per host, or None when neither has rows. A null
-    _budget/_rate means the cfg default for that column."""
-    src = None
-    if cfg.host_rates:
-        # already deduped per host, first wins (__post_init__)
-        src = spark.createDataFrame(
-            [(h, _budget_from_rate(r, cfg.round_seconds), float(r), True)
-             for h, r in cfg.host_rates],
-            "host string, _budget int, _rate double, _cfg boolean",
-        )
-    if budgets_df is None:
-        return None if src is None else src.drop("_cfg")
+def _host_overrides(cfg: PolitenessConfig, budgets_df: DataFrame) -> DataFrame:
+    """budgets_df -> one (host, _budget int, _rate double) relation with
+    one row per host. A null _budget/_rate means the cfg default for that
+    column."""
     # clamp at the boundary: schedule_round accepts ARBITRARY relations,
-    # so restore the cfg-path invariant budget in [1, INT32_MAX] here —
+    # so restore the invariant budget in [1, INT32_MAX] here —
     # a zero/negative row (or a long value a non-ANSI cast('int') would
     # wrap negative) must not starve its host forever, and a
     # non-positive/NaN rate falls back to the default rate (null).
@@ -716,18 +590,11 @@ def _host_overrides(
     else:
         # budget-only relation: recover pages/sec from the budget
         rate = budget.cast("double") / F.lit(float(cfg.round_seconds))
-    ext = budgets_df.select(
-        "host", budget.alias("_budget"), rate.alias("_rate"), F.lit(False).alias("_cfg")
+    # one row per host: crawl_delay_budgets emits one per robots body,
+    # and bodies accumulated across re-fetches can repeat a host — the
+    # most conservative (smallest budget, slowest rate) wins. Un-deduped,
+    # each duplicate would MULTIPLY that host's frontier rows through the
+    # offsets join.
+    return budgets_df.groupBy("host").agg(
+        F.min(budget).alias("_budget"), F.min(rate).alias("_rate")
     )
-    if src is not None:
-        ext = src.unionByName(ext)
-    # one row per host: a cfg row outranks the relation's rows (its
-    # values are never null); among relation rows — crawl_delay_budgets
-    # emits one per robots body, and bodies accumulated across re-fetches
-    # can repeat a host — the most conservative (smallest budget, slowest
-    # rate) wins. Un-deduped, each duplicate would MULTIPLY that host's
-    # frontier rows through the offsets join.
-    return ext.groupBy("host").agg(*[
-        F.coalesce(F.min(F.when(F.col("_cfg"), F.col(c))), F.min(c)).alias(c)
-        for c in ("_budget", "_rate")
-    ])

@@ -504,9 +504,13 @@ def crawl_json_api_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def crawl_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Politeness robots.txt disallow filter (operators/politeness.py
-    apply_robots): per-host path-regex disallows as a rules relation —
-    h1 blocks /private/*, h2 blocks everything."""
-    from ba_gepris_crawler_spark.operators.politeness import PolitenessConfig, apply_robots
+    apply_robots_rules): per-host path-regex Disallow rows as a
+    ROBOTS_RULES_SCHEMA relation — h1 blocks /private/*, h2 blocks
+    everything."""
+    from ba_gepris_crawler_spark.operators.politeness import (
+        ROBOTS_RULES_SCHEMA,
+        apply_robots_rules,
+    )
 
     d = _t(spark, sf_dir, "documents").select(
         "doc_id",
@@ -516,8 +520,11 @@ def crawl_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id").cast("string"),
         ).alias("path"),
     ).withColumn("url", F.col("path"))
-    cfg = PolitenessConfig(disallow=(("h1.example.org", "^/private/"), ("h2.example.org", ".*")))
-    return apply_robots(d, cfg).select("doc_id", "host", "path").orderBy("doc_id")
+    rules = spark.createDataFrame(
+        [("h1.example.org", "^/private/", 10, False), ("h2.example.org", ".*", 2, False)],
+        ROBOTS_RULES_SCHEMA,
+    )
+    return apply_robots_rules(d, rules).select("doc_id", "host", "path").orderBy("doc_id")
 
 
 @_q(
@@ -576,17 +583,16 @@ def crawl_cookie_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def crawl_robots_allow_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFC-9309 Allow/wildcard robots evaluation end to end through the
-    REAL modules (politeness.parse_robots_rules -> politeness_from_robots
-    -> apply_robots): h1's robots Disallows /private/ but an Allow carves
+    REAL modules (politeness.parse_robots_rules_distributed ->
+    apply_robots_rules): h1's robots Disallows /private/ but an Allow carves
     the /private/press/ hole (longest match wins), and a '/*.pdf$' pattern
     blocks by suffix — the trailing '$' anchors the URL end, so '.pdf?x=1'
     stays crawlable. h0 serves no robots and is untouched. Beyond the
     reference (which has no robots at all); the oracle replays the net
     keep-set with LIKE algebra."""
     from ba_gepris_crawler_spark.operators.politeness import (
-        PolitenessConfig,
-        apply_robots,
-        politeness_from_robots,
+        apply_robots_rules,
+        parse_robots_rules_distributed,
     )
 
     txt = (
@@ -595,7 +601,7 @@ def crawl_robots_allow_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Allow: /private/press/\n"
         "Disallow: /*.pdf$\n"
     )
-    cfg = politeness_from_robots(PolitenessConfig(), {"h1.example.org": txt})
+    robots = spark.createDataFrame([("h1.example.org", txt)], "host string, robots_txt string")
     d = _t(spark, sf_dir, "documents").select(
         "doc_id",
         F.concat(F.lit("h"), (F.col("doc_id") % 2).cast("string"), F.lit(".example.org")).alias("host"),
@@ -608,7 +614,8 @@ def crawl_robots_allow_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.concat(F.lit("/public/"), F.col("doc_id").cast("string"))),
         ).alias("url"),
     )
-    return apply_robots(d, cfg).select("doc_id", "host", "url").orderBy("doc_id")
+    rules = parse_robots_rules_distributed(robots)
+    return apply_robots_rules(d, rules).select("doc_id", "host", "url").orderBy("doc_id")
 
 
 @_q(
@@ -636,8 +643,7 @@ def crawl_robots_distributed_parse(spark: SparkSession, sf_dir: str) -> DataFram
     apply_robots_rules (per-host sorted rule arrays joined onto the
     frontier, longest-match via one array HOF). Nothing — bodies, rules,
     or decisions — transits the driver, the regime for 10^6+ robots'd
-    hosts where the cfg-literal path (crawl_robots_allow_filter) cannot
-    hold. Each of 3 hosts Disallows /private{i}/ with an Allow carving
+    hosts. Each of 3 hosts Disallows /private{i}/ with an Allow carving
     /private{i}/press/ and a '/*.pdf$' suffix block; the oracle replays
     the keep-set with LIKE algebra."""
     from ba_gepris_crawler_spark.operators.politeness import (
@@ -688,16 +694,16 @@ def crawl_robots_distributed_parse(spark: SparkSession, sf_dir: str) -> DataFram
     """,
 )
 def crawl_robots_txt_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """robots.txt text -> parsed disallow rules -> plan filter, end to end
-    through the REAL module (politeness.parse_robots + apply_robots): h1
-    serves a robots.txt disallowing /private/ and /tmp/*.bak for the
-    wildcard agent (plus an inapplicable googlebot group), h2 disallows
-    everything. The robots fetch+parse is driver-side once per host (the
-    broadcast robots-cache analog); the oracle replays the net filter."""
+    """robots.txt text -> parsed rules -> plan filter, end to end through
+    the REAL module (politeness.parse_robots_rules_distributed ->
+    apply_robots_rules): h1 serves a robots.txt disallowing /private/ and
+    /tmp/*.bak for the wildcard agent (plus an inapplicable googlebot
+    group), h2 disallows everything. The rules relation is broadcast onto
+    the frontier (the broadcast robots-cache analog); the oracle replays
+    the net filter."""
     from ba_gepris_crawler_spark.operators.politeness import (
-        PolitenessConfig,
-        apply_robots,
-        parse_robots,
+        apply_robots_rules,
+        parse_robots_rules_distributed,
     )
 
     h1_txt = (
@@ -705,8 +711,8 @@ def crawl_robots_txt_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         "User-agent: *\nDisallow: /private/\nDisallow: /tmp/*.bak\n"
     )
     h2_txt = "User-agent: *\nDisallow: /\n"
-    cfg = PolitenessConfig(
-        disallow=parse_robots("h1.example.org", h1_txt) + parse_robots("h2.example.org", h2_txt)
+    robots = spark.createDataFrame(
+        [("h1.example.org", h1_txt), ("h2.example.org", h2_txt)], "host string, robots_txt string"
     )
     d = _t(spark, sf_dir, "documents").select(
         "doc_id",
@@ -718,7 +724,8 @@ def crawl_robots_txt_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.concat(F.lit("/public/"), F.col("doc_id").cast("string"))),
         ).alias("url"),
     )
-    return apply_robots(d, cfg).select("doc_id", "host", "url").orderBy("doc_id")
+    rules = parse_robots_rules_distributed(robots)
+    return apply_robots_rules(d, rules).select("doc_id", "host", "url").orderBy("doc_id")
 
 
 @_q(
@@ -740,16 +747,16 @@ def crawl_robots_txt_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def crawl_crawl_delay_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """robots.txt Crawl-delay -> per-host token-bucket budgets, end to end
-    through the REAL modules (politeness.parse_crawl_delay ->
-    politeness_from_robots -> schedule_round): h0 serves Crawl-delay 0.5
-    (rate 2/s -> budget 2; an inapplicable googlebot group says 9), h1
-    serves 0.25 (budget 4), h2 serves no robots and keeps the default rate
-    20 (budget 20). The config's rate overrides reach the cut as a tiny
-    broadcast (host, budget, rate) relation — the broadcast robots-cache
-    analog. The oracle replays the per-host rank + CASE budget cut."""
+    through the REAL modules (politeness.crawl_delay_budgets ->
+    schedule_round): h0 serves Crawl-delay 0.5 (rate 2/s -> budget 2; an
+    inapplicable googlebot group says 9), h1 serves 0.25 (budget 4), h2
+    serves no robots and keeps the default rate 20 (budget 20). The
+    budgets relation reaches the cut as a tiny broadcast (host, budget,
+    rate) join — the broadcast robots-cache analog. The oracle replays the
+    per-host rank + CASE budget cut."""
     from ba_gepris_crawler_spark.operators.politeness import (
         PolitenessConfig,
-        politeness_from_robots,
+        crawl_delay_budgets,
         schedule_round,
     )
 
@@ -761,21 +768,24 @@ def crawl_crawl_delay_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % 4).cast("int").alias("host_bucket"),
     )
     base = PolitenessConfig(per_host_rate=20, round_seconds=1.0, max_in_flight=5)
-    robots = {
-        "h0": "User-agent: googlebot\nCrawl-delay: 9\n\n"
-              "User-agent: *\nDisallow:\nCrawl-delay: 0.5\n",
-        "h1": "User-agent: *\nCrawl-delay: 0.25\n",
-    }
-    cfg = politeness_from_robots(base, robots)
-    fetch_now, deferred = schedule_round(d, cfg, n_buckets=4)
+    robots = spark.createDataFrame(
+        [
+            ("h0", "User-agent: googlebot\nCrawl-delay: 9\n\n"
+                   "User-agent: *\nDisallow:\nCrawl-delay: 0.5\n"),
+            ("h1", "User-agent: *\nCrawl-delay: 0.25\n"),
+        ],
+        "host string, robots_txt string",
+    )
+    budgets = crawl_delay_budgets(robots, base)
+    fetch_now, deferred = schedule_round(d, base, n_buckets=4, budgets_df=budgets)
     fn = fetch_now.groupBy("host").agg(F.count(F.lit(1)).alias("n_fetch_now"))
     dn = deferred.groupBy("host").agg(F.count(F.lit(1)).alias("n_deferred"))
-    budget_of = F.create_map(*[F.lit(x) for h, _r in cfg.host_rates for x in (h, cfg.budget_for(h))])
     return (
         fn.join(dn, "host", "full")
+        .join(budgets.select("host", "budget"), "host", "left")
         .select(
             "host",
-            F.coalesce(budget_of[F.col("host")], F.lit(cfg.per_host_budget)).cast("bigint").alias("budget"),
+            F.coalesce("budget", F.lit(base.per_host_budget)).cast("bigint").alias("budget"),
             F.coalesce("n_fetch_now", F.lit(0)).alias("n_fetch_now"),
             F.coalesce("n_deferred", F.lit(0)).alias("n_deferred"),
         )

@@ -99,14 +99,14 @@ class CrawlEngine:
         self._bloom = None  # incremental bloom state (rebuilt on resume)
         self._bloom_round: int = -10
         # Optional per-host budgets RELATION (host, budget int[, rate
-        # double]) — the web-scale form of robots Crawl-delay politeness
-        # (operators/politeness.crawl_delay_budgets over fetched bodies).
-        # A DataFrame, so it lives outside the serialized CrawlSettings
-        # (config replay stays pure literals); callers that fetch robots
-        # as data set it once and every round's scheduler + fetch-cost
-        # model honor it. cfg.host_rates entries still outrank its rows.
-        # The engine localCheckpoints it on first use (else every round
-        # would re-parse every robots body through the mapInPandas plan),
+        # double]) — robots Crawl-delay politeness, the only per-host rate
+        # override (operators/politeness.crawl_delay_budgets over fetched
+        # bodies). A DataFrame, so it lives outside the serialized
+        # CrawlSettings (config replay stays pure literals); callers that
+        # fetch robots as data set it once and every round's scheduler +
+        # fetch-cost model honor it. The engine localCheckpoints it on
+        # first use (else every round would re-parse every robots body
+        # through the mapInPandas plan),
         # records its use in the manifest counters, and resume() refuses
         # to continue without it (the relation is data the manifest cannot
         # replay — silently dropping it would change politeness mid-crawl).
@@ -337,7 +337,7 @@ class CrawlEngine:
         )
         staged_validators = self._recrawl_validators if recrawl is not None else None
         fetched = fetch_pages(
-            fetch_now, self.site, s.politeness.per_host_rate, s.n_buckets,
+            fetch_now, self.site, s.n_buckets,
             session_token=token, epoch=epoch, fmt=s.fetch_format,
             transport=self.transport, validators=staged_validators,
         )
@@ -769,16 +769,14 @@ class CrawlEngine:
            robots evaluation before budgeting;
         4. Sitemap: lines -> fetch each sitemap -> parse urlset ->
            engine.seed_urls_df, merged into the round-0 frontier next to
-           the catalog seeds.
+           the catalog seeds. Seeds matter only to round 0, so a store
+           that already committed a round skips this step.
 
         Call once before run(); returns counts. Resume note: budgets_df
-        is data, not config — a resumed engine re-runs this (or re-sets
-        budgets_df) exactly like the --robots-file flow."""
+        and rules_df are data, not config — a resumed engine re-runs this
+        (or re-sets them) exactly like the --robots-file flow."""
         from ba_gepris_crawler_spark.operators.fetch import fetch_raw_bodies
-        from ba_gepris_crawler_spark.operators.politeness import (
-            crawl_delay_budgets,
-            parse_robots_rules_distributed,
-        )
+        from ba_gepris_crawler_spark.operators.politeness import robots_relations
         from ba_gepris_crawler_spark.operators.sitemaps import (
             parse_sitemap_entries,
             sitemap_urls_from_robots,
@@ -799,10 +797,12 @@ class CrawlEngine:
             .localCheckpoint(eager=True)  # one fetch feeds budgets AND discovery
         )
         n_robots = robots.count()
-        self.budgets_df = crawl_delay_budgets(robots, self.s.politeness)
-        self._budgets_ckpt = False  # run_round materializes it once
-        self.rules_df = parse_robots_rules_distributed(robots)
-        self._rules_ckpt = False
+        self.budgets_df, self.rules_df = robots_relations(robots, self.s.politeness)
+        # run_round materializes each once
+        self._budgets_ckpt = self._rules_ckpt = False
+        counts = {"hosts": len(self.site.hosts), "robots_fetched": n_robots}
+        if self.store.latest_round() is not None:
+            return counts
         sm_urls = sitemap_urls_from_robots(robots).select(
             F.col("sitemap_url").alias("url"), "host"
         )
@@ -816,9 +816,7 @@ class CrawlEngine:
         self.seed_urls_df = entries.select(F.col("loc").alias("url")).localCheckpoint(
             eager=True
         )
-        n_seeds = self.seed_urls_df.count()
-        return {"hosts": len(self.site.hosts), "robots_fetched": n_robots,
-                "sitemap_seeds": n_seeds}
+        return {**counts, "sitemap_seeds": self.seed_urls_df.count()}
 
     def enqueue_error_retries(
         self,

@@ -84,8 +84,8 @@ def simulate_crawl(
     host_budgets: dict[str, int] | None = None,
 ) -> SimResult:
     """host_budgets: per-host round-budget overrides (the robots Crawl-delay
-    analog, PolitenessConfig.host_rates); hosts not listed use
-    per_host_budget."""
+    budgets relation, politeness.crawl_delay_budgets -> schedule_round's
+    budgets_df); hosts not listed use per_host_budget."""
     res = SimResult()
     frontier: dict[str, Entry] = {e.url: e for e in _seed_entries(cfg)}
     for rnd in range(max_rounds):

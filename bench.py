@@ -173,7 +173,7 @@ def main() -> None:
                 t0 = time.time()
                 # measured through SPAN MATERIALIZATION: fetch_pages returns
                 # parsed spans, not just the raw string ship
-                fetched = fetch_pages(fetch_now, site, cfgp.per_host_rate, 32)
+                fetched = fetch_pages(fetch_now, site, 32)
                 fetched.write.format("noop").mode("overwrite").save()
                 fetch_sec = time.time() - t0
                 queries["fetch_only"] = round(fetch_sec, 3)

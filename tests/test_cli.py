@@ -72,6 +72,33 @@ def test_retry_errors_replays_bootstrap_robots(crawl, capsys):
     assert out[1]["fetched"] == out[0]["retries_enqueued"]
 
 
+def test_reopened_bootstrap_crawl_fetches_no_sitemap(spark, crawl, tmp_path):
+    """Reopening a --bootstrap-robots crawl that has committed a round
+    re-fetches robots.txt for its budgets and rules relations, but no
+    sitemap: sitemap seeds matter only to round 0."""
+    from ba_gepris_crawler_spark.cli import _rebuild_from_config
+    from ba_gepris_crawler_spark.operators.transport import SyntheticTransport
+    from ba_gepris_crawler_spark.plans.round_loop import CrawlEngine
+
+    log = tmp_path / "fetched.txt"
+
+    class RecordingTransport(SyntheticTransport):
+        def fetch_batch(self, cfg, urls, token, epoch, as_json, etags=None):
+            with open(log, "a") as fh:
+                fh.writelines(u + "\n" for u in urls)
+            return super().fetch_batch(cfg, urls, token, epoch, as_json, etags=etags)
+
+    store = SnapshotStore(spark, crawl)
+    site, settings = _rebuild_from_config(store.load_config())
+    engine = CrawlEngine(spark, site, store, settings)
+    engine.transport = RecordingTransport()
+    engine.bootstrap_from_robots()
+    fetched = log.read_text().splitlines()
+    assert fetched and all(u.endswith("/robots.txt") for u in fetched), fetched
+    assert engine.budgets_df is not None and engine.rules_df is not None
+    assert engine.seed_urls_df is None
+
+
 def test_done_manifest_has_fetching_round_counter_keys(bootstrap_crawl):
     """The empty round that ends a crawl commits the same counter keys as
     a fetching round, so readers can index any manifest alike."""

@@ -266,43 +266,72 @@ def test_published_tables_nonempty(spark, crawl_cfg, tmp_path_factory):
     assert pub["project_person_relations"].count() > 0
 
 
-def test_crawl_delay_per_host_budgets_match_golden(spark, tmp_path_factory):
-    """E2E with robots Crawl-delay overrides (VERDICT r2 #5): the engine
-    crawl with per-host rates must (a) never exceed each host's OWN budget
-    in any round and (b) stay trace-equal to the golden simulator running
-    the same per-host budgets."""
-    from ba_gepris_crawler_spark.operators.politeness import politeness_from_robots
+SLOW_BUDGETS = {"slow.example.org": 8}  # Crawl-delay 0.125 s at 1 s rounds
+
+
+@pytest.fixture(scope="module")
+def crawl_delay_run(spark, tmp_path_factory):
+    """One engine crawl throttled by a crawl_delay_budgets relation on
+    engine.budgets_df, shared by the two per-host budget tests below."""
+    from ba_gepris_crawler_spark.operators.politeness import crawl_delay_budgets
 
     cfg = SiteConfig(
         hosts=("slow.example.org", "fast.example.org"),
         n_projects=24, n_persons=12, n_institutions=4,
         hits_per_page=7, seed=21,
     )
-    base = PolitenessConfig(per_host_rate=30, round_seconds=1.0, max_in_flight=5)
-    pol = politeness_from_robots(
-        base, {"slow.example.org": "User-agent: *\nCrawl-delay: 0.125\n"}  # budget 8
-    )
-    assert pol.budget_for("slow.example.org") == 8
-    assert pol.budget_for("fast.example.org") == 30
-
+    pol = PolitenessConfig(per_host_rate=30, round_seconds=1.0, max_in_flight=5)
+    robots = spark.createDataFrame(
+        [("slow.example.org", "User-agent: *\nCrawl-delay: 0.125\n")],
+        "host string, robots_txt string")
     store = SnapshotStore(spark, tmp_path_factory.mktemp("crawl_delay"))
-    settings = CrawlSettings(n_buckets=8, politeness=pol, extract=False)
-    manifests = CrawlEngine(spark, cfg, store, settings).run(max_rounds=40)
+    eng = CrawlEngine(spark, cfg, store, CrawlSettings(
+        n_buckets=8, politeness=pol, extract=False))
+    eng.budgets_df = crawl_delay_budgets(robots, pol)
+    manifests = eng.run(max_rounds=40)
+    golden = simulate_crawl(
+        cfg, per_host_budget=pol.per_host_budget, max_rounds=40, n_buckets=8,
+        host_budgets=SLOW_BUDGETS,
+    )
+    return eng, store, manifests, golden
+
+
+def test_crawl_delay_per_host_budgets_match_golden(crawl_delay_run):
+    """E2E with robots Crawl-delay overrides (VERDICT r2 #5): an engine
+    crawl throttled by a crawl_delay_budgets relation must (a) never
+    exceed each host's OWN budget in any round and (b) stay trace-equal to
+    the golden simulator running the same per-host budgets."""
+    _, store, manifests, golden = crawl_delay_run
     assert manifests[-1]["counters"]["done"]
+    budgets = {"fast.example.org": 30, **SLOW_BUDGETS}
 
     log = store.read_union("url_seen", store.latest_round())
     per = log.groupBy("round", "host").count().collect()
     for r in per:
-        assert r["count"] <= pol.budget_for(r["host"]), (r["round"], r["host"], r["count"])
+        assert r["count"] <= budgets[r["host"]], (r["round"], r["host"], r["count"])
     # the slow host was actually throttled below the default at least once
     assert any(r["host"] == "slow.example.org" and r["count"] == 8 for r in per)
 
-    golden = simulate_crawl(
-        cfg, per_host_budget=base.per_host_budget, max_rounds=40, n_buckets=8,
-        host_budgets={"slow.example.org": 8},
-    )
     got = sorted((r.round, r.seq, r.url) for r in log.select("round", "seq", "url").collect())
     assert got == sorted(golden.trace)
+
+
+def test_engine_budgets_df_relation_equals_cfg_path(crawl_delay_run):
+    """Review r4: the budgets RELATION must be reachable from the engine
+    (engine.budgets_df, recorded in every manifest), and the crawl it
+    throttles must fetch the identical (url, round) set as the same
+    per-host budget given as driver-side config — the golden simulator's
+    host_budgets, now that the relation is the engine's only input."""
+    eng, store, manifests, golden = crawl_delay_run
+    assert eng.budgets_df is not None
+    assert all(m["counters"]["budgets_df"] for m in manifests)
+    rows = {r.host: r.budget for r in eng.budgets_df.collect()}
+    assert rows == SLOW_BUDGETS
+
+    trace_rel = sorted(
+        (r.url, r.round) for r in store.read_union("url_seen", store.latest_round()).collect())
+    trace_cfg = sorted((url, rnd) for (rnd, _seq, url) in golden.trace)
+    assert trace_rel == trace_cfg and len(trace_rel) > 0
 
 
 def test_json_api_crawl_equals_html_crawl(spark, crawl_cfg, tmp_path_factory, run):
@@ -543,16 +572,24 @@ def test_cli_validation_is_json_and_pre_spark(tmp_path, capsys):
         assert not bad_root.exists()
 
 
-def test_rebuild_from_config_ignores_legacy_seen_gate_and_span_transport_keys():
+def test_rebuild_from_config_ignores_legacy_seen_gate_and_span_transport_keys(
+    tmp_path, capsys, monkeypatch
+):
     """Stores created before the bloom gate became the only URL-seen gate
     persisted three more keys in config.json, one of them naming a second
     gate; stores created before json became the only span wire format
-    persisted a `span_transport` key. Resuming such a store must replay
+    persisted a `span_transport` key; stores created before robots rules
+    and rate overrides became relations persisted three literal
+    politeness lists, always empty. Resuming such a store must replay
     exactly the settings of the same config without those keys (both
-    gates were admission-only and all span transports were byte-equal, so
-    the crawl is the same). Pure Python: no Spark."""
+    gates were admission-only, all span transports were byte-equal and
+    the lists were empty, so the crawl is the same). A NON-empty
+    politeness list is refused before the JVM starts: dropping it would
+    relax politeness. Pure Python: no Spark."""
+    import json as _json
     from dataclasses import asdict
 
+    from ba_gepris_crawler_spark import cli
     from ba_gepris_crawler_spark.cli import _rebuild_from_config
 
     site = SiteConfig(hosts=("h00.gepris.example.org", "h01.gepris.example.org"), n_projects=20)
@@ -571,6 +608,27 @@ def test_rebuild_from_config_ignores_legacy_seen_gate_and_span_transport_keys():
     }
     assert _rebuild_from_config({**cfg, **legacy_keys}) == _rebuild_from_config(cfg)
     assert not set(legacy_keys) & set(CrawlSettings.__dataclass_fields__)
+
+    legacy_pol = {"disallow": [], "host_rates": [], "robots_rules": []}
+    parent_era = {**cfg, "politeness": {**cfg["politeness"], **legacy_pol}}
+    assert _rebuild_from_config(parent_era) == _rebuild_from_config(cfg)
+    assert not set(legacy_pol) & set(PolitenessConfig.__dataclass_fields__)
+    refused = {**cfg, "politeness": {**cfg["politeness"], **legacy_pol,
+                                     "host_rates": [["h00.gepris.example.org", 2.0]]}}
+    with pytest.raises(ValueError, match="host_rates"):
+        _rebuild_from_config(refused)
+
+    # the CLI refuses it with the JSON-error exit, before Spark starts
+    (tmp_path / "manifests").mkdir()
+    (tmp_path / "config.json").write_text(_json.dumps(refused))
+
+    def no_spark(**_kw):
+        raise AssertionError("Spark started for a config it must refuse")
+
+    monkeypatch.setattr(cli, "get_spark", no_spark)
+    assert cli.main(["resume-crawl", str(tmp_path)]) == 2
+    err = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])["error"]
+    assert "invalid persisted config" in err and "host_rates" in err
 
 
 def test_cli_resume_rejects_corrupt_persisted_config(spark, tmp_path, capsys):
@@ -630,53 +688,6 @@ def test_tiered_compaction_legacy_manifest_never_merges(spark, tmp_path):
     assert got == {f"d{i}" for i in range(2 * per)}
 
 
-def test_engine_budgets_df_relation_equals_cfg_path(spark, tmp_path_factory):
-    """Review r4: the budgets RELATION must be reachable from the engine
-    (engine.budgets_df), and a crawl throttled by crawl_delay_budgets rows
-    must produce the identical url_seen trace as the same delay folded
-    into cfg via politeness_from_robots (the driver-side path)."""
-    from ba_gepris_crawler_spark.operators.politeness import (
-        crawl_delay_budgets,
-        politeness_from_robots,
-    )
-
-    cfg = SiteConfig(
-        hosts=("slow.example.org", "fast.example.org"),
-        n_projects=16, n_persons=8, n_institutions=4,
-        hits_per_page=7, seed=33,
-    )
-    bodies = {"slow.example.org": "User-agent: *\nCrawl-delay: 0.125\n"}  # budget 8
-    base = PolitenessConfig(per_host_rate=30, round_seconds=1.0, max_in_flight=5)
-
-    # relation path: budgets as a DataFrame on the engine
-    store_rel = SnapshotStore(spark, tmp_path_factory.mktemp("bud_rel"))
-    eng = CrawlEngine(spark, cfg, store_rel, CrawlSettings(
-        n_buckets=8, politeness=base, extract=False))
-    robots = spark.createDataFrame(list(bodies.items()), "host string, robots_txt string")
-    eng.budgets_df = crawl_delay_budgets(robots, base)
-    manifests = eng.run(max_rounds=40)
-    assert manifests[-1]["counters"]["done"]
-
-    # cfg path: same delay as a host_rates literal
-    store_cfg = SnapshotStore(spark, tmp_path_factory.mktemp("bud_cfg"))
-    pol = politeness_from_robots(base, bodies)
-    CrawlEngine(spark, cfg, store_cfg, CrawlSettings(
-        n_buckets=8, politeness=pol, extract=False)).run(max_rounds=40)
-
-    trace_rel = sorted(
-        (r.url, r.round) for r in
-        store_rel.read_union("url_seen", store_rel.latest_round()).collect())
-    trace_cfg = sorted(
-        (r.url, r.round) for r in
-        store_cfg.read_union("url_seen", store_cfg.latest_round()).collect())
-    assert trace_rel == trace_cfg and len(trace_rel) > 0
-    # the slow host was actually throttled to the relation budget
-    per = store_rel.read_union("url_seen", store_rel.latest_round()) \
-        .groupBy("round", "host").count().collect()
-    assert any(r["host"] == "slow.example.org" and r["count"] == 8 for r in per)
-    assert all(r["count"] <= 8 for r in per if r["host"] == "slow.example.org")
-
-
 def test_resume_refuses_to_drop_budgets_relation(spark, tmp_path_factory):
     """Review r4b: budgets_df is data, not serialized config — a resume
     without it would silently relax politeness mid-crawl. The manifest
@@ -709,18 +720,23 @@ def test_resume_refuses_to_drop_budgets_relation(spark, tmp_path_factory):
 
 
 def test_cli_robots_file_budgets_and_resume_reload(spark, tmp_path, capsys):
-    """--robots-file wires the budgets RELATION through the CLI: manifests
-    record budgets_df=true, the path persists in config.json, and resume
-    WITHOUT the flag reloads it (the relation is data the serialized
-    config cannot hold; the bodies file path is replayable). A missing
-    file follows the JSON-error contract (exit 2, no traceback)."""
+    """--robots-file wires the budgets AND rules relations through the
+    CLI: manifests record budgets_df=true and rules_df=true, h00's
+    `Disallow: /gepris/person/` keeps every h00 person detail page
+    unfetched, the path persists in config.json, and resume WITHOUT the
+    flag reloads both (the relations are data the serialized config cannot
+    hold; the bodies file path is replayable) — also from a config.json
+    that still carries the empty literal politeness lists older crawls
+    persisted. A missing file follows the JSON-error contract (exit 2, no
+    traceback)."""
     import json as _json
 
     from ba_gepris_crawler_spark.cli import main as cli_main
 
     bodies = tmp_path / "robots.parquet"
     spark.createDataFrame(
-        [("h0.example.org", "User-agent: *\nCrawl-delay: 0.05\n")],
+        [("h0.example.org", "User-agent: *\nCrawl-delay: 0.05\n"),
+         ("h00.gepris.example.org", "User-agent: *\nDisallow: /gepris/person/\n")],
         "host string, robots_txt string",
     ).write.mode("overwrite").parquet(str(bodies))
 
@@ -729,14 +745,21 @@ def test_cli_robots_file_budgets_and_resume_reload(spark, tmp_path, capsys):
         "new-crawl", str(root), "--projects", "200", "--hosts", "2",
         "--max-rounds", "2", "--robots-file", str(bodies),
     ]) == 0
-    lines = [l for l in capsys.readouterr().out.splitlines() if l.startswith("{")]
-    assert lines and all(_json.loads(l).get("budgets_df") for l in lines)
-    assert _json.load(open(root / "config.json"))["robots_file"] == str(bodies)
+    lines = [_json.loads(l) for l in capsys.readouterr().out.splitlines() if l.startswith("{")]
+    assert lines and all(c["budgets_df"] and c["rules_df"] for c in lines)
+    cfg = _json.load(open(root / "config.json"))
+    assert cfg["robots_file"] == str(bodies)
 
-    # resume without the flag: auto-reloaded from config, runs to done
+    # resume without the flag, from an older crawl's config.json: both
+    # relations auto-reloaded from the file, runs to done
+    cfg["politeness"].update(disallow=[], host_rates=[], robots_rules=[])
+    _json.dump(cfg, open(root / "config.json", "w"))
     assert cli_main(["resume-crawl", str(root), "--max-rounds", "30"]) == 0
     out = [_json.loads(l) for l in capsys.readouterr().out.splitlines() if l.startswith("{")]
-    assert out[-1]["done"] and out[-1].get("budgets_df")
+    assert out[-1]["done"] and all(c["budgets_df"] and c["rules_df"] for c in out)
+    seen = {r.url for r in SnapshotStore(spark, root).read_union("url_seen", out[-1]["round"]).collect()}
+    persons = {u.split("//")[1].split("/")[0] for u in seen if "/gepris/person/" in u}
+    assert persons == {"h01.gepris.example.org"}  # h00's are robots-disallowed
 
     # missing file -> clean JSON error, exit 2
     cfg = _json.load(open(root / "config.json"))

@@ -12,7 +12,11 @@ from pyspark.sql import functions as F
 
 from ba_gepris_crawler_spark.operators.canonicalize import canonical_url
 from ba_gepris_crawler_spark.operators.cookies import parse_set_cookie
-from ba_gepris_crawler_spark.operators.politeness import PolitenessConfig, parse_robots
+from ba_gepris_crawler_spark.operators.politeness import (
+    _MAX_RULE_LEN,
+    PolitenessConfig,
+    parse_robots_rules,
+)
 from ba_gepris_crawler_spark.plans.checkpoint import SnapshotStore
 from ba_gepris_crawler_spark.plans.round_loop import CrawlEngine, CrawlSettings
 from ba_gepris_crawler_spark.sources.synthetic_site import SiteConfig
@@ -95,16 +99,17 @@ def test_parse_set_cookie_roundtrip_property(name, value, path, http_only, secur
 @settings(max_examples=300, deadline=None)
 @given(st.text(max_size=400))
 def test_parse_robots_never_crashes_and_anchors(txt):
-    rules = parse_robots("h.example.org", txt)
-    for host, pattern in rules:
+    rules = parse_robots_rules("h.example.org", txt)
+    for host, pattern, spec, allow in rules:
         assert host == "h.example.org"
         assert pattern.startswith("^")  # always anchored
+        assert 0 < spec <= _MAX_RULE_LEN and isinstance(allow, bool)
 
 
 def test_parse_robots_agent_specific_group():
     txt = "User-agent: gepris-crawler\nDisallow: /mine/\nUser-agent: *\nDisallow: /all/\n"
-    mine = parse_robots("h", txt, user_agent="gepris-crawler")
-    other = parse_robots("h", txt, user_agent="somebot")
+    mine = parse_robots_rules("h", txt, user_agent="gepris-crawler")
+    other = parse_robots_rules("h", txt, user_agent="somebot")
     assert len(mine) == 2  # its own group AND the wildcard group
     assert len(other) == 1  # wildcard group only
 

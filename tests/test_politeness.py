@@ -7,7 +7,6 @@ partition by bare `host` (the single-task hot-host scale-killer)."""
 from __future__ import annotations
 
 import re
-from dataclasses import replace
 
 import pytest
 import zlib
@@ -16,12 +15,28 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ba_gepris_crawler_spark.operators.politeness import (
+    ROBOTS_RULES_SCHEMA,
     PolitenessConfig,
+    apply_robots_rules,
+    crawl_delay_budgets,
+    parse_robots_rules,
+    parse_robots_rules_distributed,
     salt_bucket,
     schedule_round,
 )
 
 N_BUCKETS = 8
+
+
+def _bodies(spark, bodies: dict[str, str]):
+    """{host: robots.txt} -> the (host, robots_txt) relation robots
+    bodies reach the scheduler as."""
+    return spark.createDataFrame(list(bodies.items()), "host string, robots_txt string")
+
+
+def _kept(frontier, bodies_df, **kw) -> set[str]:
+    rules = parse_robots_rules_distributed(bodies_df)
+    return {r.url for r in apply_robots_rules(frontier, rules, **kw).collect()}
 
 
 def _frontier(spark, n=500):
@@ -132,8 +147,6 @@ def test_two_level_rank_many_hosts(spark, many_hosts):
 
 
 def test_parse_robots_groups_wildcards_and_apply(spark):
-    from ba_gepris_crawler_spark.operators.politeness import apply_robots, parse_robots
-
     txt = """
     # comment
     User-agent: googlebot
@@ -148,9 +161,8 @@ def test_parse_robots_groups_wildcards_and_apply(spark):
     User-agent: otherbot
     Disallow: /other/
     """
-    rules = parse_robots("h1.example.org", txt)
+    rules = parse_robots_rules("h1.example.org", txt)
     assert len(rules) == 2  # wildcard group only; empty Disallow skipped
-    cfg = PolitenessConfig(disallow=rules)
     urls = [
         ("https://h1.example.org/private/x", "h1.example.org", False),
         ("https://h1.example.org/public/x", "h1.example.org", True),
@@ -159,7 +171,7 @@ def test_parse_robots_groups_wildcards_and_apply(spark):
         ("https://h2.example.org/private/x", "h2.example.org", True),  # other host
     ]
     df = spark.createDataFrame([(u, h) for u, h, _ in urls], "url string, host string")
-    kept = {r.url for r in apply_robots(df, cfg).collect()}
+    kept = _kept(df, _bodies(spark, {"h1.example.org": txt}))
     for u, _h, want in urls:
         assert (u in kept) == want, u
 
@@ -168,12 +180,6 @@ def test_robots_allow_longest_match_and_dollar_anchor(spark):
     """RFC-9309 evaluation: an Allow carves a hole in a Disallow prefix
     (longest match decides, Allow wins ties), '*.pdf$' blocks by suffix,
     and an unmatched URL is allowed (VERDICT r3 #5)."""
-    from ba_gepris_crawler_spark.operators.politeness import (
-        apply_robots,
-        parse_robots_rules,
-        politeness_from_robots,
-    )
-
     txt = (
         "User-agent: *\n"
         "Disallow: /private/\n"
@@ -184,10 +190,6 @@ def test_robots_allow_longest_match_and_dollar_anchor(spark):
     )
     rules = parse_robots_rules("h.example.org", txt)
     assert len(rules) == 5
-    cfg = politeness_from_robots(PolitenessConfig(), {"h.example.org": txt})
-    assert cfg.robots_rules == rules
-    # idempotent: folding the same robots again adds nothing
-    assert politeness_from_robots(cfg, {"h.example.org": txt}).robots_rules == rules
 
     urls = [
         ("https://h.example.org/private/x", False),        # Disallow prefix
@@ -201,17 +203,9 @@ def test_robots_allow_longest_match_and_dollar_anchor(spark):
     df = spark.createDataFrame(
         [(u, u.split("/")[2]) for u, _ in urls], "url string, host string"
     )
-    kept = {r.url for r in apply_robots(df, cfg).collect()}
+    kept = _kept(df, _bodies(spark, {"h.example.org": txt}))
     for u, want in urls:
         assert (u in kept) == want, u
-
-    # a cfg.disallow entry outranks every robots rule: covering the Allow
-    # hole drops the URL the longer Allow would otherwise keep
-    hole = "https://h.example.org/private/press/r1"
-    with_disallow = replace(cfg, disallow=(("h.example.org", "/private/"),))
-    kept = {r.url for r in apply_robots(df, with_disallow).collect()}
-    assert hole not in kept
-    assert kept == {u for u, want in urls if want and u != hole}
 
 
 def test_robots_broadcast_and_salted_joins_agree(spark):
@@ -219,11 +213,6 @@ def test_robots_broadcast_and_salted_joins_agree(spark):
     identically: the broadcast join (default) and the salted co-keyed join
     (many_hosts) — same frontier, same kept set. Exercises hole-carving
     Allows, $-anchors and unruled hosts across many ruled hosts."""
-    from ba_gepris_crawler_spark.operators.politeness import (
-        apply_robots,
-        parse_robots_rules,
-    )
-
     n_hosts = 72
     rules: list[tuple[str, str, int, bool]] = []
     rows: list[tuple[str, str, bool]] = []  # (url, host, want_kept)
@@ -246,13 +235,13 @@ def test_robots_broadcast_and_salted_joins_agree(spark):
             ]
         )
     rows.append(("https://unruled.org/private0/x", "unruled.org", True))
-    cfg = PolitenessConfig(robots_rules=tuple(rules))
+    rel = spark.createDataFrame(rules, ROBOTS_RULES_SCHEMA)
     df = spark.createDataFrame([(u, h) for u, h, _ in rows], "url string, host string")
 
     want = {u for u, _h, keep in rows if keep}
-    assert {r.url for r in apply_robots(df, cfg).collect()} == want
+    assert {r.url for r in apply_robots_rules(df, rel).collect()} == want
     # many_hosts -> salted co-keyed join; same decisions
-    got_salted = apply_robots(df, cfg, many_hosts=True, n_buckets=8)
+    got_salted = apply_robots_rules(df, rel, many_hosts=True, n_buckets=8)
     assert {r.url for r in got_salted.collect()} == want
     assert got_salted.columns == df.columns  # helper columns dropped
 
@@ -279,22 +268,17 @@ def test_crawl_delay_feeds_per_host_budget(spark):
     """Two hosts with different robots Crawl-delays must get different
     token-bucket cuts in the SAME schedule_round call; the third host keeps
     the default budget (VERDICT r2 #5)."""
-    from ba_gepris_crawler_spark.operators.politeness import politeness_from_robots
-
-    base = PolitenessConfig(per_host_rate=40, round_seconds=1.0, max_in_flight=7)
-    cfg = politeness_from_robots(
-        base,
-        {
-            "h0.example.org": "User-agent: *\nCrawl-delay: 0.5\n",   # rate 2 -> budget 2
-            "h1.example.org": "User-agent: *\nCrawl-delay: 0.125\n",  # rate 8 -> budget 8
-        },
-    )
-    assert cfg.budget_for("h0.example.org") == 2
-    assert cfg.budget_for("h1.example.org") == 8
-    assert cfg.budget_for("h2.example.org") == cfg.per_host_budget == 40
+    cfg = PolitenessConfig(per_host_rate=40, round_seconds=1.0, max_in_flight=7)
+    budgets = crawl_delay_budgets(_bodies(spark, {
+        "h0.example.org": "User-agent: *\nCrawl-delay: 0.5\n",   # rate 2 -> budget 2
+        "h1.example.org": "User-agent: *\nCrawl-delay: 0.125\n",  # rate 8 -> budget 8
+    }), cfg)
+    assert {(r.host, r.budget) for r in budgets.collect()} == {
+        ("h0.example.org", 2), ("h1.example.org", 8)}
+    assert cfg.per_host_budget == 40  # h2 has no robots row
 
     f = _frontier(spark)  # ~167 urls per host, exceeds every budget
-    fetch_now, deferred = schedule_round(f, cfg, n_buckets=N_BUCKETS)
+    fetch_now, deferred = schedule_round(f, cfg, n_buckets=N_BUCKETS, budgets_df=budgets)
     got = {r["host"]: r["n"] for r in fetch_now.groupBy("host").agg(F.count("*").alias("n")).collect()}
     assert got == {"h0.example.org": 2, "h1.example.org": 8, "h2.example.org": 40}
     # per-host max rank == budget, and deferred is the exact complement
@@ -308,7 +292,7 @@ def test_fetch_virtual_cost_prices_from_scheduled_host_rate(spark):
     budget cut used upstream: for an overridden host cost = max_slot /
     override_rate, for the rest max_slot / default_rate (VERDICT r2 #5 /
     review r3 coverage gap). The scheduler's `host_rate` column is the
-    only way the cfg overrides reach the cost model."""
+    only way the budgets relation's rates reach the cost model."""
     from ba_gepris_crawler_spark.operators.fetch import fetch_pages
     from ba_gepris_crawler_spark.operators.frontier import seed_frontier
     from ba_gepris_crawler_spark.sources.synthetic_site import SiteConfig
@@ -317,12 +301,11 @@ def test_fetch_virtual_cost_prices_from_scheduled_host_rate(spark):
         hosts=("h00.gepris.example.org", "h01.gepris.example.org"),
         n_projects=12, n_persons=5, n_institutions=2, hits_per_page=5, seed=7,
     )
-    pol = PolitenessConfig(
-        per_host_rate=100, round_seconds=1.0, max_in_flight=3,
-        host_rates=(("h00.gepris.example.org", 4.0),),
-    )
-    fetch_now, _ = schedule_round(seed_frontier(spark, cfg), pol, n_buckets=4)
-    fetched = fetch_pages(fetch_now, cfg, pol.per_host_rate, 4)
+    pol = PolitenessConfig(per_host_rate=100, round_seconds=1.0, max_in_flight=3)
+    budgets = crawl_delay_budgets(
+        _bodies(spark, {"h00.gepris.example.org": "User-agent: *\nCrawl-delay: 0.25\n"}), pol)
+    fetch_now, _ = schedule_round(seed_frontier(spark, cfg), pol, n_buckets=4, budgets_df=budgets)
+    fetched = fetch_pages(fetch_now, cfg, 4)
     assert "host_rate" not in fetched.columns  # pricing input, not output
     rows = fetched.select("host", "slot", "virtual_cost_sec").collect()
     assert rows, "seed frontier produced no fetches"
@@ -334,10 +317,8 @@ def test_fetch_virtual_cost_prices_from_scheduled_host_rate(spark):
         rate = 4.0 if r["host"] == "h00.gepris.example.org" else 100.0
         assert r["virtual_cost_sec"] == pytest.approx(max_slot[r["host"]] / rate), r
 
-    # config-level guard: a non-positive override must be rejected at
+    # config-level guard: a non-positive rate must be rejected at
     # construction, not surface as an inf virtual cost here
-    with pytest.raises(ValueError):
-        PolitenessConfig(host_rates=(("h00.gepris.example.org", 0.0),))
     with pytest.raises(ValueError):
         PolitenessConfig(per_host_rate=0)
 
@@ -367,7 +348,7 @@ def test_fetch_virtual_cost_global_across_buckets(spark):
     )
     fetch_now, _ = schedule_round(f, pol, n_buckets=8)
     assert fetch_now.select("host_bucket").distinct().count() > 1
-    fetched = fetch_pages(fetch_now, cfg, pol.per_host_rate, 8)
+    fetched = fetch_pages(fetch_now, cfg, 8)
     assert "host_max_slot" not in fetched.columns  # pricing input, not output
     rows = fetched.select("slot", "virtual_cost_sec").collect()
     assert len(rows) == 40
@@ -377,43 +358,21 @@ def test_fetch_virtual_cost_global_across_buckets(spark):
         assert r["virtual_cost_sec"] == pytest.approx(global_max_slot / 100.0), r
 
 
-def test_host_rates_dedup_first_wins():
-    """Duplicate host entries normalize to ONE entry per host (first wins),
-    so rate_for / budget_for and the scheduler's overrides relation can
-    never disagree about a host's rate; politeness_from_robots never overrides an explicit
-    entry and is idempotent across repeated calls (ADVICE r3)."""
-    from ba_gepris_crawler_spark.operators.politeness import politeness_from_robots
-
-    cfg = PolitenessConfig(
-        host_rates=(("a.org", 5.0), ("a.org", 9.0), ("b.org", 2.0))
-    )
-    assert cfg.host_rates == (("a.org", 5.0), ("b.org", 2.0))
-    assert cfg.rate_for("a.org") == 5.0
-    assert dict(cfg.host_rates)["a.org"] == 5.0
-
-    robots = {"a.org": "User-agent: *\nCrawl-delay: 10\n",
-              "c.org": "User-agent: *\nCrawl-delay: 4\n"}
-    once = politeness_from_robots(cfg, robots)
-    twice = politeness_from_robots(once, robots)
-    assert once.rate_for("a.org") == 5.0  # explicit override outranks robots
-    assert once.rate_for("c.org") == 0.25
-    assert twice.host_rates == once.host_rates  # idempotent, no duplicates
-
-
 def test_many_overrides_schedule_equals_few_overrides(spark):
-    """The overrides relation is joined by host, so overrides for hosts
-    absent from the frontier must not change the schedule: 72 overrides
-    give exactly the schedule of the 2 that match live hosts."""
+    """The budgets relation is joined by host, so rows for hosts absent
+    from the frontier must not change the schedule: 72 rows give exactly
+    the schedule of the 2 that match live hosts."""
     f = _frontier(spark)
     # the three live hosts get real budgets (h2 the default), the rest pad
-    # the override list with hosts the frontier does not have
-    rates = tuple(
-        [("h0.example.org", 2.0), ("h1.example.org", 8.0)]
-        + [(f"pad{i}.example.org", 1.0) for i in range(70)]
+    # the relation with hosts the frontier does not have
+    rows = (
+        [("h0.example.org", 2, 2.0), ("h1.example.org", 8, 8.0)]
+        + [(f"pad{i}.example.org", 1, 1.0) for i in range(70)]
     )
-    cfg = PolitenessConfig(per_host_rate=40, round_seconds=1.0,
-                           max_in_flight=7, host_rates=rates)
-    fetch_now, deferred = schedule_round(f, cfg, n_buckets=N_BUCKETS)
+    schema = "host string, budget int, rate double"
+    cfg = PolitenessConfig(per_host_rate=40, round_seconds=1.0, max_in_flight=7)
+    fetch_now, deferred = schedule_round(
+        f, cfg, n_buckets=N_BUCKETS, budgets_df=spark.createDataFrame(rows, schema))
     got = {r["host"]: r["n"] for r in
            fetch_now.groupBy("host").agg(F.count("*").alias("n")).collect()}
     assert got == {"h0.example.org": 2, "h1.example.org": 8, "h2.example.org": 40}
@@ -422,9 +381,8 @@ def test_many_overrides_schedule_equals_few_overrides(spark):
     assert "_budget" not in deferred.columns
 
     # identical schedule to the same effective rates without the padding
-    small = PolitenessConfig(per_host_rate=40, round_seconds=1.0, max_in_flight=7,
-                             host_rates=rates[:2])
-    fetch_small, _ = schedule_round(f, small, n_buckets=N_BUCKETS)
+    fetch_small, _ = schedule_round(
+        f, cfg, n_buckets=N_BUCKETS, budgets_df=spark.createDataFrame(rows[:2], schema))
     want = {(r["url"], r["host_rank"]) for r in fetch_small.select("url", "host_rank").collect()}
     have = {(r["url"], r["host_rank"]) for r in fetch_now.select("url", "host_rank").collect()}
     assert have == want
@@ -440,18 +398,10 @@ def test_empty_frontier(spark):
 
 def test_distributed_robots_pipeline_equals_driver_path(spark):
     """Web-scale robots transport: (host, robots_txt) rows parsed with
-    parse_robots_rules_distributed must yield exactly the driver parser's
-    rules, and apply_robots_rules over that relation must keep the same
-    URL set as apply_robots over the politeness_from_robots config —
-    bodies and rules never transiting the driver."""
-    from ba_gepris_crawler_spark.operators.politeness import (
-        apply_robots,
-        apply_robots_rules,
-        parse_robots_rules,
-        parse_robots_rules_distributed,
-        politeness_from_robots,
-    )
-
+    parse_robots_rules_distributed must yield exactly the rules of the
+    driver-side parser parse_robots_rules, and apply_robots_rules over
+    that relation must keep the expected URL set under both join
+    strategies — bodies and rules never transiting the driver."""
     bodies = {
         f"h{i}.example.org": (
             "User-agent: *\n"
@@ -462,9 +412,7 @@ def test_distributed_robots_pipeline_equals_driver_path(spark):
         for i in range(40)
     }
     bodies["empty.example.org"] = "# comments only\n"
-    robots = spark.createDataFrame(
-        list(bodies.items()), "host string, robots_txt string"
-    )
+    robots = _bodies(spark, bodies)
     got = {
         tuple(r) for r in parse_robots_rules_distributed(robots).collect()
     }
@@ -484,40 +432,23 @@ def test_distributed_robots_pipeline_equals_driver_path(spark):
         ]
     fr = spark.createDataFrame([(u, h) for u, h, _ in rows], "url string, host string")
     want_kept = {u for u, _h, keep in rows if keep}
-    kept_rel = {r.url for r in apply_robots_rules(fr, parse_robots_rules_distributed(robots)).collect()}
-    assert kept_rel == want_kept
-    cfg = politeness_from_robots(PolitenessConfig(), bodies)
-    kept_cfg = {r.url for r in apply_robots(fr, cfg).collect()}
-    assert kept_cfg == kept_rel
+    assert _kept(fr, robots) == want_kept
     # salted co-keyed variant too
-    kept_salted = {
-        r.url
-        for r in apply_robots_rules(
-            fr, parse_robots_rules_distributed(robots), many_hosts=True, n_buckets=8
-        ).collect()
-    }
-    assert kept_salted == want_kept
+    assert _kept(fr, robots, many_hosts=True, n_buckets=8) == want_kept
 
 
 def test_schedule_round_budgets_df_and_precedence(spark):
-    """crawl_delay_budgets -> schedule_round(budgets_df=...): the relation
-    form of robots Crawl-delay must cut per-host budgets exactly like the
-    cfg host_rates, and an explicit cfg.host_rates entry must outrank the
-    budgets_df row for the same host (politeness_from_robots precedence)."""
-    from ba_gepris_crawler_spark.operators.politeness import (
-        crawl_delay_budgets,
-        politeness_from_robots,
-        schedule_round,
-    )
-
+    """crawl_delay_budgets -> schedule_round(budgets_df=...): a host's
+    robots Crawl-delay row outranks the cfg default budget both ways —
+    below it (slow.org is cut to 20) and above it (fast.org's 100 leaves
+    its 80 URLs uncut) — and a host without a row keeps the default."""
     bodies = {
         "slow.org": "User-agent: *\nCrawl-delay: 0.5\n",   # budget 20 at rs=10
         "fast.org": "User-agent: *\nCrawl-delay: 0.1\n",   # budget 100 (uncut)
         "plain.org": "User-agent: *\nDisallow:\n",          # no delay -> default
     }
-    robots = spark.createDataFrame(list(bodies.items()), "host string, robots_txt string")
     cfg = PolitenessConfig(per_host_rate=5.0, round_seconds=10.0, max_in_flight=10)
-    budgets = crawl_delay_budgets(robots, cfg)
+    budgets = crawl_delay_budgets(_bodies(spark, bodies), cfg)
     assert {(r.host, r.budget) for r in budgets.collect()} == {("slow.org", 20), ("fast.org", 100)}
 
     rows = [
@@ -532,21 +463,6 @@ def test_schedule_round_budgets_df_and_precedence(spark):
     assert by_host == {"slow.org": 20, "fast.org": 80, "plain.org": 50}
     assert deferred.count() == 80 * 3 - (20 + 80 + 50)
 
-    # identical decisions to the driver-side cfg path on the same bodies
-    cfg_folded = politeness_from_robots(cfg, bodies)
-    now_cfg, _ = schedule_round(fr, cfg_folded, n_buckets=4)
-    assert sorted((r.url, r.host_rank) for r in now_cfg.select("url", "host_rank").collect()) == \
-        sorted((r.url, r.host_rank) for r in now.select("url", "host_rank").collect())
-
-    # explicit cfg override outranks the budgets_df row for the same host
-    cfg_override = PolitenessConfig(
-        per_host_rate=5.0, round_seconds=10.0, max_in_flight=10,
-        host_rates=(("slow.org", 1.0),),  # budget 10, not the df's 20
-    )
-    now_ov, _ = schedule_round(fr, cfg_override, n_buckets=4, budgets_df=budgets)
-    by_host_ov = {r.host: r.n for r in now_ov.groupBy("host").agg(F.count("*").alias("n")).collect()}
-    assert by_host_ov == {"slow.org": 10, "fast.org": 80, "plain.org": 50}
-
 
 def test_budgets_df_duplicate_hosts_do_not_multiply_rows(spark):
     """Review r4: budgets_df is one row per input robots row, so a bodies
@@ -554,8 +470,6 @@ def test_budgets_df_duplicate_hosts_do_not_multiply_rows(spark):
     The join must dedup by host (most-conservative wins) — un-deduped,
     each duplicate would MULTIPLY that host's frontier rows through the
     offsets join (duplicate fetches downstream)."""
-    from ba_gepris_crawler_spark.operators.politeness import schedule_round
-
     cfg = PolitenessConfig(per_host_rate=10.0, round_seconds=60.0, max_in_flight=10)
     fr = spark.createDataFrame(
         [(f"https://dup.org/p/{i}", "dup.org", 0, 1) for i in range(10)]
@@ -583,11 +497,7 @@ def test_crawl_delay_budgets_hostile_values_clamp_not_crash(spark):
     'Crawl-delay: 1e-9' -> int32-clamped budget (not an Arrow overflow
     error); 'nan'/'inf' -> ignored like malformed (nan even passes a
     `delay <= 0` guard). Applies to the driver parser too."""
-    from ba_gepris_crawler_spark.operators.politeness import (
-        _INT32_MAX,
-        crawl_delay_budgets,
-        parse_crawl_delay,
-    )
+    from ba_gepris_crawler_spark.operators.politeness import _INT32_MAX, parse_crawl_delay
 
     assert parse_crawl_delay("User-agent: *\nCrawl-delay: nan\n") is None
     assert parse_crawl_delay("User-agent: *\nCrawl-delay: inf\n") is None
@@ -605,22 +515,14 @@ def test_crawl_delay_budgets_hostile_values_clamp_not_crash(spark):
     assert rows["h-tiny.org"][0] == _INT32_MAX
     assert rows["h-norm.org"] == (120, 2.0)
     assert set(rows) == {"h-tiny.org", "h-norm.org"}
-    # the driver-side config path survives the same hostile rate
-    hostile = PolitenessConfig(host_rates=(("h.org", 1e12),), round_seconds=60.0)
-    assert hostile.budget_for("h.org") == _INT32_MAX
 
 
 def test_budgets_df_feeds_fetch_virtual_cost(spark):
-    """Review r4: the budgets relation must replace BOTH host_rates
-    consumers — the scheduler's budget cut AND fetch_pages' virtual-cost
-    pricing. fetch_now carries the resolved `host_rate`, and fetch_pages
-    prices identically to the cfg host_rates path on the same delays."""
+    """Review r4: the budgets relation must feed BOTH consumers of a
+    per-host rate — the scheduler's budget cut AND fetch_pages'
+    virtual-cost pricing. fetch_now carries the resolved `host_rate`, and
+    every row of a host costs its last wave over that rate."""
     from ba_gepris_crawler_spark.operators.fetch import fetch_pages
-    from ba_gepris_crawler_spark.operators.politeness import (
-        crawl_delay_budgets,
-        politeness_from_robots,
-        schedule_round,
-    )
     from ba_gepris_crawler_spark.sources.synthetic_site import SiteConfig
 
     bodies = {"slow.example.org": "User-agent: *\nCrawl-delay: 0.5\n"}
@@ -632,34 +534,28 @@ def test_budgets_df_feeds_fetch_virtual_cost(spark):
         "url string, host string, crawl_depth int, priority int, "
         "resource_type string, resource_id string",
     )
-    robots = spark.createDataFrame(list(bodies.items()), "host string, robots_txt string")
     now_rel, _ = schedule_round(fr, cfg, n_buckets=4,
-                                budgets_df=crawl_delay_budgets(robots, cfg))
+                                budgets_df=crawl_delay_budgets(_bodies(spark, bodies), cfg))
     assert "host_rate" in now_rel.columns
     cost_rel = {
         (r.host, r.slot): r.virtual_cost_sec
-        for r in fetch_pages(now_rel, site, cfg.per_host_rate, n_buckets=4)
+        for r in fetch_pages(now_rel, site, n_buckets=4)
         .select("host", "slot", "virtual_cost_sec").distinct().collect()
     }
-    cfg_folded = politeness_from_robots(cfg, bodies)
-    now_cfg, _ = schedule_round(fr, cfg_folded, n_buckets=4)
-    cost_cfg = {
-        (r.host, r.slot): r.virtual_cost_sec
-        for r in fetch_pages(now_cfg, site, cfg.per_host_rate, n_buckets=4)
-        .select("host", "slot", "virtual_cost_sec").distinct().collect()
+    # 12 URLs per host fit both budgets (slow 2/s x 10 s = 20, fast the
+    # default 50) in 2 waves of 10: cost = 2 waves / the host's rate
+    assert cost_rel == {
+        ("slow.example.org", 1): 2 / 2.0, ("slow.example.org", 2): 2 / 2.0,
+        ("fast.example.org", 1): 2 / 5.0, ("fast.example.org", 2): 2 / 5.0,
     }
-    assert cost_rel == cost_cfg
-    assert any(h == "slow.example.org" for h, _s in cost_rel)
 
 
 def test_budgets_df_boundary_clamps_zero_negative_huge(spark):
     """Review r4b: schedule_round accepts ARBITRARY relations, so the
-    cfg-path invariant budget in [1, INT32_MAX] must be restored at the
+    invariant budget in [1, INT32_MAX] must be restored at the
     boundary — a zero/negative budget row must not starve its host
     forever, and a long value must not wrap negative through cast('int').
     Non-positive rates fall back to the default rate."""
-    from ba_gepris_crawler_spark.operators.politeness import schedule_round
-
     cfg = PolitenessConfig(per_host_rate=10.0, round_seconds=60.0, max_in_flight=10)
     fr = spark.createDataFrame(
         [(f"https://{h}/p/{i}", h, 0, 1) for h in ("z.org", "neg.org", "huge.org")
@@ -687,8 +583,6 @@ def test_budgets_df_null_budget_falls_back_to_default(spark):
     an unlimited grant. A null budget must instead fall through to the cfg
     default budget; a host with one null and one real row takes the real
     (most-conservative) one."""
-    from ba_gepris_crawler_spark.operators.politeness import schedule_round
-
     # default budget = ceil(2.0 * 1.0) = 2 pages/round
     cfg = PolitenessConfig(per_host_rate=2.0, round_seconds=1.0, max_in_flight=10)
     fr = spark.createDataFrame(
@@ -716,17 +610,15 @@ def test_config_rejects_nan_rates():
     """Review r4b: NaN passes a bare `<= 0` guard; the config validator
     must reject it explicitly (int(nan) would raise deep in plan build)."""
     with pytest.raises(ValueError):
-        PolitenessConfig(host_rates=(("h.org", float("nan")),))
-    with pytest.raises(ValueError):
         PolitenessConfig(per_host_rate=float("nan"))
+    with pytest.raises(ValueError):
+        PolitenessConfig(round_seconds=float("nan"))
 
 
 def test_budgets_df_join_adds_no_bare_host_data_exchange(spark):
     """The budgets relation must ride the metadata-sized offsets join:
     joining it may exchange METADATA rows by host, but no Exchange that
     carries frontier DATA rows (url column) may partition by bare host."""
-    from ba_gepris_crawler_spark.operators.politeness import schedule_round
-
     f = _frontier(spark)
     cfg = PolitenessConfig(per_host_rate=40, round_seconds=1.0)
     budgets = spark.createDataFrame(
@@ -747,6 +639,31 @@ def test_budgets_df_join_adds_no_bare_host_data_exchange(spark):
             assert "url#" not in inp, f"bare-host Exchange carries data rows: {blk}"
 
 
+def _joins_and_exchanges(df) -> tuple[int, int]:
+    """(join operators, exchange operators) in df's physical plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    ops = [re.sub(r"^[\s:+\-|]*", "", ln).split(" ")[0] for ln in plan.splitlines()]
+    return sum(o.endswith("Join") for o in ops), sum(o.endswith("Exchange") for o in ops)
+
+
+def test_schedule_plan_shape_is_pinned(spark):
+    """fetch_now's physical plan at the default config has ONE join (the
+    broadcast offsets join) and four exchanges: the salted rank shuffle,
+    the two metadata shuffles of the offsets counts and the offsets
+    broadcast. One budgets_df row adds one join (the overrides broadcast
+    onto the offsets frame) and two exchanges (that broadcast and the
+    per-host dedupe shuffle). A change that grows the schedule plan
+    fails here."""
+    f = _frontier(spark)
+    cfg = PolitenessConfig(per_host_rate=40, round_seconds=1.0)
+    fetch_now, _ = schedule_round(f, cfg, n_buckets=N_BUCKETS)
+    assert _joins_and_exchanges(fetch_now) == (1, 4)
+    budgets = spark.createDataFrame(
+        [("h0.example.org", 5, 1.0)], "host string, budget int, rate double")
+    fetch_now, _ = schedule_round(f, cfg, n_buckets=N_BUCKETS, budgets_df=budgets)
+    assert _joins_and_exchanges(fetch_now) == (2, 6)
+
+
 def test_hostile_robots_caps_star_runs_rule_len_body_size(spark):
     """Web-scale hostile-input caps: consecutive '*'s collapse to one
     (identical decisions, bounded regex backtracking), rules longer than
@@ -755,25 +672,18 @@ def test_hostile_robots_caps_star_runs_rule_len_body_size(spark):
     onto executors or unbounded parse work anywhere."""
     import time
 
-    from ba_gepris_crawler_spark.operators.politeness import (
-        _MAX_ROBOTS_BODY,
-        _MAX_RULE_LEN,
-        apply_robots,
-        parse_robots_rules,
-        politeness_from_robots,
-    )
+    from ba_gepris_crawler_spark.operators.politeness import _MAX_ROBOTS_BODY, _MAX_RULE_LEN
 
     # star-run collapse: same decisions as the single-star form
     star_bomb = "User-agent: *\nDisallow: /a" + "*" * 500 + "b\n"
     rules = parse_robots_rules("h.org", star_bomb)
     assert len(rules) == 1 and rules[0][1].count(".*") == 1
-    cfg = politeness_from_robots(PolitenessConfig(), {"h.org": star_bomb})
     fr = spark.createDataFrame(
         [("https://h.org/a/x/b", "h.org"), ("https://h.org/c", "h.org"),
          ("https://h.org/a" + "x/" * 2000 + "nope", "h.org")],
         "url string, host string")
     t0 = time.time()
-    kept = {r.url for r in apply_robots(fr, cfg).collect()}
+    kept = _kept(fr, _bodies(spark, {"h.org": star_bomb}))
     assert time.time() - t0 < 30  # bounded work even on long URLs
     assert kept == {"https://h.org/c", "https://h.org/a" + "x/" * 2000 + "nope"}
 
@@ -817,8 +727,6 @@ def test_budgets_df_string_garbage_and_nan_rate_fall_back(spark):
     and a NaN rate, which Spark orders greater than every number, so
     `NaN > 0` is true and least(NaN, INT32_MAX) silently granted the
     fastest possible rate instead of the documented default fallback."""
-    from ba_gepris_crawler_spark.operators.politeness import schedule_round
-
     # default budget = ceil(2.0 * 1.0) = 2 pages/round, default rate 2.0
     cfg = PolitenessConfig(per_host_rate=2.0, round_seconds=1.0, max_in_flight=10)
     fr = spark.createDataFrame(

@@ -151,14 +151,14 @@ def test_fetch_plan_has_validator_join_only_when_staged(spark, cfg):
     from ba_gepris_crawler_spark.operators.fetch import fetch_pages
 
     sched = spark.createDataFrame(
-        [("https://u", "h", None, None, 0, 1, 0, 0, 0, 0.0)],
+        [("https://u", "h", None, None, 0, 1, 0, 0, 0, 0.0, 1, 10.0)],
         "url string, host string, resource_type string, resource_id string, "
         "crawl_depth int, priority int, discovered_round int, host_bucket int, "
-        "host_rank long, slot double",
+        "host_rank long, slot double, host_max_slot int, host_rate double",
     )
-    plain = _plan(fetch_pages(sched, cfg, per_host_rate=10.0, n_buckets=2))
+    plain = _plan(fetch_pages(sched, cfg, n_buckets=2))
     vals = spark.createDataFrame([("https://u", "e")], "url string, etag string")
-    cond = _plan(fetch_pages(sched, cfg, per_host_rate=10.0, n_buckets=2, validators=vals))
+    cond = _plan(fetch_pages(sched, cfg, n_buckets=2, validators=vals))
     # the conditional path pays its join; the default path must not
     assert plain.count("Join") == 0
     assert cond.count("Join") >= 1
